@@ -38,7 +38,14 @@ def bootstrap(
     catalog_sources: bool = True,
     vars: dict[str, object] | None = None,
 ) -> Engine:
-    """Prepare a session: engine confs, source registration, model registry."""
+    """Prepare a session: engine confs, source registration, model registry.
+
+    Sources are registered as temp views and, with ``catalog_sources``,
+    as ``src.*`` external tables. Both share one schema inference per
+    source, cached on the session (see :mod:`.sources.registry`): the
+    first call in a session runs one Spark job per source file, all
+    concurrently, and a repeat call runs none unless a file changed.
+    """
     apply_engine_confs(spark)
     register_sources(spark, sf_dir)
     if catalog_sources:

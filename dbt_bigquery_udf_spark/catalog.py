@@ -31,7 +31,6 @@ __all__ = [
     "ensure_database",
     "relation_exists",
     "check_name_conflict",
-    "use_database",
     "catalog_lock",
 ]
 
@@ -90,8 +89,15 @@ def target_context(env: str | None = None) -> dict:
     }
 
 
-def ensure_database(spark: SparkSession, database: str) -> None:
+def ensure_database(spark: SparkSession, database: str) -> bool:
+    """``CREATE DATABASE IF NOT EXISTS`` behind a cheap existence probe:
+    ``databaseExists`` is a direct catalog call (~4ms) where the SQL
+    command pays a full parse and plan. Returns True if it created the
+    database."""
+    if spark.catalog.databaseExists(database):
+        return False
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
+    return True
 
 
 def relation_exists(spark: SparkSession, database: str, name: str) -> str | None:
@@ -111,7 +117,3 @@ def check_name_conflict(spark: SparkSession, database: str, name: str) -> None:
             "BigQuery datasets have one namespace for tables and routines, "
             "so the engine refuses to create over it (pass replace=True to rebuild)"
         )
-
-
-def use_database(spark: SparkSession, database: str) -> None:
-    spark.sql(f"USE {database}")

@@ -951,17 +951,6 @@ class Engine:
                 spec, self.spark.sql(f"SELECT * FROM ({body}) LIMIT 0").schema
             )
 
-    def _infer_tvf_schema(self, spec: ModelSpec, body: str) -> str:
-        """BigQuery infers a TVF's output schema from its body
-        (reference: get_create_table_function_as_sql.sql:11 emits no
-        RETURNS); Spark requires an explicit ``RETURNS TABLE (...)``, so
-        analyze the body once with parameters bound to typed NULLs."""
-        probe = body
-        for name, stype in translate_param_list(list(spec.params)):
-            probe = re.sub(rf"\b{re.escape(name)}\b", f"CAST(NULL AS {stype})", probe)
-        schema = self.spark.sql(f"SELECT * FROM ({probe}) LIMIT 0").schema
-        return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
-
     def _materialize(self, spec: ModelSpec, replace: bool) -> BuiltRelation:
         db = self.database_for(spec)
         if spec.kind == "ephemeral":
@@ -993,18 +982,21 @@ class Engine:
                 )
                 self.spark.sql(ddl)
             elif spec.kind == "table_function":
+                # BigQuery infers a TVF's output schema from its body
+                # (reference: get_create_table_function_as_sql.sql:11
+                # emits no RETURNS); so does Spark for a bare ``RETURNS
+                # TABLE``, and it stores the inferred return type.
                 prev_db = self.spark.catalog.currentDatabase()
-                self.spark.sql(f"USE {db}")
+                self.spark.catalog.setCurrentDatabase(db)
                 try:
-                    cols = self._infer_tvf_schema(spec, body)
                     params = self._spark_params(spec)
                     ddl = (
                         f"CREATE OR REPLACE FUNCTION {db}.{spec.relation_name}({params}) "
-                        f"RETURNS TABLE ({cols}){self._comment_clause(spec)} RETURN {body}"
+                        f"RETURNS TABLE{self._comment_clause(spec)} RETURN {body}"
                     )
                     self.spark.sql(ddl)
                 finally:
-                    self.spark.sql(f"USE {prev_db}")
+                    self.spark.catalog.setCurrentDatabase(prev_db)
             elif spec.kind == "incremental":
                 # dbt incremental materialization. First run = CTAS (the
                 # is_incremental() blocks were stripped by render);
@@ -1209,7 +1201,7 @@ class Engine:
                 call_db = self._tvf_call_database(spec)
                 prev_db = self.spark.catalog.currentDatabase()
                 if call_db:
-                    self.spark.sql(f"USE {call_db}")
+                    self.spark.catalog.setCurrentDatabase(call_db)
                 try:
                     self._check_contract_sql(spec, body)
                     if spec.kind == "table":
@@ -1230,7 +1222,7 @@ class Engine:
                         )
                 finally:
                     if call_db:
-                        self.spark.sql(f"USE {prev_db}")
+                        self.spark.catalog.setCurrentDatabase(prev_db)
                 self._persist_docs(spec, db)  # F15 persist_docs
             for hook in spec.post_hooks:  # F6
                 self.spark.sql(hook)

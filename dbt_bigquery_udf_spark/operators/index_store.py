@@ -40,7 +40,6 @@ builds fresh; stale databases are swept by ``bench.py
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
 import shutil
@@ -49,7 +48,8 @@ from typing import Callable, Iterable, Mapping, Sequence
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import catalog_lock
+from ..catalog import catalog_lock, ensure_database
+from ..sources.registry import corpus_fingerprint
 
 __all__ = [
     "corpus_fingerprint",
@@ -68,35 +68,6 @@ __all__ = [
 STAGE_COMPLETE_MARKER = "_STAGE_COMPLETE"
 SNAP_COMPLETE_MARKER = "_SNAP_COMPLETE"
 _SNAP_DIR = "_pristine"
-
-
-def corpus_fingerprint(sf_dir: str, files: Sequence[str]) -> str:
-    """Hex fingerprint of a corpus' identity: its absolute path plus
-    (relative name, size, mtime_ns) of every parquet data file of the
-    named tables. Two directories with the same leaf name but different
-    paths — or the same path regenerated with new data — fingerprint
-    differently, so an index can only ever be adopted by the corpus it
-    was built from. O(#files) stat calls, no data reads."""
-    h = hashlib.md5(os.path.abspath(sf_dir).encode())
-    for name in files:
-        p = os.path.join(sf_dir, name)
-        data: list[str] = []
-        if os.path.isdir(p):
-            for root, _, fs in os.walk(p):
-                data += [
-                    os.path.join(root, f)
-                    for f in fs
-                    if f.endswith(".parquet")
-                ]
-        elif os.path.exists(p):
-            data = [p]
-        for q in sorted(data):
-            st = os.stat(q)
-            h.update(
-                f"{os.path.relpath(q, sf_dir)}:{st.st_size}:"
-                f"{st.st_mtime_ns}".encode()
-            )
-    return h.hexdigest()[:10]
 
 
 def index_db_name(prefix: str, sf_dir: str, files: Sequence[str]) -> str:
@@ -132,12 +103,10 @@ def scratch_dir(
 
 
 def _ensure_db(spark: SparkSession, db: str) -> None:
-    """``CREATE DATABASE IF NOT EXISTS`` behind a cheap existence probe:
-    ``databaseExists`` is a direct catalog call (~4ms) where the SQL
-    command pays full parse/plan (~40ms) — and this runs on every
-    clear/ensure/recover, several times per lifecycle query."""
-    if not spark.catalog.databaseExists(db):
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    """:func:`ensure_database` (runs on every clear/ensure/recover,
+    several times per lifecycle query), forgetting any cached location
+    of a database it had to create."""
+    if ensure_database(spark, db):
         _DB_LOCATION_CACHE.pop((_warehouse(spark), db), None)
 
 
@@ -236,6 +205,14 @@ def staged_overwrite(spark: SparkSession, db: str, table: str, df) -> None:
         _commit_stage(spark, db, table)
 
 
+def _register_external(spark: SparkSession, table: str, schema, location: str) -> None:
+    """Catalog an EXTERNAL parquet ``table`` over ``location`` with an
+    explicit schema: no inference job, and a directory with zero
+    part-files still registers (as an empty table)."""
+    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
+    spark.sql(f"CREATE TABLE {table} ({cols}) USING parquet LOCATION '{location}'")
+
+
 def _commit_stage(spark: SparkSession, db: str, table: str) -> None:
     """Commit a COMPLETE stage into the live slot without rewriting its
     bytes: clear the live table, atomically ``os.rename`` the staged
@@ -274,13 +251,7 @@ def _commit_stage(spark: SparkSession, db: str, table: str) -> None:
         path = loc.removeprefix("file:")
         clear_tables(spark, db, (table,))
         os.rename(os.path.join(path, staged), os.path.join(path, table))
-        cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE {db}.{table} ({cols}) USING parquet "
-            f"LOCATION '{loc}/{table}'"
-        )
+        _register_external(spark, f"{db}.{table}", schema, f"{loc}/{table}")
         spark.catalog.refreshTable(f"{db}.{table}")
         # entry only: the managed stage's directory was renamed away, so
         # the drop's file cleanup is a no-op
@@ -338,14 +309,11 @@ def recover_staged(
                 # drop the entry
                 if os.path.isdir(tdir):
                     if not spark.catalog.tableExists(f"{db}.{t}"):
-                        schema = spark.table(f"{db}.{staged}").schema
-                        cols = ", ".join(
-                            f"`{f.name}` {f.dataType.simpleString()}"
-                            for f in schema.fields
-                        )
-                        spark.sql(
-                            f"CREATE TABLE {db}.{t} ({cols}) USING "
-                            f"parquet LOCATION '{loc}/{t}'"
+                        _register_external(
+                            spark,
+                            f"{db}.{t}",
+                            spark.table(f"{db}.{staged}").schema,
+                            f"{loc}/{t}",
                         )
                     spark.catalog.refreshTable(f"{db}.{t}")
                     spark.sql(f"DROP TABLE IF EXISTS {db}.{staged}")
@@ -442,7 +410,8 @@ def snapshot_tables(
         tdir = os.path.join(path, t)
         sdir = os.path.join(snap, t)
         os.makedirs(sdir, exist_ok=True)
-        for f in os.listdir(tdir):
+        # a table with no data files may have no directory at all
+        for f in os.listdir(tdir) if os.path.isdir(tdir) else ():
             if f.endswith(".parquet"):
                 try:
                     os.link(os.path.join(tdir, f), os.path.join(sdir, f))
@@ -470,13 +439,21 @@ def restore_snapshot(
     leaves an unmarked partial stage that recovery clears; a crash
     after the marker is finished by :func:`recover_staged`). Returns
     False (caller falls back to depollute/rebuild) when no complete
-    snapshot exists."""
+    snapshot exists, or a live table is missing.
+
+    The stage is registered with the live table's catalog schema, as
+    :func:`_commit_stage` registers the live slot, so a table whose
+    snapshot holds zero part-files restores as an empty table instead
+    of failing schema inference."""
     snap = _snap_root(spark, db)
     if not os.path.isfile(os.path.join(snap, SNAP_COMPLETE_MARKER)):
         return False
     path = db_location(spark, db).removeprefix("file:")
     with catalog_lock:
+        if not all(spark.catalog.tableExists(f"{db}.{t}") for t in tables):
+            return False
         for t in tables:
+            schema = spark.table(f"{db}.{t}").schema  # catalog-only read
             staged = f"{t}__staged"
             clear_tables(spark, db, (staged,))
             sdir = os.path.join(path, staged)
@@ -496,10 +473,7 @@ def restore_snapshot(
             ) as fh:
                 fh.write("complete")
             loc = db_location(spark, db)
-            spark.sql(
-                f"CREATE TABLE {db}.{staged} USING parquet "
-                f"LOCATION '{loc}/{staged}'"
-            )
+            _register_external(spark, f"{db}.{staged}", schema, f"{loc}/{staged}")
             _commit_stage(spark, db, t)
     return True
 

@@ -904,8 +904,8 @@ def test_cli_show(spark, sf_small, capsys):
 
 def test_multi_param_tvf(spark, sf_small):
     """F2/F4 beyond the reference's single-param TVF: two typed
-    parameters (STRING + INT64), schema inferred by binding both to
-    typed NULLs, invoked with two literals from a downstream table."""
+    parameters (STRING + INT64), schema inferred by Spark from the body,
+    invoked with two literals from a downstream table."""
     engine = bootstrap(spark, sf_small)
     engine.register(
         ModelSpec(
@@ -935,6 +935,45 @@ def test_multi_param_tvf(spark, sf_small):
     ).collect()[0][0]
     assert got.count() == expected
     assert dict(got.dtypes) == {"event_id": "bigint", "value": "double"}
+
+
+def test_tvf_param_named_like_a_column_or_literal(spark, sf_small):
+    """A TVF parameter spelled like a qualified column (``e.user_id``)
+    or a string literal (``'user_id'``) in the body: Spark infers the
+    return schema from the body as written, so neither is rewritten."""
+    engine = bootstrap(spark, sf_small)
+    engine.register(
+        ModelSpec(
+            name="events_of_user",
+            kind="table_function",
+            database="udf",
+            dialect="spark",
+            params=("user_id INT64",),
+            sql="""
+                SELECT e.event_id, e.user_id, 'user_id' AS label
+                FROM {{ source('joshua_dataset', 'events') }} e
+                WHERE e.user_id = events_of_user.user_id
+            """,
+        ),
+        ModelSpec(
+            name="events_of_user_7",
+            kind="table",
+            database="datamart",
+            dialect="spark",
+            sql="SELECT * FROM {{ ref('events_of_user') }}(7)",
+        ),
+    )
+    engine.build(select=["events_of_user_7"])
+    got = spark.table("datamart.events_of_user_7")
+    assert dict(got.dtypes) == {
+        "event_id": "bigint",
+        "user_id": "bigint",
+        "label": "string",
+    }
+    expected = spark.sql("SELECT count(*) FROM src.events WHERE user_id = 7").first()[0]
+    assert expected > 0
+    assert got.count() == expected
+    assert {(r.user_id, r.label) for r in got.collect()} == {(7, "user_id")}
 
 
 def test_run_results_artifact(spark, sf_small, tmp_path):

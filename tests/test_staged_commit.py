@@ -179,3 +179,27 @@ def test_partial_snapshot_not_restored(spark, db):
     snapshot_tables(spark, db, ("live",))
     assert restore_snapshot(spark, db, ("live",))
     assert _ids(spark, db) == [0, 1, 2]
+
+
+def test_snapshot_restore_of_empty_table(spark, db):
+    """A table with zero part-files snapshots and restores as an empty
+    table with its schema (the stage is registered with the live
+    table's catalog schema, not by inference over no files), and a
+    table whose directory is gone snapshots as empty."""
+    _mk_live(spark, db, range(3))
+    path = db_location(spark, db).removeprefix("file:")
+    spark.sql(f"TRUNCATE TABLE {db}.live")
+    assert not any(
+        f.endswith(".parquet") for f in os.listdir(os.path.join(path, "live"))
+    )
+    snapshot_tables(spark, db, ("live",))
+    _mk_live(spark, db, range(5))
+    assert restore_snapshot(spark, db, ("live",))
+    assert _ids(spark, db) == []
+    assert spark.table(f"{db}.live").dtypes == [("id", "int")]
+
+    drop_snapshot(spark, db)
+    shutil.rmtree(os.path.join(path, "live"))
+    snapshot_tables(spark, db, ("live",))
+    assert restore_snapshot(spark, db, ("live",))
+    assert _ids(spark, db) == []
