@@ -205,51 +205,25 @@ _INDEX_DB_PREFIXES = ("dedup_near_idx_", "dedup_exact_idx_", "sim_ivf_idx_")
 
 
 def _fresh_indexes(spark) -> None:
-    """Drop the bench corpus' persisted-index databases (catalog AND
-    files), then sweep orphaned index dirs whose corpus-fingerprint name
-    no longer resolves (corpus regenerated -> new db name) so stale
-    artifacts don't accumulate in the warehouse."""
+    """Drop every persisted-index database (catalog AND files): each
+    name under ``_INDEX_DB_PREFIXES`` that the catalog lists or that
+    only a warehouse directory still holds — the bench corpus' indexes
+    and those of corpora since regenerated (new fingerprint, new name),
+    so stale artifacts don't accumulate in the warehouse."""
     import shutil
 
-    from dbt_bigquery_udf_spark.operators import dedup as D
-    from dbt_bigquery_udf_spark.operators import similarity as S
-
-    near, ivf = D._near_index_db(SF_DIR), S._ivf_index_db(SF_DIR)
-    dbs = [
-        near,
-        near + "_sbase",
-        near + "_sdelta",
-        near + "_fg",
-        D._exact_index_db(SF_DIR),
-        D._exact_index_db(SF_DIR) + "_sbase",
-        D._exact_index_db(SF_DIR) + "_sdelta",
-        D._exact_index_db(SF_DIR) + "_fg",
-        ivf,
-        ivf + "_up",
-        ivf + "_fg",
-        ivf + "_svb",
-        ivf + "_svd",
-    ]
     from dbt_bigquery_udf_spark.operators.index_store import (
         invalidate_db_location,
     )
 
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for db in dbs:
+    dbs = {d.name for d in spark.catalog.listDatabases()}
+    if os.path.isdir(wh):
+        dbs |= {d.removesuffix(".db") for d in os.listdir(wh) if d.endswith(".db")}
+    for db in sorted(d for d in dbs if d.startswith(_INDEX_DB_PREFIXES)):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         invalidate_db_location(db)
         shutil.rmtree(os.path.join(wh, db + ".db"), ignore_errors=True)
-    if os.path.isdir(wh):
-        for d in os.listdir(wh):
-            name = d.removesuffix(".db")
-            if (
-                d.endswith(".db")
-                and name.startswith(_INDEX_DB_PREFIXES)
-                and name not in dbs
-            ):
-                spark.sql(f"DROP DATABASE IF EXISTS {name} CASCADE")
-                invalidate_db_location(name)
-                shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
 
 
 def _reset_epoch_dbs(spark) -> None:

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import register
-from .util import local_empty_df, local_rows_df
+from .util import local_rows_df
 from ..sources.registry import register_sources
 from .util import ensure_min_partitions
 
@@ -1199,42 +1199,6 @@ def _near_index_has_batch(spark: SparkSession, db: str, mod: int) -> bool:
     )
 
 
-def _index_relations(spark: SparkSession, dbs) -> tuple[DataFrame, DataFrame]:
-    """(bands, sigs) of an index that may be LAYERED across databases —
-    an immutable base plus per-run delta overlays (the production
-    shape: the 100 TB base index is never rewritten; admissions land in
-    a delta the scorer unions in). All reads storage-backed.
-
-    Erasure overlay: a layer carrying a ``tombstones`` table (written
-    by :func:`forget_near_dup_docs`) subtracts those doc_ids from EVERY
-    layer's rows at read time — the Iceberg-delete-file shape: forgets
-    are O(|forgotten|) appends, the base is never rewritten on the
-    erasure path, and :func:`compact_near_dup_index` folds tombstones
-    into the base during the normal maintenance window. Indexes that
-    never forget carry no tombstones table and skip the anti-join
-    entirely."""
-    if isinstance(dbs, str):
-        dbs = (dbs,)
-    bands = spark.table(f"{dbs[0]}.bands")
-    sigs = spark.table(f"{dbs[0]}.sigs")
-    for db in dbs[1:]:
-        bands = bands.unionByName(spark.table(f"{db}.bands"))
-        sigs = sigs.unionByName(spark.table(f"{db}.sigs"))
-    tombs = None
-    for db in dbs:
-        if spark.catalog.tableExists(f"{db}.tombstones"):
-            t = spark.table(f"{db}.tombstones").select("doc_id")
-            tombs = t if tombs is None else tombs.unionByName(t)
-    if tombs is not None:
-        # distinct() once and share the single broadcast relation across
-        # both anti-joins — the erasure set is tiny by contract, but two
-        # separate broadcast builds per scorer read is still waste.
-        dead = F.broadcast(tombs.distinct())
-        bands = bands.join(dead, "doc_id", "left_anti")
-        sigs = sigs.join(dead, "doc_id", "left_anti")
-    return bands, sigs
-
-
 def _score_batch_vs_index(
     spark: SparkSession,
     db,
@@ -1264,7 +1228,10 @@ def _score_batch_vs_index(
     Measured ~0.2s per admission at sf0.1 (one fewer sort per score);
     verified row-identical against the window form.
     """
-    idx_bands, idx_sigs = _index_relations(spark, db)
+    from .index_store import read_live
+
+    # tombstoned docs (the erasure overlay) vanish from every layer
+    idx_bands, idx_sigs = read_live(spark, db, ("bands", "sigs"), "doc_id")
     cand = (
         _band_long(batch_sigs)
         .withColumnRenamed("doc_id", "new_id")
@@ -1315,7 +1282,12 @@ def _score_batch_vs_index(
     )
 
 
-_NEAR_IDX_TABLES = ("bands", "sigs")
+# sigs first: the size-ratio trigger sizes a layer by its first table
+_NEAR_IDX_DDL = {
+    "sigs": "doc_id bigint, hs array<bigint>",
+    "bands": "doc_id bigint, band int, key string",
+}
+_NEAR_IDX_TABLES = tuple(_NEAR_IDX_DDL)
 _NEAR_IDX_SCHEMA = {"bands": ("doc_id", "band", "key"), "sigs": ("doc_id", "hs")}
 
 
@@ -1413,13 +1385,15 @@ def _admit_batch_df(
     verdict frame.
 
     ``auto_compact_ratio`` (opt-in, layered ``db`` only): after the
-    appends, run the :func:`maybe_auto_compact` size-ratio policy so a
+    appends, run the :func:`index_store.maybe_fold_delta` size-ratio
+    trigger so a
     long-running admission loop folds its delta into the base the
     moment the overlay stops being "small" — without the caller ever
     scheduling maintenance explicitly. Callers sharing an immutable
     base across runs must leave this off."""
     if write_db is None:
         write_db = db if isinstance(db, str) else db[-1]
+    from .index_store import maybe_fold_delta
     from .lease import maintenance_lease
 
     sigs = _doc_signatures(batch_docs)
@@ -1428,9 +1402,9 @@ def _admit_batch_df(
         # Cross-process writer exclusion (VERDICT r9 #2): the probe +
         # append window holds the pair's maintenance lease — keyed on
         # the BASE layer, the same key the folds use — so a maintainer
-        # in another process can neither truncate the delta between
-        # this append and its fold copy (the lost-admission window) nor
-        # swap tables out from under the probe scan. In-process this
+        # in another process can neither fold the delta between this
+        # probe and its append nor swap tables out from under the probe
+        # scan. In-process this
         # nests reentrantly; at 100 TB the probe-under-lease serializa-
         # tion is replaced by snapshot-isolated reads (table-format
         # time travel) with only the append+fold window leased.
@@ -1456,7 +1430,7 @@ def _admit_batch_df(
             # x30 cold admission measures ~49s vs a 60s default), and a
             # silently expired lease here reopens the exact lost-
             # admission window the lease closes — a cross-process fold
-            # could truncate between the appends below. renew() extends
+            # could run between the appends below. renew() extends
             # the expiry now that the long probe is done (raising
             # LeaseLostError if the lease was stolen mid-score — abort
             # BEFORE appending anything), and check() fences each
@@ -1502,7 +1476,9 @@ def _admit_batch_df(
                 and len(db) == 2
                 and write_db == db[1]
             ):
-                maybe_auto_compact(spark, db[0], db[1], auto_compact_ratio)
+                maybe_fold_delta(
+                    spark, db[0], db[1], _NEAR_IDX_TABLES, auto_compact_ratio
+                )
         return verdicts
     finally:
         sigs.unpersist()
@@ -1713,60 +1689,22 @@ def stream_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged dir and the sink becomes the curated-corpus table; nothing
     else changes.
     """
-    import os
-
-    from ..catalog import catalog_lock
+    from .index_store import reset_scratch, scratch_dir
 
     # Layered index, the production shape: the BASE is immutable and
     # built/adopted ONCE (reused across invocations — at 100 TB you
-    # never rewrite it); per-run admissions land in a fresh DELTA
-    # overlay, so repeat invocations stay deterministic while paying
-    # only an empty-table create instead of a full rebuild (measured:
-    # ~6s -> ~2s per bench run at sf0.1).
+    # never rewrite it); per-run admissions land in a DELTA overlay
+    # emptied each invocation, so repeat invocations stay deterministic
+    # without a rebuild (measured: ~6s -> ~2s per bench run at sf0.1).
     base_db = _near_index_db(sf_dir) + "_sbase"
     delta_db = _near_index_db(sf_dir) + "_sdelta"
     stage = _stage_near_dup_arrivals(spark, sf_dir)
     build_near_dup_index(spark, sf_dir, db=base_db)
-    with catalog_lock:
-        from .index_store import clear_tables
-
-        from .index_store import _ensure_db
-
-        _ensure_db(spark, delta_db)
-        have = {  # per-table probes, not listTables (~230ms vs ~4ms)
-            t
-            for t in _NEAR_IDX_TABLES + ("hashes", "assign")
-            if spark.catalog.tableExists(f"{delta_db}.{t}")
-        }
-        if {"bands", "sigs"} <= have and not any(
-            # an ADOPTED (external) leftover can't be truncated; only
-            # this session's managed scratch tables take the fast path
-            spark.catalog.getTable(f"{delta_db}.{t}").tableType == "EXTERNAL"
-            for t in _NEAR_IDX_TABLES
-        ):
-            # per-run reset is a TRUNCATE (metadata + file delete), not a
-            # drop/recreate — ~10x cheaper per invocation
-            spark.sql(f"TRUNCATE TABLE {delta_db}.sigs")
-            spark.sql(f"TRUNCATE TABLE {delta_db}.bands")
-            spark.catalog.refreshTable(f"{delta_db}.sigs")
-            spark.catalog.refreshTable(f"{delta_db}.bands")
-        else:
-            # the delta is per-run SCRATCH (unlike every other persisted
-            # artifact): cross-process leftovers are cleared, never
-            # adopted — there is nothing worth reusing in them
-            clear_tables(spark, delta_db, _NEAR_IDX_TABLES)
-            local_rows_df(spark, 
-                [], "doc_id bigint, hs array<bigint>"
-            ).write.format("parquet").saveAsTable(f"{delta_db}.sigs")
-            local_rows_df(spark, 
-                [], "doc_id bigint, band int, key string"
-            ).write.format("parquet").saveAsTable(f"{delta_db}.bands")
+    reset_scratch(spark, delta_db, _NEAR_IDX_DDL)
 
     # deterministic fingerprint-keyed sink, cleared at run start: the
     # prior run's directory is reused in place instead of leaking one
     # uuid-named dir per invocation (ADVICE r8)
-    from .index_store import scratch_dir
-
     out_dir = scratch_dir(
         "near_dup_verdicts", sf_dir, ("documents.parquet",), fresh=True
     )
@@ -1993,134 +1931,6 @@ def dedup_incr_exact_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def compact_near_dup_index(
-    spark: SparkSession, base_db: str, delta_db: str
-) -> dict:
-    """Compact a layered near-dup index: fold the delta overlay's
-    admitted rows into the base tables and truncate the delta — the
-    periodic maintenance step that keeps the overlay small (at 100 TB
-    this is the nightly job that turns the day's admissions into base
-    partitions; queries keep reading base UNION delta throughout, so
-    compaction is invisible to them). Returns the moved row counts.
-
-    Ordering note: sigs fold first, bands second, truncation last —
-    a reader between steps sees at worst DUPLICATE index rows (base +
-    not-yet-truncated delta), which candidate-dedup (`distinct`)
-    absorbs; it can never see a missing row.
-
-    Tombstone fold: if the base carries a ``tombstones`` table (docs
-    erased via :func:`forget_near_dup_docs`), compaction rewrites the
-    base tables MINUS the tombstoned ids and truncates the tombstone
-    set. Two independent safety properties: (1) read-through — readers
-    anti-join tombstones on every probe, so rewriting before truncating
-    never changes the logical index (a crash between the two steps
-    leaves tombstones for already-removed rows, and anti-joining absent
-    ids is a no-op); (2) crash-durable rewrite — each table rewrite goes
-    through :func:`index_store.staged_overwrite` (kept rows fully
-    staged, then swapped), so a crash mid-overwrite can never lose
-    non-tombstoned base rows; :func:`index_store.recover_staged` replays
-    any interrupted swap at the top of the next fold. The fold runs
-    under the maintenance lock (``catalog_lock``). (At 100 TB the
-    rewrite is partition-scoped — only partitions holding tombstoned ids
-    rewrite, the erasure pattern Engine.delete_rows implements for
-    marts.)
-    """
-    from ..catalog import catalog_lock
-
-    from .index_store import recover_staged, staged_overwrite
-    from .lease import maintenance_lease
-
-    # cross-process writer exclusion (VERDICT r9 #2): the layered pair
-    # shares ONE lease, keyed on the base — admissions take the same
-    # key, so a concurrent maintainer in another JVM can't truncate a
-    # delta out from under a mid-flight admission append
-    with catalog_lock, maintenance_lease(spark, base_db) as lease:
-        recover_staged(spark, base_db, _NEAR_IDX_TABLES)
-        n_sigs = spark.table(f"{delta_db}.sigs").count()
-        n_bands = spark.table(f"{delta_db}.bands").count()
-        if n_sigs:
-            # Fold by FILE MOVE (round 12, guide §6): the sigs/bands
-            # fold is a blind delta→base append, so the delta's parquet
-            # files are RENAMED into the base directories instead of a
-            # copy job + TRUNCATE — zero write jobs, and each row lives
-            # in exactly one layer at every instant (the old copy's
-            # crash window left the whole delta duplicated into the
-            # base until the truncate; a crash mid-move just leaves the
-            # tail in the delta for the next trigger to resume). The
-            # ADVICE r10 fencing concern collapses with the truncate:
-            # the move IS the destructive step, so the token is
-            # consulted immediately before it; a stolen-lease
-            # admission's concurrent append lands new uuid-named files
-            # that the move loop either carries or leaves — never
-            # discards.
-            lease.renew()
-            lease.check()  # fence at the destructive step (the move)
-            from .index_store import move_table_files
-
-            move_table_files(spark, delta_db, "sigs", base_db, "sigs")
-            move_table_files(spark, delta_db, "bands", base_db, "bands")
-            for db in (base_db, delta_db):
-                spark.catalog.refreshTable(f"{db}.sigs")
-                spark.catalog.refreshTable(f"{db}.bands")
-        n_tombs = 0
-        if spark.catalog.tableExists(f"{base_db}.tombstones"):
-            tombs = spark.table(f"{base_db}.tombstones").select("doc_id").distinct()
-            n_tombs = tombs.count()
-            if n_tombs:
-                for t in _NEAR_IDX_TABLES:
-                    lease.renew()  # heartbeat between table swaps
-                    lease.check()  # fence before each staged swap
-                    kept = spark.table(f"{base_db}.{t}").join(
-                        F.broadcast(tombs), "doc_id", "left_anti"
-                    )
-                    # stage-then-swap: materializes `kept` into a staged
-                    # table (which also resolves the read-while-
-                    # overwriting hazard) before touching the live one
-                    staged_overwrite(spark, base_db, t, kept)
-                lease.renew()
-                lease.check()  # fence the tombstone truncation too
-                spark.sql(f"TRUNCATE TABLE {base_db}.tombstones")
-                spark.catalog.refreshTable(f"{base_db}.tombstones")
-        return {
-            "sigs_moved": n_sigs,
-            "bands_moved": n_bands,
-            "tombstones_folded": n_tombs,
-        }
-
-
-AUTO_COMPACT_RATIO = 0.5  # fold when |delta sigs| >= ratio * |base sigs|
-
-
-def maybe_auto_compact(
-    spark: SparkSession,
-    base_db: str,
-    delta_db: str,
-    ratio: float = AUTO_COMPACT_RATIO,
-) -> dict | None:
-    """Size-ratio compaction policy, checked at admission time (VERDICT
-    r8 #4): fold the delta overlay into the base once ``|delta sigs| >=
-    ratio * |base sigs|`` — the LSM-tree trigger shape. Below the
-    threshold admission pays nothing beyond two table row counts (at
-    scale a parquet-footer metadata read, not a scan); above it the
-    existing :func:`compact_near_dup_index` fold runs, after which the
-    per-batch probe is back to scanning ONE compacted base instead of a
-    base plus an ever-growing delta. Returns the fold's stats dict, or
-    None if the trigger didn't fire.
-
-    The ratio form self-scales: a 100 TB base tolerates a huge delta
-    before folding (rewrites are rare and amortized), while a small
-    dedicated index folds eagerly. Callers that share an immutable base
-    across invocations (the registered streaming-gate queries, whose
-    repeat-run determinism depends on the base never absorbing a run's
-    delta) simply don't opt in.
-    """
-    n_base = spark.table(f"{base_db}.sigs").count()
-    n_delta = spark.table(f"{delta_db}.sigs").count()
-    if n_delta and n_delta >= ratio * max(n_base, 1):
-        return compact_near_dup_index(spark, base_db, delta_db)
-    return None
-
-
 def _reset_layered_pair(
     spark: SparkSession,
     base_db: str,
@@ -2158,6 +1968,7 @@ def _reset_layered_pair(
         clear_tables,
         drop_snapshot,
         recover_staged,
+        reset_scratch,
         restore_snapshot,
         snapshot_tables,
     )
@@ -2178,27 +1989,7 @@ def _reset_layered_pair(
                     drop_snapshot(spark, base_db)
         # snapshot the now-verified-clean base (no-op once taken)
         snapshot_tables(spark, base_db, base_tables)
-        from .index_store import _ensure_db
-
-        _ensure_db(spark, delta_db)
-        have = {  # per-table probes, not listTables (~230ms vs ~4ms)
-            t
-            for t in _NEAR_IDX_TABLES + ("hashes", "assign")
-            if spark.catalog.tableExists(f"{delta_db}.{t}")
-        }
-        if set(delta_schemas) <= have and not any(
-            spark.catalog.getTable(f"{delta_db}.{t}").tableType == "EXTERNAL"
-            for t in delta_schemas
-        ):
-            for t in delta_schemas:
-                spark.sql(f"TRUNCATE TABLE {delta_db}.{t}")
-                spark.catalog.refreshTable(f"{delta_db}.{t}")
-        else:
-            clear_tables(spark, delta_db, tuple(delta_schemas))
-            for t, schema in delta_schemas.items():
-                local_empty_df(spark, schema).write.format(
-                    "parquet"
-                ).saveAsTable(f"{delta_db}.{t}")
+        reset_scratch(spark, delta_db, delta_schemas)
 
 
 @register("dedup_near_auto_compacted", _duck_stream_admission())
@@ -2218,9 +2009,9 @@ def dedup_near_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     folding forward instead.
 
     Scale: identical read/write shape to the streaming gate, plus the
-    fold (delta-sized append + truncate) amortized across the batches
-    that triggered it; the trigger check itself is two metadata row
-    counts per admission.
+    fold (a delta-sized file move, no write job) amortized across the
+    batches that triggered it; the trigger check itself is two metadata
+    row counts per admission.
     """
     from .index_store import staged_overwrite
 
@@ -2246,10 +2037,7 @@ def dedup_near_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         base_db,
         delta_db,
         lambda: build_near_dup_index(spark, sf_dir, db=base_db),
-        {
-            "sigs": "doc_id bigint, hs array<bigint>",
-            "bands": "doc_id bigint, band int, key string",
-        },
+        _NEAR_IDX_DDL,
         lambda db: spark.table(f"{db}.sigs")
         .filter(F.col("doc_id") % INCR_NEAR_MOD < INCR_IDX_BASE_MOD)
         .limit(1)
@@ -2279,12 +2067,11 @@ def dedup_near_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("dedup_exact_auto_compacted", _duck_incr_exact_indexed())
 def dedup_exact_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact gate's auto-compacted sibling: two-batch hash
-    admission with the low-ratio fold firing between the batches
-    (delta hashes left_anti-appended into the base, overlay truncated),
-    batch 2 probed against the compacted state. Oracle = the ledger
-    gate's two-batch replay — the fold must be invisible, and the
-    duplicate-tolerant probe makes even its crash window
-    verdict-invariant (pinned separately in
+    admission with the low-ratio fold firing between the batches (the
+    delta's hash files moved into the base), batch 2 probed against the
+    compacted state. Oracle = the ledger gate's two-batch replay — the
+    fold must be invisible, and the duplicate-tolerant probe keeps
+    verdicts invariant even if a hash sits in both layers (pinned in
     test_exact_auto_compaction_and_duplicate_tolerance).
     """
     base_db = _exact_index_db(sf_dir) + "_ac"
@@ -2335,67 +2122,6 @@ def dedup_exact_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("batch_id", "doc_id", "is_dup")
         )
     return out[0].unionByName(out[1])
-
-
-def forget_near_dup_docs(spark: SparkSession, db: str, doc_ids) -> int:
-    """Targeted erasure from the persisted near-dup index (the GDPR /
-    right-to-be-forgotten path for curated-corpus state): append the
-    doc_ids to ``<db>.tombstones``; every scorer read anti-joins them
-    out immediately (see :func:`_index_relations`), and the next
-    :func:`compact_near_dup_index` folds them into the base rewrite.
-
-    O(|forgotten|) work at forget time — the 100 TB base index is NOT
-    rewritten here; erasure latency is one small append, physical
-    removal rides the existing maintenance window (the Iceberg
-    delete-file pattern). Idempotent: already-tombstoned ids are
-    skipped (left_anti against the current set), so replaying an
-    erasure request never grows the table. Between compactions the
-    tombstone set stays erasure-sized (broadcastable by design);
-    returns the number of NEW tombstones written.
-
-    ``doc_ids``: an iterable of ints or a single-column DataFrame of
-    doc ids.
-    """
-    from ..catalog import catalog_lock
-
-    from .index_store import ensure_tables
-
-    if not isinstance(doc_ids, DataFrame):
-        doc_ids = local_rows_df(spark, 
-            [(int(i),) for i in doc_ids], "doc_id bigint"
-        )
-    ids = doc_ids.selectExpr("CAST(doc_id AS BIGINT) AS doc_id").distinct()
-
-    def _build_empty() -> None:
-        local_empty_df(spark, "doc_id bigint").write.format(
-            "parquet"
-        ).saveAsTable(f"{db}.tombstones")
-
-    from .lease import maintenance_lease
-
-    # lease: a concurrent fold in another process truncates tombstones
-    # after folding them — an unleased append landing in that window
-    # would be truncated WITHOUT ever being folded (erasure lost)
-    with catalog_lock, maintenance_lease(spark, db) as lease:
-        ensure_tables(
-            spark,
-            db,
-            ("tombstones",),
-            _build_empty,
-            expect={"tombstones": ("doc_id",)},
-        )
-        fresh = (
-            ids.join(spark.table(f"{db}.tombstones"), "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n = fresh.count()
-        if n:
-            lease.check()  # fence the tombstone append (ADVICE r10)
-            fresh.write.format("parquet").mode("append").saveAsTable(
-                f"{db}.tombstones"
-            )
-            spark.catalog.refreshTable(f"{db}.tombstones")
-        return n
 
 
 INCR_IDX_FORGET = 3  # doc_id % 7 == 3 -> the owned slice the forget query erases
@@ -2452,9 +2178,11 @@ def dedup_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: forget cost is O(|forgotten|) appends + a broadcast
     anti-join on every subsequent probe until compaction folds the
-    tombstones into the base rewrite (compact_near_dup_index) — the
-    Iceberg delete-file lifecycle for curated-corpus state.
+    tombstones into the base rewrite (index_store.fold_tombstones) —
+    the Iceberg delete-file lifecycle for curated-corpus state.
     """
+    from .index_store import forget
+
     db = _near_index_db(sf_dir) + "_fg"
     build_near_dup_index(spark, sf_dir, db=db)
     erase = (
@@ -2462,7 +2190,7 @@ def dedup_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % INCR_NEAR_MOD == INCR_IDX_FORGET)
         .select("doc_id")
     )
-    forget_near_dup_docs(spark, db, erase)
+    forget(spark, db, "doc_id", erase)
     batch1 = _docs(spark, sf_dir).filter(
         F.col("doc_id") % INCR_NEAR_MOD == INCR_IDX_BATCH1
     )
@@ -2562,7 +2290,7 @@ def stream_near_dup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ERASURE — right-to-be-forgotten requests arriving as
     micro-batches against the persisted near-dup index, with serving
     between the waves: each foreachBatch appends the wave's doc_ids to
-    the tombstone set (:func:`forget_near_dup_docs`, O(|wave|)), then
+    the tombstone set (:func:`index_store.forget`, O(|wave|)), then
     the fixed probe batch is scored IMMEDIATELY — proving each wave's
     docs are invisible before the next wave lands, the erasure-latency
     guarantee the batch forget query can't state. Emits both waves'
@@ -2572,37 +2300,22 @@ def stream_near_dup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Dedicated ``_fgs`` index (owned corpus, shared bootstrap); the
     TOMBSTONE set is per-run stream state and resets at query start
-    (truncate, or clear-and-recreate for adopted leftovers) — the same
-    scratch discipline as the admission gates' delta overlays, and the
-    reason repeat runs replay deterministically. The base itself is
-    never rewritten here; folding erasures into the base is
-    compact_near_dup_index's maintenance job.
+    (``index_store.reset_scratch``) — the same scratch discipline as the
+    admission gates' delta overlays, and the reason repeat runs replay
+    deterministically. The base itself is never rewritten here; folding
+    erasures into the base is ``index_store.fold_tombstones``'s
+    maintenance job.
 
     Scale: per wave, one tombstone append + one probe-batch scoring
     pass through the broadcast anti-join — erasure latency is
     O(|wave|) regardless of index size; verdicts are sink-written,
     never collected.
     """
-    import os
-
-    from ..catalog import catalog_lock
-
-    from .index_store import clear_tables, scratch_dir
+    from .index_store import forget, reset_scratch, scratch_dir
 
     db = _near_index_db(sf_dir) + "_fgs"
     build_near_dup_index(spark, sf_dir, db=db)
-    with catalog_lock:
-        if spark.catalog.tableExists(f"{db}.tombstones") and (
-            spark.catalog.getTable(f"{db}.tombstones").tableType
-            != "EXTERNAL"
-        ):
-            spark.sql(f"TRUNCATE TABLE {db}.tombstones")
-            spark.catalog.refreshTable(f"{db}.tombstones")
-        else:
-            clear_tables(spark, db, ("tombstones",))
-            local_empty_df(spark, "doc_id bigint").write.format(
-                "parquet"
-            ).saveAsTable(f"{db}.tombstones")
+    reset_scratch(spark, db, {"tombstones": "doc_id bigint"})
     stage = _stage_forget_requests(spark, sf_dir)
     out_dir = scratch_dir(
         "forget_verdicts", sf_dir, ("documents.parquet",), fresh=True
@@ -2612,7 +2325,7 @@ def stream_near_dup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        forget_near_dup_docs(spark, db, batch_df.select("doc_id"))
+        forget(spark, db, "doc_id", batch_df.select("doc_id"))
         (
             _score_batch_vs_index(
                 spark, db, _doc_signatures(probe), anchor_docs=probe
@@ -2704,19 +2417,22 @@ def _admit_exact_batch_df(
     hashes to ``write_db``, and return the verdict frame
     (doc_id, is_dup, h) — one row per batch doc, no drops.
 
+    Only hashes absent from base UNION delta are appended, under the
+    same lease the fold takes, so the layers stay disjoint and the fold
+    (:func:`index_store.fold_delta`) is a plain file move.
+
     DUPLICATE-TOLERANT probe (round 9): the within-batch rank is
     computed on the batch ALONE, and state membership is a left-SEMI
-    join — so a hash present in BOTH layers (the crash window of
-    :func:`compact_exact_index`, which appends to base before
-    truncating the delta) still yields exactly one verdict row per doc.
-    The old left-join form duplicated verdict rows and inflated the
-    rank whenever the state held a duplicate. Both joins stay
-    batch-sized on the output side.
+    join — so a hash present in BOTH layers (state written outside this
+    protocol) still yields exactly one verdict row per doc. The old
+    left-join form duplicated verdict rows and inflated the rank
+    whenever the state held a duplicate. Both joins stay batch-sized on
+    the output side.
 
     ``auto_compact_ratio`` (opt-in): after the append, run the
-    :func:`maybe_auto_compact_exact` size-ratio fold — same LSM policy
-    as the near-dup gate; callers sharing an immutable base leave it
-    off.
+    :func:`index_store.maybe_fold_delta` size-ratio trigger — the same
+    LSM policy as the near-dup gate; callers sharing an immutable base
+    leave it off.
 
     Same cache-invalidation hazard as _admit_batch_df: the verdicts
     plan READS the hash tables the append below WRITES, so the frame is
@@ -2727,9 +2443,10 @@ def _admit_exact_batch_df(
     from pyspark.sql import Window as W
 
     # lease on the BASE layer (same key as the fold), held across the
-    # probe + append: a cross-process maintainer can neither truncate
-    # this delta between append and fold copy nor swap the state tables
-    # out from under the probe scan (see _admit_batch_df)
+    # probe + append: a cross-process maintainer can neither fold this
+    # delta between probe and append nor swap the state tables out from
+    # under the probe scan (see _admit_batch_df)
+    from .index_store import maybe_fold_delta
     from .lease import maintenance_lease
 
     with maintenance_lease(spark, dbs[0]) as lease:
@@ -2762,7 +2479,7 @@ def _admit_exact_batch_df(
         # ADVICE r10: the probe may outlast the lease TTL — renew (which
         # raises if the lease was stolen mid-probe) and fence before the
         # append, so a long batch can never silently lose the lease and
-        # append into a state a stolen-lease fold is about to truncate.
+        # append into a delta a stolen-lease fold is about to move.
         lease.renew()
         lease.check()
         (
@@ -2779,69 +2496,10 @@ def _admit_exact_batch_df(
             and len(dbs) == 2
             and write_db == dbs[1]
         ):
-            maybe_auto_compact_exact(spark, dbs[0], dbs[1], auto_compact_ratio)
-    return verdicts
-
-
-def compact_exact_index(
-    spark: SparkSession, base_db: str, delta_db: str
-) -> dict:
-    """Fold the exact gate's delta hash overlay into the base —
-    base-minus-aware append (left_anti, so replaying an interrupted
-    fold never re-appends), then truncate the delta. A crash between
-    the two steps leaves a hash in BOTH layers; the probe is
-    duplicate-tolerant by design (see :func:`_admit_exact_batch_df`:
-    rank computed on the batch alone, membership a semi-join), so
-    mid-crash readers still get one verdict row per doc with the same
-    values, and the next fold's left_anti completes the truncation
-    without re-appending. Returns the moved row count. Runs under the
-    pair's cross-process maintenance lease (keyed on the base, same key
-    admissions take), fencing the copy/truncate window against a
-    concurrent maintainer in another JVM."""
-    from ..catalog import catalog_lock
-
-    from .lease import maintenance_lease
-
-    with catalog_lock, maintenance_lease(spark, base_db) as lease:
-        fresh = (
-            spark.table(f"{delta_db}.hashes")
-            .join(spark.table(f"{base_db}.hashes"), "h", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n = fresh.count()
-        if n:
-            lease.check()  # fence before the copy/truncate window
-            fresh.write.format("parquet").mode("append").saveAsTable(
-                f"{base_db}.hashes"
+            maybe_fold_delta(
+                spark, dbs[0], dbs[1], ("hashes",), auto_compact_ratio
             )
-            spark.catalog.refreshTable(f"{base_db}.hashes")
-        if spark.table(f"{delta_db}.hashes").limit(1).count():
-            # ADVICE r10: renew + fence at the destructive step itself —
-            # if the lease expired during the copy, a stolen-lease
-            # admission may have appended to the delta, and truncating
-            # without re-checking would discard those fresh rows.
-            lease.renew()
-            lease.check()
-            spark.sql(f"TRUNCATE TABLE {delta_db}.hashes")
-            spark.catalog.refreshTable(f"{delta_db}.hashes")
-        return {"hashes_moved": n}
-
-
-def maybe_auto_compact_exact(
-    spark: SparkSession,
-    base_db: str,
-    delta_db: str,
-    ratio: float = AUTO_COMPACT_RATIO,
-) -> dict | None:
-    """Size-ratio auto-compaction for the exact gate's layered hash
-    state — the exact-family sibling of :func:`maybe_auto_compact`:
-    fold when |delta hashes| >= ratio * |base hashes|. Two metadata row
-    counts per check; only a firing trigger pays the fold."""
-    n_base = spark.table(f"{base_db}.hashes").count()
-    n_delta = spark.table(f"{delta_db}.hashes").count()
-    if n_delta and n_delta >= ratio * max(n_base, 1):
-        return compact_exact_index(spark, base_db, delta_db)
-    return None
+    return verdicts
 
 
 @register(
@@ -2866,7 +2524,7 @@ def stream_exact_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     Layering mirrors the near-dup stream: the BASE hash set is
     built/adopted once via the shared index_store bootstrap and never
     written by the stream; admissions land in a per-run DELTA scratch
-    overlay (truncated or recreated each invocation), so repeat runs
+    overlay (emptied or created each invocation), so repeat runs
     are deterministic and never contaminate the batch gate's ledger
     state.
 
@@ -2876,45 +2534,17 @@ def stream_exact_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup gate in pipeline_incremental_admission's production
     ordering. Verdicts are WRITTEN (parquet sink), never collected.
     """
-    import os
-
-    from ..catalog import catalog_lock
-
-    from .index_store import clear_tables
+    from .index_store import reset_scratch, scratch_dir
 
     base_db = _exact_index_db(sf_dir) + "_sbase"
     delta_db = _exact_index_db(sf_dir) + "_sdelta"
     stage = _stage_near_dup_arrivals(spark, sf_dir)
     build_exact_dup_index(spark, sf_dir, db=base_db)
-    with catalog_lock:
-        from .index_store import _ensure_db
-
-        _ensure_db(spark, delta_db)
-        have = {  # per-table probes, not listTables (~230ms vs ~4ms)
-            t
-            for t in _NEAR_IDX_TABLES + ("hashes", "assign")
-            if spark.catalog.tableExists(f"{delta_db}.{t}")
-        }
-        if "hashes" in have and (
-            spark.catalog.getTable(f"{delta_db}.hashes").tableType
-            != "EXTERNAL"
-        ):
-            # per-run reset: TRUNCATE the managed scratch table
-            spark.sql(f"TRUNCATE TABLE {delta_db}.hashes")
-            spark.catalog.refreshTable(f"{delta_db}.hashes")
-        else:
-            # cross-process leftovers are scratch — cleared, never
-            # adopted (unlike every durable artifact)
-            clear_tables(spark, delta_db, ("hashes",))
-            local_empty_df(spark, "h string").write.format(
-                "parquet"
-            ).saveAsTable(f"{delta_db}.hashes")
+    reset_scratch(spark, delta_db, {"hashes": "h string"})
 
     # deterministic fingerprint-keyed sink, cleared at run start: the
     # prior run's directory is reused in place instead of leaking one
     # uuid-named dir per invocation (ADVICE r8)
-    from .index_store import scratch_dir
-
     out_dir = scratch_dir(
         "exact_verdicts", sf_dir, ("documents.parquet",), fresh=True
     )
@@ -2948,10 +2578,25 @@ def stream_exact_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- targeted erasure for the EXACT gate (doc-level hash state) --------------
 
-# Generic alias: the tombstone writer is doc_id-keyed and index-agnostic
-# (it only touches <db>.tombstones); the near-dup and exact erasure
-# indexes share it.
-forget_docs = forget_near_dup_docs
+
+def _build_doc_hashes(spark: SparkSession, sf_dir: str, db: str) -> str:
+    """Build or adopt ``<db>.doc_hashes`` (doc_id, h) over the owned
+    corpus — the erasable exact state, shared bootstrap."""
+    from .index_store import ensure_tables
+
+    def _build() -> None:
+        (
+            _docs(spark, sf_dir)
+            .filter(F.col("doc_id") % INCR_NEAR_MOD >= INCR_IDX_BASE_MOD)
+            .select("doc_id", F.md5("text").alias("h"))
+            .write.format("parquet")
+            .mode("overwrite")
+            .saveAsTable(f"{db}.doc_hashes")
+        )
+
+    return ensure_tables(
+        spark, db, ("doc_hashes",), _build, expect={"doc_hashes": ("doc_id", "h")}
+    )
 
 
 def _duck_exact_forget() -> str:
@@ -2981,7 +2626,7 @@ def dedup_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``<db>.doc_hashes`` (doc_id, h) — the implicit-refcount shape: a
     hash leaves the probe set only when its LAST living holder is
     forgotten — plus the same doc_id tombstone overlay as the near-dup
-    index (:func:`forget_docs`, fold at compaction).
+    index (:func:`index_store.forget`, fold at compaction).
 
     The query erases the ``doc_id % {INCR_NEAR_MOD} ==
     {INCR_IDX_FORGET}`` slice of the owned corpus, then scores batch 1:
@@ -2997,33 +2642,16 @@ def dedup_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucketed doc_hashes relation, at 100 TB a partial-agg over the
     probe's semi-joined partitions only.
     """
-    from .index_store import ensure_tables
+    from .index_store import forget
 
     db = _exact_index_db(sf_dir) + "_fg"
-
-    def _build() -> None:
-        (
-            _docs(spark, sf_dir)
-            .filter(F.col("doc_id") % INCR_NEAR_MOD >= INCR_IDX_BASE_MOD)
-            .select("doc_id", F.md5("text").alias("h"))
-            .write.format("parquet")
-            .mode("overwrite")
-            .saveAsTable(f"{db}.doc_hashes")
-        )
-
-    ensure_tables(
-        spark,
-        db,
-        ("doc_hashes",),
-        _build,
-        expect={"doc_hashes": ("doc_id", "h")},
-    )
+    _build_doc_hashes(spark, sf_dir, db)
     erase = (
         _docs(spark, sf_dir)
         .filter(F.col("doc_id") % INCR_NEAR_MOD == INCR_IDX_FORGET)
         .select("doc_id")
     )
-    forget_docs(spark, db, erase)
+    forget(spark, db, "doc_id", erase)
     batch = _docs(spark, sf_dir).filter(
         F.col("doc_id") % INCR_NEAR_MOD == INCR_IDX_BATCH1
     )
@@ -3039,10 +2667,9 @@ def _score_batch_vs_doc_hashes(
     the batch forget gate and its streaming sibling."""
     from pyspark.sql import Window as W
 
-    live = spark.table(f"{db}.doc_hashes")
-    if spark.catalog.tableExists(f"{db}.tombstones"):
-        tombs = spark.table(f"{db}.tombstones").select("doc_id").distinct()
-        live = live.join(F.broadcast(tombs), "doc_id", "left_anti")
+    from .index_store import read_live
+
+    (live,) = read_live(spark, db, ("doc_hashes",), "doc_id")
     probe = live.select("h").distinct().withColumnRenamed("h", "ih")
     batch = batch_docs.select("doc_id", F.md5("text").alias("h"))
     return (
@@ -3055,40 +2682,6 @@ def _score_batch_vs_doc_hashes(
             (F.col("ih").isNotNull() | (F.col("rk") > 1)).alias("is_dup"),
         )
     )
-
-
-def compact_exact_forget_index(spark: SparkSession, db: str) -> dict:
-    """Fold tombstones into the doc_hashes rewrite. Rewrite-before-
-    truncate keeps the fold read-through (anti-joining already-removed
-    ids is a no-op), and the rewrite itself is crash-durable via
-    ``staged_overwrite`` — kept rows are fully staged before the live
-    table is touched, with ``recover_staged`` replaying any interrupted
-    swap — like the near-dup and IVF folds. Runs under the index's
-    cross-process maintenance lease, fenced before the swap."""
-    from ..catalog import catalog_lock
-
-    from .index_store import recover_staged, staged_overwrite
-    from .lease import maintenance_lease
-
-    with catalog_lock, maintenance_lease(spark, db) as lease:
-        recover_staged(spark, db, ("doc_hashes",))
-        n_tombs = 0
-        if spark.catalog.tableExists(f"{db}.tombstones"):
-            tombs = (
-                spark.table(f"{db}.tombstones").select("doc_id").distinct()
-            )
-            n_tombs = tombs.count()
-            if n_tombs:
-                lease.check()  # fence before the staged swap
-                kept = spark.table(f"{db}.doc_hashes").join(
-                    F.broadcast(tombs), "doc_id", "left_anti"
-                )
-                staged_overwrite(spark, db, "doc_hashes", kept)
-                lease.renew()
-                lease.check()  # fence at the truncation itself (r10)
-                spark.sql(f"TRUNCATE TABLE {db}.tombstones")
-                spark.catalog.refreshTable(f"{db}.tombstones")
-        return {"tombstones_folded": n_tombs}
 
 
 def _duck_stream_exact_forget() -> str:
@@ -3142,41 +2735,11 @@ def stream_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-sized probe through a broadcast anti-join + a probe-set
     distinct over the semi-joined partitions.
     """
-    from ..catalog import catalog_lock
-
-    from .index_store import clear_tables, ensure_tables, scratch_dir
+    from .index_store import forget, reset_scratch, scratch_dir
 
     db = _exact_index_db(sf_dir) + "_fgx"
-
-    def _build() -> None:
-        (
-            _docs(spark, sf_dir)
-            .filter(F.col("doc_id") % INCR_NEAR_MOD >= INCR_IDX_BASE_MOD)
-            .select("doc_id", F.md5("text").alias("h"))
-            .write.format("parquet")
-            .mode("overwrite")
-            .saveAsTable(f"{db}.doc_hashes")
-        )
-
-    ensure_tables(
-        spark,
-        db,
-        ("doc_hashes",),
-        _build,
-        expect={"doc_hashes": ("doc_id", "h")},
-    )
-    with catalog_lock:
-        if spark.catalog.tableExists(f"{db}.tombstones") and (
-            spark.catalog.getTable(f"{db}.tombstones").tableType
-            != "EXTERNAL"
-        ):
-            spark.sql(f"TRUNCATE TABLE {db}.tombstones")
-            spark.catalog.refreshTable(f"{db}.tombstones")
-        else:
-            clear_tables(spark, db, ("tombstones",))
-            local_empty_df(spark, "doc_id bigint").write.format(
-                "parquet"
-            ).saveAsTable(f"{db}.tombstones")
+    _build_doc_hashes(spark, sf_dir, db)
+    reset_scratch(spark, db, {"tombstones": "doc_id bigint"})
     stage = _stage_forget_requests(spark, sf_dir)
     out_dir = scratch_dir(
         "exact_forget_verdicts", sf_dir, ("documents.parquet",), fresh=True
@@ -3186,7 +2749,7 @@ def stream_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        forget_docs(spark, db, batch_df.select("doc_id"))
+        forget(spark, db, "doc_id", batch_df.select("doc_id"))
         (
             _score_batch_vs_doc_hashes(spark, db, probe)
             .withColumn("batch_id", F.lit(int(batch_id)).cast("int"))

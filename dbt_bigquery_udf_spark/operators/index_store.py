@@ -1,55 +1,75 @@
-"""Shared warehouse bootstrap for PERSISTED index artifacts.
+"""The persisted-index lifecycle, implemented once for every index family.
 
-Six operators own on-disk index state (the near-dup LSH index, its
-streaming base/delta layers, the exact-hash ledger, and the two trained
-IVF indexes). They all need the same lifecycle, and round 7 proved that
-hand-rolling it per table regresses: the ``verdicts`` ledger bootstrap
-checked only the catalog and then ran a bare ``saveAsTable``, so a
-FRESH session over a WARM warehouse (empty catalog, leftover parquet at
-the database location) died with LOCATION_ALREADY_EXISTS and killed the
-driver's round-7 bench (VERDICT r7 §What's wrong). This module is the
-single implementation of the contract so the next index table can't
-reintroduce the bug.
+Operators own on-disk index state: the near-dup LSH index
+(``sigs``/``bands``, key ``doc_id``), the exact-hash ledger
+(``hashes``, never forgets), the erasable exact state (``doc_hashes``,
+key ``doc_id``) and the trained IVF indexes (``centroids``/``assign``,
+key ``vec_id``). Each family passes its own table names, schemas and key
+column to the functions here; none re-implements a step.
 
-The contract (``ensure_tables``):
+**Bootstrap** (:func:`ensure_tables`): registered tables ARE the
+artifact, so a repeat build touches nothing; a fresh session over a warm
+warehouse (empty catalog, leftover parquet at the database location)
+ADOPTS the files by location instead of recomputing them; an adopted
+table whose columns miss the current contract is cleared and rebuilt;
+a half-written group is cleared as a whole and rebuilt. A bare
+``saveAsTable`` over a warm warehouse dies with LOCATION_ALREADY_EXISTS,
+which is why no operator bootstraps its own tables.
 
-1. **catalog-first reuse** — registered tables ARE the artifact; a
-   repeat build touches nothing.
-2. **cross-session location adoption** — a fresh session's catalog is
-   empty but the previous process's parquet still sits under the
-   database location; register it (``CREATE TABLE ... USING parquet
-   LOCATION``) instead of recomputing. This is the 100 TB shape: the
-   index is an owned artifact no new job ever rebuilds.
-3. **schema validation on reuse/adopt** — an adopted table whose
-   columns don't match the operator's current contract (e.g. a ledger
-   persisted by an older code version) is cleared and rebuilt, never
-   silently served.
-4. **all-or-nothing groups** — a half-written group (crash between two
-   table writes) is garbage: clear every member (catalog entry AND
-   location files) and rebuild.
+**Layers.** A logical index is a BASE plus, optionally, a DELTA database
+holding the same tables, plus a ``<db>.tombstones`` table of erased keys.
+Every read (:func:`read_live`) is the union of the layers minus the
+tombstones of every layer, so:
 
-Corpus identity (``index_db_name``): the database name embeds a
-fingerprint of the corpus — absolute path plus (size, mtime_ns) of
-every data file — so two corpora that merely share a leaf directory
-name (``/a/sf0.1`` vs ``/b/sf0.1``), or a corpus regenerated in place,
-can never adopt each other's index and emit wrong verdicts
-(ADVICE r7). A changed corpus simply resolves to a new database and
-builds fresh; stale databases are swept by ``bench.py
+* an admission APPENDS to the delta only (O(|batch|));
+* an erasure (:func:`forget`) APPENDS keys to the tombstones only
+  (O(|forgotten|), the Iceberg delete-file shape);
+* maintenance folds the delta into the base (:func:`fold_delta`, by
+  moving parquet files, zero write jobs: each row sits in exactly one
+  layer at every instant) and folds the tombstones into a rewrite of the
+  base (:func:`fold_tombstones`: ``recover_staged``, a
+  :func:`staged_overwrite` of each table minus the tombstones, THEN the
+  tombstones are emptied; a crash in between leaves tombstones for rows
+  already gone, and anti-joining absent keys is a no-op);
+* :func:`maybe_fold_delta` is the size-ratio (LSM) trigger that runs the
+  delta fold once ``|delta| >= ratio * |base|``.
+
+Readers never see a lost row, and at worst see a row twice while a fold
+is mid-way (candidate dedup and the duplicate-tolerant exact probe absorb
+that). Writers that mutate a layered index hold the base layer's
+cross-process maintenance lease (:mod:`.lease`) plus ``catalog_lock``,
+and fence each destructive step with ``lease.renew()``/``lease.check()``.
+Tables are emptied by deleting their data files in place
+(:func:`empty_table`), which works on managed and EXTERNAL tables alike;
+``TRUNCATE TABLE`` is rejected on the EXTERNAL tables adoption creates.
+
+**Per-run scratch** (:func:`reset_scratch`): the demo queries' per-run
+delta and tombstone tables are emptied in place, or created empty;
+scratch left by another process is cleared, never adopted.
+
+**Corpus identity** (:func:`index_db_name`): the database name embeds a
+fingerprint of the corpus (absolute path plus size and mtime_ns of every
+data file), so two corpora that share a leaf directory name, or a corpus
+regenerated in place, can never adopt each other's index. A changed
+corpus resolves to a new database; stale ones are swept by ``bench.py
 --fresh-indexes``.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
 from typing import Callable, Iterable, Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import catalog_lock, ensure_database
 from ..sources.registry import corpus_fingerprint
+from .lease import maintenance_lease
+from .util import local_rows_df
 
 __all__ = [
     "corpus_fingerprint",
@@ -63,6 +83,15 @@ __all__ = [
     "snapshot_tables",
     "restore_snapshot",
     "drop_snapshot",
+    "move_table_files",
+    "empty_table",
+    "reset_scratch",
+    "read_live",
+    "forget",
+    "fold_delta",
+    "fold_tombstones",
+    "maybe_fold_delta",
+    "AUTO_COMPACT_RATIO",
 ]
 
 STAGE_COMPLETE_MARKER = "_STAGE_COMPLETE"
@@ -183,7 +212,7 @@ def staged_overwrite(spark: SparkSession, db: str, table: str, df) -> None:
     The fold runs under ``catalog_lock`` (the maintenance window), so
     in-process readers never observe the intermediate state; the
     invariant a reader can rely on is "no logical row is ever lost",
-    with tombstone truncation deferred until every table folded."""
+    with the tombstone clear deferred until every table folded."""
     staged = f"{table}__staged"
     with catalog_lock:
         clear_tables(spark, db, (staged,))
@@ -348,25 +377,14 @@ def move_table_files(
     dst_db: str,
     dst_table: str,
 ) -> int:
-    """Fold ``src`` into ``dst`` by MOVING its parquet files (same-volume
-    ``os.rename`` per file) instead of a copy job + TRUNCATE — for folds
-    whose semantics are a blind append (the near-dup delta→base fold;
-    NOT the exact ledger's left_anti fold, which dedups on copy). Zero
-    Spark write jobs, and strictly better crash behavior than
-    copy-then-truncate: each row lives in exactly one layer at every
-    instant (a crash mid-move leaves the tail rows in the delta, where
-    the next fold trigger simply resumes; the old copy's crash window
-    left the whole delta duplicated into the base until the truncate).
-    Part-file names embed task UUIDs, so cross-layer collisions cannot
-    occur; non-parquet bookkeeping files (``_SUCCESS``) stay behind.
-    Returns the number of files moved. Caller holds the maintenance
-    lease and refreshes both tables afterwards."""
-    src = os.path.join(
-        db_location(spark, src_db).removeprefix("file:"), src_table
-    )
-    dst = os.path.join(
-        db_location(spark, dst_db).removeprefix("file:"), dst_table
-    )
+    """Append ``src``'s rows to ``dst`` by MOVING its parquet files
+    (same-volume ``os.rename`` per file): zero Spark write jobs. Part-file
+    names embed task UUIDs, so names cannot collide across layers;
+    non-parquet bookkeeping files stay behind. Returns the number of
+    files moved. Caller holds the maintenance lease and refreshes both
+    tables afterwards."""
+    src = _table_dir(spark, src_db, src_table)
+    dst = _table_dir(spark, dst_db, dst_table)
     n = 0
     if not os.path.isdir(src):
         return 0
@@ -376,6 +394,207 @@ def move_table_files(
             os.rename(os.path.join(src, f), os.path.join(dst, f))
             n += 1
     return n
+
+
+def _table_dir(spark: SparkSession, db: str, table: str) -> str:
+    return os.path.join(db_location(spark, db).removeprefix("file:"), table)
+
+
+def _has_parts(path: str) -> bool:
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") for f in os.listdir(path)
+    )
+
+
+def _adopt(spark: SparkSession, db: str, table: str) -> bool:
+    """Whether ``db.table`` is cataloged, first registering it by
+    location when only its parquet is on disk (written by another
+    process, or by a session whose catalog is gone)."""
+    with catalog_lock:
+        if spark.catalog.tableExists(f"{db}.{table}"):
+            return True
+        _ensure_db(spark, db)
+        if not _has_parts(_table_dir(spark, db, table)):
+            return False
+        loc = db_location(spark, db)
+        spark.sql(
+            f"CREATE TABLE {db}.{table} USING parquet LOCATION '{loc}/{table}'"
+        )
+        return True
+
+
+def _refresh(spark: SparkSession, dbs: Sequence[str], tables: Sequence[str]) -> None:
+    for db in dbs:
+        for t in tables:
+            spark.catalog.refreshTable(f"{db}.{t}")
+
+
+def empty_table(spark: SparkSession, db: str, table: str) -> None:
+    """Empty ``db.table`` by deleting its data files in place, then
+    refresh its file listing. This is the one way a table is emptied: it
+    works on managed and EXTERNAL tables alike, while ``TRUNCATE TABLE``
+    rejects the EXTERNAL tables that adoption and staged commits leave.
+    Underscore-prefixed bookkeeping files stay."""
+    path = _table_dir(spark, db, table)
+    for f in os.listdir(path) if os.path.isdir(path) else ():
+        if not f.startswith("_"):
+            os.remove(os.path.join(path, f))
+    spark.catalog.refreshTable(f"{db}.{table}")
+
+
+def reset_scratch(spark: SparkSession, db: str, schemas: Mapping[str, str]) -> None:
+    """Per-run scratch tables (a stream's delta layer, a stream's
+    tombstones): afterwards every ``table -> column DDL`` of ``schemas``
+    exists in ``db`` and is empty. A cataloged table is emptied in place;
+    otherwise whatever sits at its location is cleared, never adopted,
+    and the table is created empty by DDL alone."""
+    with catalog_lock:
+        _ensure_db(spark, db)
+        for t, ddl in schemas.items():
+            if spark.catalog.tableExists(f"{db}.{t}"):
+                empty_table(spark, db, t)
+            else:
+                clear_tables(spark, db, (t,))
+                spark.sql(f"CREATE TABLE {db}.{t} ({ddl}) USING parquet")
+
+
+def read_live(
+    spark: SparkSession, dbs, tables: Sequence[str], key: str
+) -> list[DataFrame]:
+    """Each of ``tables`` as the union of its layers (``dbs``: one
+    database, or base first then delta) minus the ``key`` values
+    tombstoned in any layer, tombstones on disk but not yet cataloged
+    included. Layers without tombstones add no anti-join."""
+    dbs = (dbs,) if isinstance(dbs, str) else tuple(dbs)
+    frames = [
+        functools.reduce(
+            DataFrame.unionByName, [spark.table(f"{db}.{t}") for db in dbs]
+        )
+        for t in tables
+    ]
+    tombs = [
+        spark.table(f"{db}.tombstones").select(key)
+        for db in dbs
+        if _adopt(spark, db, "tombstones")
+    ]
+    if not tombs:
+        return frames
+    # distinct once; every table's anti-join shares the one small
+    # broadcast relation
+    dead = F.broadcast(functools.reduce(DataFrame.unionByName, tombs).distinct())
+    return [f.join(dead, key, "left_anti") for f in frames]
+
+
+def forget(spark: SparkSession, db: str, key: str, ids) -> int:
+    """Erase ``ids`` (ints, or a DataFrame with a ``key`` column) from
+    the index in ``db``: append those not yet tombstoned to
+    ``<db>.tombstones``. Reads subtract them at once, and
+    :func:`fold_tombstones` removes them physically. Idempotent: returns
+    the number of NEW tombstones."""
+    if not isinstance(ids, DataFrame):
+        ids = local_rows_df(spark, [(int(i),) for i in ids], f"{key} bigint")
+    ids = ids.selectExpr(f"CAST({key} AS BIGINT) AS {key}").distinct()
+
+    def _build_empty() -> None:
+        spark.sql(f"CREATE TABLE {db}.tombstones ({key} bigint) USING parquet")
+
+    # leased: a fold in another process empties the tombstones after
+    # folding them, and an unleased append landing in that window would
+    # be emptied without ever being folded
+    with catalog_lock, maintenance_lease(spark, db) as lease:
+        ensure_tables(
+            spark, db, ("tombstones",), _build_empty, expect={"tombstones": (key,)}
+        )
+        fresh = ids.join(
+            spark.table(f"{db}.tombstones"), key, "left_anti"
+        ).localCheckpoint(eager=True)
+        n = fresh.count()
+        if n:
+            lease.check()  # fence the tombstone append
+            fresh.write.format("parquet").mode("append").saveAsTable(
+                f"{db}.tombstones"
+            )
+            spark.catalog.refreshTable(f"{db}.tombstones")
+        return n
+
+
+def fold_delta(
+    spark: SparkSession, base_db: str, delta_db: str, tables: Sequence[str]
+) -> dict[str, int]:
+    """Fold the delta layer's ``tables`` into the base by moving their
+    files (:func:`move_table_files`). Every row sits in exactly one
+    layer at every instant: a crash mid-move leaves the remaining files
+    in the delta, and the next fold moves them. Delta tables on disk but
+    not cataloged are adopted first. Holds the pair's lease, keyed on
+    the base like the admissions. Returns the rows moved per table."""
+    with catalog_lock, maintenance_lease(spark, base_db) as lease:
+        recover_staged(spark, base_db, tables)
+        present = [t for t in tables if _adopt(spark, delta_db, t)]
+        for t in present:
+            _adopt(spark, base_db, t)
+        _refresh(spark, (base_db, delta_db), present)
+        moved = {t: spark.table(f"{delta_db}.{t}").count() for t in present}
+        if any(moved.values()):
+            lease.renew()
+            lease.check()  # fence at the destructive step, the move
+            for t in present:
+                move_table_files(spark, delta_db, t, base_db, t)
+            _refresh(spark, (base_db, delta_db), present)
+        return moved
+
+
+def fold_tombstones(
+    spark: SparkSession, db: str, tables: Sequence[str], key: str
+) -> int:
+    """Remove the tombstoned ``key`` values from ``db``'s ``tables``
+    physically: finish any interrupted staged commit, rewrite each table
+    minus the tombstones (:func:`staged_overwrite`), and only then empty
+    the tombstones. Tables and tombstones on disk but not cataloged are
+    adopted first. Returns the number of distinct tombstones folded. (At
+    scale the rewrite is partition-scoped: only the partitions holding
+    tombstoned keys, e.g. the IVF lists of erased vectors, rewrite.)"""
+    with catalog_lock, maintenance_lease(spark, db) as lease:
+        recover_staged(spark, db, tables)
+        if not all(_adopt(spark, db, t) for t in (*tables, "tombstones")):
+            return 0
+        _refresh(spark, (db,), (*tables, "tombstones"))
+        tombs = spark.table(f"{db}.tombstones").select(key).distinct()
+        n = tombs.count()
+        if n:
+            for t in tables:
+                lease.renew()  # heartbeat between table swaps
+                lease.check()  # fence before each staged swap
+                kept = spark.table(f"{db}.{t}").join(
+                    F.broadcast(tombs), key, "left_anti"
+                )
+                staged_overwrite(spark, db, t, kept)
+            lease.renew()
+            lease.check()  # fence the tombstone clear too
+            empty_table(spark, db, "tombstones")
+        return n
+
+
+AUTO_COMPACT_RATIO = 0.5  # fold when |delta| >= ratio * |base|
+
+
+def maybe_fold_delta(
+    spark: SparkSession,
+    base_db: str,
+    delta_db: str,
+    tables: Sequence[str],
+    ratio: float = AUTO_COMPACT_RATIO,
+) -> dict[str, int] | None:
+    """Size-ratio trigger, checked at admission time (the LSM shape):
+    run :func:`fold_delta` once the delta's first table holds at least
+    ``ratio`` times the base's rows. Below the threshold this costs two
+    row counts (at scale a parquet-footer read). The ratio self-scales:
+    a large base tolerates a large delta before folding. Returns the
+    fold's counts, or None if the trigger did not fire."""
+    n_base = spark.table(f"{base_db}.{tables[0]}").count()
+    n_delta = spark.table(f"{delta_db}.{tables[0]}").count()
+    if n_delta and n_delta >= ratio * max(n_base, 1):
+        return fold_delta(spark, base_db, delta_db, tables)
+    return None
 
 
 def _snap_root(spark: SparkSession, db: str) -> str:
@@ -396,7 +615,7 @@ def snapshot_tables(
     the database's ``_pristine`` directory — to be called only when the
     caller has just verified the tables are in their canonical state
     (the auto-compacted demo queries' probe-clean base). Parquet files
-    are immutable (appends/truncates create/unlink whole files, never
+    are immutable (appends, moves and clears create/unlink whole files, never
     rewrite in place), so hardlinks are snapshot-safe and cost no data
     copy. No-op if a complete snapshot already exists; a half-written
     one (no ``_SNAP_COMPLETE``) is discarded and retaken. Falls back to
@@ -515,26 +734,7 @@ def ensure_tables(
         _ensure_db(spark, db)
         # per-table existence probes (~4ms each) instead of listTables
         # (~230ms: it materializes full table metadata through py4j)
-        have = {
-            t for t in tables if spark.catalog.tableExists(f"{db}.{t}")
-        }
-        if set(tables) <= have and _columns_ok(spark, db, tables, expect):
-            return "reused"
-        loc = db_location(spark, db)
-        path = loc.removeprefix("file:")
-        registered = have & set(tables)
-        for t in tables:
-            if t in registered:
-                continue
-            tdir = os.path.join(path, t)
-            if os.path.isdir(tdir) and any(
-                f.endswith(".parquet") for f in os.listdir(tdir)
-            ):
-                spark.sql(
-                    f"CREATE TABLE {db}.{t} USING parquet LOCATION '{loc}/{t}'"
-                )
-                registered.add(t)
-        if registered == set(tables) and _columns_ok(
+        if all(_adopt(spark, db, t) for t in tables) and _columns_ok(
             spark, db, tables, expect
         ):
             return "reused"

@@ -5,7 +5,7 @@ one driver process, but :func:`index_store.ensure_tables`'s
 location-adoption contract explicitly invites a SECOND process onto the
 same warehouse — the production shape where scheduled index maintenance
 (compaction folds, IVF retrains, GC) runs alongside admission jobs.
-Two concurrent WRITERS could interleave a fold's copy/truncate or
+Two concurrent WRITERS could interleave a fold's move/clear or
 clear/saveAsTable windows and lose admitted rows (VERDICT r9 #2). This
 module closes that with a filesystem lease; READS stay lock-free (the
 fold orderings guarantee a reader sees at-worst duplicate index rows,
@@ -38,8 +38,9 @@ Protocol (per index database directory):
 
 Reentrant per THREAD: the module keeps a thread-local registry of held
 leases so a fold invoked by an admission that already holds the lease
-(the ``maybe_auto_compact`` path) nests instead of self-deadlocking —
-mirroring ``catalog_lock``'s RLock semantics one level up. Sibling
+(the ``index_store.maybe_fold_delta`` path) nests instead of
+self-deadlocking — mirroring ``catalog_lock``'s RLock semantics one
+level up. Sibling
 threads are NOT nested into each other's leases; they contend through
 the normal acquire path under distinct ``host:pid:tid`` owners.
 """

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import register
-from .util import local_empty_df, local_rows_df
+from .util import local_rows_df
 from ..sources.registry import register_sources
 
 TOP_K = 10
@@ -2285,8 +2285,9 @@ def _train_centroids(spark: SparkSession, sf_dir: str) -> list:
     """Final round-{KMEANS_TRAIN_ROUNDS} Lloyd centroids (k={KMEANS_K},
     deterministic lowest-vec_id init) — the emb_kmeans_train loop minus
     the trajectory bookkeeping; per round one scan + k x 64 collect."""
-    e = _kmeans_wide(_emb(spark, sf_dir).select("vec_id", "emb")).persist()
-    try:
+    with _refcounted_persist(
+        _kmeans_wide(_emb(spark, sf_dir).select("vec_id", "emb"))
+    ) as e:
         cents = [
             (int(r["vec_id"]), [float(x) for x in r["emb"]])
             for r in e.filter(F.col("vec_id") < KMEANS_K)
@@ -2310,8 +2311,6 @@ def _train_centroids(spark: SparkSession, sf_dir: str) -> list:
                 ] = float(row["m"])
             cents = sorted(by_cid.items())
         return cents
-    finally:
-        e.unpersist()
 
 
 def build_ivf_index(
@@ -2438,19 +2437,6 @@ def sim_ivf_trained_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _serve_ivf_index(spark, db, e)
 
 
-def _ivf_assign(spark: SparkSession, db: str) -> DataFrame:
-    """The index's serving-assignment relation, with erased vectors
-    subtracted: a ``tombstones`` table (written by
-    :func:`forget_ivf_vectors`) anti-joins out of every read — the same
-    Iceberg-delete-file overlay the near-dup index carries. Indexes
-    that never forget skip the anti-join entirely."""
-    assign = spark.table(f"{db}.assign")
-    if spark.catalog.tableExists(f"{db}.tombstones"):
-        tombs = spark.table(f"{db}.tombstones").select("vec_id").distinct()
-        assign = assign.join(F.broadcast(tombs), "vec_id", "left_anti")
-    return assign
-
-
 def _serve_ivf_index(spark: SparkSession, db: str, e: DataFrame) -> DataFrame:
     """Query-side IVF serving over a persisted index database: k-row
     centroid ranking ON THE DRIVER, the chosen nprobe cids pushed into
@@ -2470,6 +2456,8 @@ def _serve_ivf_index(spark: SparkSession, db: str, e: DataFrame) -> DataFrame:
     runtime semi-join (pinned by tests/test_plans.py)."""
     import math as _math
 
+    from .index_store import read_live
+
     qv = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("emb").head()[0]
     q_lit = F.array(*[F.lit(float(x)) for x in qv])
     qn = _math.sqrt(sum(x * x for x in qv))
@@ -2484,7 +2472,9 @@ def _serve_ivf_index(spark: SparkSession, db: str, e: DataFrame) -> DataFrame:
             (-(dot / nrm) if nrm != 0.0 else _math.inf, int(r["cid"]))
         )
     cids = [cid for _, cid in sorted(scored)[:IVF_NPROBE]]
-    cand = _ivf_assign(spark, db).filter(F.col("cid").isin(cids))
+    # tombstoned vectors (the erasure overlay) vanish from serving
+    (assign,) = read_live(spark, db, ("assign",), "vec_id")
+    cand = assign.filter(F.col("cid").isin(cids))
     return (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(cand, "vec_id", "left_semi")
@@ -2496,94 +2486,6 @@ def _serve_ivf_index(spark: SparkSession, db: str, e: DataFrame) -> DataFrame:
         .orderBy(F.col("cosine").desc(), "vec_id")
         .limit(TOP_K)
     )
-
-
-def forget_ivf_vectors(spark: SparkSession, db: str, vec_ids) -> int:
-    """Targeted erasure from the persisted IVF index (the embedding-side
-    right-to-be-forgotten): append vec_ids to ``<db>.tombstones``; every
-    serving read subtracts them immediately (:func:`_ivf_assign`), and
-    :func:`compact_ivf_index` folds them into an assignment rewrite.
-    Centroids are deliberately NOT retrained — erasure latency is one
-    O(|forgotten|) append; accumulated drift is the retrain trigger's
-    business, not the erasure path's. Idempotent (left_anti append).
-    """
-    from ..catalog import catalog_lock
-
-    from .index_store import ensure_tables
-
-    if not isinstance(vec_ids, DataFrame):
-        vec_ids = local_rows_df(spark, 
-            [(int(i),) for i in vec_ids], "vec_id bigint"
-        )
-    ids = vec_ids.selectExpr("CAST(vec_id AS BIGINT) AS vec_id").distinct()
-
-    def _build_empty() -> None:
-        local_empty_df(spark, "vec_id bigint").write.format(
-            "parquet"
-        ).saveAsTable(f"{db}.tombstones")
-
-    from .lease import maintenance_lease
-
-    # lease: see forget_near_dup_docs — an unleased append racing a
-    # concurrent fold's tombstone truncate would lose the erasure
-    with catalog_lock, maintenance_lease(spark, db) as lease:
-        ensure_tables(
-            spark,
-            db,
-            ("tombstones",),
-            _build_empty,
-            expect={"tombstones": ("vec_id",)},
-        )
-        fresh = (
-            ids.join(spark.table(f"{db}.tombstones"), "vec_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n = fresh.count()
-        if n:
-            lease.check()  # fence the tombstone append (ADVICE r10)
-            fresh.write.format("parquet").mode("append").saveAsTable(
-                f"{db}.tombstones"
-            )
-            spark.catalog.refreshTable(f"{db}.tombstones")
-        return n
-
-
-def compact_ivf_index(spark: SparkSession, db: str) -> dict:
-    """Fold tombstones into the assignment relation: rewrite assign
-    MINUS the erased ids, then truncate the tombstone set. Read-through
-    (serving anti-joins tombstones on every probe, so rewrite-before-
-    truncate never changes the logical index; a crash between the steps
-    leaves tombstones for already-removed rows — a no-op), and the
-    rewrite is crash-durable via ``staged_overwrite`` (kept rows fully
-    staged before the live table is touched; ``recover_staged`` replays
-    an interrupted swap). At 100 TB the rewrite is partition-scoped:
-    assign is partitioned by cid (the inverted list), and only lists
-    holding erased ids rewrite. Runs under the index's cross-process
-    maintenance lease, fenced before the swap."""
-    from ..catalog import catalog_lock
-
-    from .index_store import recover_staged, staged_overwrite
-    from .lease import maintenance_lease
-
-    with catalog_lock, maintenance_lease(spark, db) as lease:
-        recover_staged(spark, db, ("assign",))
-        n_tombs = 0
-        if spark.catalog.tableExists(f"{db}.tombstones"):
-            tombs = (
-                spark.table(f"{db}.tombstones").select("vec_id").distinct()
-            )
-            n_tombs = tombs.count()
-            if n_tombs:
-                lease.check()  # fence before the staged swap
-                kept = spark.table(f"{db}.assign").join(
-                    F.broadcast(tombs), "vec_id", "left_anti"
-                )
-                staged_overwrite(spark, db, "assign", kept)
-                lease.renew()
-                lease.check()  # fence at the truncation itself (r10)
-                spark.sql(f"TRUNCATE TABLE {db}.tombstones")
-                spark.catalog.refreshTable(f"{db}.tombstones")
-        return {"tombstones_folded": n_tombs}
 
 
 IVF_FORGET_MOD = 9  # vec_id % 9 == 4 -> the erased slice (never the query vec)
@@ -2605,15 +2507,19 @@ def sim_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     The index lives in its own ``_fg``-suffixed database so erasure
     state never contaminates sim_ivf_trained_indexed's shared artifact;
     repeat invocations re-apply the forget set idempotently and hit the
-    bootstrap's 'reused' path. Scale: see forget_ivf_vectors /
-    compact_ivf_index — O(|forgotten|) request path, fold at
-    maintenance, broadcast-sized tombstones between compactions.
+    bootstrap's 'reused' path. Scale: see ``index_store.forget`` /
+    ``index_store.fold_tombstones`` — O(|forgotten|) request path, fold
+    at maintenance, broadcast-sized tombstones between compactions.
+    Centroids are deliberately NOT retrained: accumulated drift is the
+    retrain trigger's business, not the erasure path's.
     """
+    from .index_store import forget
+
     db = _ivf_index_db(sf_dir) + "_fg"
     build_ivf_index(spark, sf_dir, db=db)
     e = _emb(spark, sf_dir)
     erase = e.filter(F.col("vec_id") % IVF_FORGET_MOD == 4).select("vec_id")
-    forget_ivf_vectors(spark, db, erase)
+    forget(spark, db, "vec_id", erase)
     return _serve_ivf_index(spark, db, e)
 
 
@@ -2674,7 +2580,7 @@ def stream_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     a-stream across all three index families ({exact, near-dup, IVF} x
     {batch gate, streaming gate, batch erasure, STREAMING erasure}):
     vector forget waves arrive as micro-batches, each wave's vec_ids
-    join the tombstone overlay (:func:`forget_ivf_vectors`, centroids
+    join the tombstone overlay (:func:`index_store.forget`, centroids
     frozen, assignment not rewritten), and the standard top-{TOP_K}
     query is served between waves — each wave's vectors invisible to
     the very next serve. Emits (batch_id, vec_id, cosine) per wave.
@@ -2684,24 +2590,11 @@ def stream_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     start. Scale: per wave, one O(|wave|) append + one nprobe-bounded
     serve through the broadcast anti-join.
     """
-    from ..catalog import catalog_lock
-
-    from .index_store import clear_tables, scratch_dir
+    from .index_store import forget, reset_scratch, scratch_dir
 
     db = _ivf_index_db(sf_dir) + "_fgs"
     build_ivf_index(spark, sf_dir, db=db)
-    with catalog_lock:
-        if spark.catalog.tableExists(f"{db}.tombstones") and (
-            spark.catalog.getTable(f"{db}.tombstones").tableType
-            != "EXTERNAL"
-        ):
-            spark.sql(f"TRUNCATE TABLE {db}.tombstones")
-            spark.catalog.refreshTable(f"{db}.tombstones")
-        else:
-            clear_tables(spark, db, ("tombstones",))
-            local_empty_df(spark, "vec_id bigint").write.format(
-                "parquet"
-            ).saveAsTable(f"{db}.tombstones")
+    reset_scratch(spark, db, {"tombstones": "vec_id bigint"})
     stage = _stage_ivf_forget_requests(spark, sf_dir)
     out_dir = scratch_dir(
         "ivf_forget_serves", sf_dir, ("embeddings.parquet",), fresh=True
@@ -2709,7 +2602,7 @@ def stream_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
 
     def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        forget_ivf_vectors(spark, db, batch_df.select("vec_id"))
+        forget(spark, db, "vec_id", batch_df.select("vec_id"))
         (
             _serve_ivf_index(spark, db, e)
             .withColumn("batch_id", F.lit(int(batch_id)).cast("int"))
@@ -2930,6 +2823,8 @@ def sim_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (build_ivf_base_index with fresh data) is the production
     counterpart, same code path.
     """
+    from .index_store import read_live
+
     build_ivf_base_index(spark, sf_dir)
     upsert_ivf_vectors(spark, sf_dir)
     db = _ivf_index_db(sf_dir) + "_up"
@@ -2944,9 +2839,8 @@ def sim_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(IVF_NPROBE)
         .select("cid")
     )
-    cand = _ivf_assign(spark, db).join(
-        F.broadcast(probes), "cid", "left_semi"
-    )
+    (assign,) = read_live(spark, db, ("assign",), "vec_id")
+    cand = assign.join(F.broadcast(probes), "cid", "left_semi")
     return (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .join(cand, "vec_id", "left_semi")
@@ -3703,7 +3597,7 @@ def maybe_retrain_ivf(
 ) -> dict:
     """POLICY gate closing the trigger->execute loop (VERDICT r9 #5) —
     the vector-side analogue of the dedup side's LSM trigger
-    (:func:`dedup.maybe_auto_compact`): measure the GLOBAL churn
+    (:func:`index_store.maybe_fold_delta`): measure the GLOBAL churn
     fraction the drift dashboard reports (what fraction of the corpus
     would change inverted lists under one Lloyd refresh over the
     current corpus) and EXECUTE :func:`retrain_ivf_index` only when it
@@ -4395,7 +4289,7 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     Layering mirrors the document gates: the trained base (owned
     split) is built/adopted once under ``_svb`` via the shared
     bootstrap; per-run admissions land in a ``_svd`` delta scratch
-    (truncated or recreated each invocation), so repeat runs are
+    (emptied or created each invocation), so repeat runs are
     deterministic and the batch upsert query's ``_up`` artifact is
     never touched.
 
@@ -4404,36 +4298,13 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe-bounded probe over the layered assignment relation.
     Verdicts are sink-written, never collected.
     """
-    import os
-
-    from ..catalog import catalog_lock
-
-    from .index_store import clear_tables
+    from .index_store import read_live, reset_scratch, scratch_dir
 
     base_db = _ivf_index_db(sf_dir) + "_svb"
     delta_db = _ivf_index_db(sf_dir) + "_svd"
     stage = _stage_ivf_arrivals(spark, sf_dir)
     build_ivf_base_index(spark, sf_dir, db=base_db)
-    with catalog_lock:
-        from .index_store import _ensure_db
-
-        _ensure_db(spark, delta_db)
-        have = (  # per-table probe, not listTables (~230ms vs ~4ms)
-            {"assign"}
-            if spark.catalog.tableExists(f"{delta_db}.assign")
-            else set()
-        )
-        if "assign" in have and (
-            spark.catalog.getTable(f"{delta_db}.assign").tableType
-            != "EXTERNAL"
-        ):
-            spark.sql(f"TRUNCATE TABLE {delta_db}.assign")
-            spark.catalog.refreshTable(f"{delta_db}.assign")
-        else:
-            clear_tables(spark, delta_db, ("assign",))
-            local_empty_df(spark, "vec_id bigint, cid int").write.format(
-                "parquet"
-            ).saveAsTable(f"{delta_db}.assign")
+    reset_scratch(spark, delta_db, {"assign": "vec_id bigint, cid int"})
 
     cents = [
         (int(r["cid"]), [float(x) for x in r["cv"]])
@@ -4445,8 +4316,6 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic fingerprint-keyed sink, cleared at run start: the
     # prior run's directory is reused in place instead of leaking one
     # uuid-named dir per invocation (ADVICE r8)
-    from .index_store import scratch_dir
-
     out_dir = scratch_dir(
         "ivf_serve", sf_dir, ("embeddings.parquet",), fresh=True
     )
@@ -4471,8 +4340,8 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(IVF_NPROBE)
             .select("cid")
         )
-        assign_all = spark.table(f"{base_db}.assign").unionByName(
-            spark.table(f"{delta_db}.assign")
+        (assign_all,) = read_live(
+            spark, (base_db, delta_db), ("assign",), "vec_id"
         )
         cand = assign_all.join(F.broadcast(probes), "cid", "left_semi")
         (

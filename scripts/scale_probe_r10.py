@@ -17,7 +17,7 @@ Per multiple the probe measures:
   auto_comp cold/warm  dedup_near_auto_compacted — the two-batch
                     admission with the mid-run LSM fold (+ per-run
                     depollute on the warm path)
-  trigger           maybe_auto_compact's below-threshold path on the
+  trigger           maybe_fold_delta's below-threshold path on the
                     _ac pair: TWO table row counts (at scale a
                     parquet-footer metadata read) — the cost every
                     admission pays when the fold does NOT fire
@@ -48,6 +48,9 @@ from _probe_common import stage  # noqa: E402
 
 from dbt_bigquery_udf_spark import get_spark  # noqa: E402
 from dbt_bigquery_udf_spark.operators import dedup as D  # noqa: E402
+from dbt_bigquery_udf_spark.operators.index_store import (  # noqa: E402
+    maybe_fold_delta,
+)
 from dbt_bigquery_udf_spark.queries import QUERIES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
@@ -111,7 +114,8 @@ def main() -> None:
             for _ in range(2):
                 t0 = time.perf_counter()
                 assert (
-                    D.maybe_auto_compact(spark, base, base + "d") is None
+                    maybe_fold_delta(spark, base, base + "d", D._NEAR_IDX_TABLES)
+                    is None
                 )
                 dt = time.perf_counter() - t0
                 best = dt if best is None or dt < best else best

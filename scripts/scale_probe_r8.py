@@ -43,25 +43,16 @@ from dbt_bigquery_udf_spark.operators.dedup import (  # noqa: E402
     _doc_signatures,
     _docs,
     _near_index_db,
+    _NEAR_IDX_TABLES,
     _score_batch_vs_index,
-    compact_near_dup_index,
     dedup_index_forget,
-    forget_near_dup_docs,
+)
+from dbt_bigquery_udf_spark.operators.index_store import (  # noqa: E402
+    fold_tombstones,
+    forget,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-
-
-def _empty_delta(spark, db: str) -> str:
-    delta = db + "_cd"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {delta}")
-    spark.createDataFrame([], "doc_id bigint, hs array<bigint>").write.format(
-        "parquet"
-    ).mode("overwrite").saveAsTable(f"{delta}.sigs")
-    spark.createDataFrame(
-        [], "doc_id bigint, band int, key string"
-    ).write.format("parquet").mode("overwrite").saveAsTable(f"{delta}.bands")
-    return delta
 
 
 def main() -> None:
@@ -108,19 +99,15 @@ def main() -> None:
                 .filter(F.col("doc_id") % INCR_NEAR_MOD == INCR_IDX_FORGET)
                 .select("doc_id")
             )
-            t("forget replay", lambda: forget_near_dup_docs(spark, db, ids))
-            delta = _empty_delta(spark, db)
+            t("forget replay", lambda: forget(spark, db, "doc_id", ids))
             t(
                 "compact fold",
-                lambda: compact_near_dup_index(spark, db, delta)[
-                    "tombstones_folded"
-                ],
+                lambda: fold_tombstones(spark, db, _NEAR_IDX_TABLES, "doc_id"),
             )
-            # post-fold scoring: tombstones truncated, anti-join sees an
+            # post-fold scoring: tombstones emptied, anti-join sees an
             # empty broadcast — the steady-state no-overlay cost
             t("folded score", score)
-            for x in (db, delta):
-                spark.sql(f"DROP DATABASE IF EXISTS {x} CASCADE")
+            spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
             _STAGE_MEMO.clear()
             spark.catalog.clearCache()
     finally:

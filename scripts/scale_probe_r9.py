@@ -7,7 +7,7 @@ times the per-batch admission probe (signature-ize + score batch 2
 against the layered index — the read path every arriving batch pays):
 
   1. pre-fold:  delta bloated with batch 1's survivors (base UNION delta)
-  2. the size-ratio trigger fires (maybe_auto_compact, default ratio)
+  2. the size-ratio trigger fires (index_store.maybe_fold_delta)
   3. post-fold: same probe against (compacted base, empty delta)
 
 Prints one JSON line with minima over N reps plus the fold cost.
@@ -38,6 +38,7 @@ def main() -> None:
         .getOrCreate()
     )
     from dbt_bigquery_udf_spark.operators import dedup as D
+    from dbt_bigquery_udf_spark.operators.index_store import maybe_fold_delta
     from dbt_bigquery_udf_spark.session import apply_engine_confs
 
     apply_engine_confs(spark)
@@ -83,7 +84,7 @@ def main() -> None:
     # explicit ratio: the batch-1 overlay sits at ~0.17x the base here
     # (one arriving split vs five owned splits), under the conservative
     # 0.5 default — the probe wants the fold to fire NOW
-    fold = D.maybe_auto_compact(spark, base, delta, ratio=0.1)
+    fold = maybe_fold_delta(spark, base, delta, D._NEAR_IDX_TABLES, ratio=0.1)
     fold_s = time.perf_counter() - t0
     assert fold is not None, "ratio=0.1 should have fired here"
     post = [probe_once((base, delta)) for _ in range(REPS)]

@@ -1488,6 +1488,7 @@ def test_near_dup_index_compaction(spark, sf_small):
     from pyspark.sql import functions as F
 
     from dbt_bigquery_udf_spark.operators import dedup as D
+    from dbt_bigquery_udf_spark.operators.index_store import fold_delta
     from dbt_bigquery_udf_spark.queries import QUERIES
 
     # run the streaming gate once to populate base + delta
@@ -1510,8 +1511,8 @@ def test_near_dup_index_compaction(spark, sf_small):
             ).collect(),
         )
     )
-    moved = D.compact_near_dup_index(spark, base, delta)
-    assert moved["sigs_moved"] == n_delta
+    moved = fold_delta(spark, base, delta, D._NEAR_IDX_TABLES)
+    assert moved["sigs"] == n_delta
     assert spark.table(f"{delta}.sigs").count() == 0
     assert spark.table(f"{base}.sigs").count() == n_base + n_delta
     after = sorted(
@@ -1524,7 +1525,7 @@ def test_near_dup_index_compaction(spark, sf_small):
     )
     assert before == after
     # idempotent: compacting an empty delta moves nothing
-    assert D.compact_near_dup_index(spark, base, delta)["sigs_moved"] == 0
+    assert fold_delta(spark, base, delta, D._NEAR_IDX_TABLES)["sigs"] == 0
     # leave the stream's state consistent for other tests: the gate
     # rebuilds its delta per invocation anyway, but drop the mutated
     # base so the next invocation rebuilds it cleanly
@@ -1541,6 +1542,7 @@ def test_near_dup_auto_compaction_policy(spark, sf_small):
     from pyspark.sql import functions as F
 
     from dbt_bigquery_udf_spark.operators import dedup as D
+    from dbt_bigquery_udf_spark.operators.index_store import maybe_fold_delta
 
     def _mk_pair(tag):
         base = D._near_index_db(sf_small) + tag
@@ -1611,7 +1613,7 @@ def test_near_dup_auto_compaction_policy(spark, sf_small):
         auto_compact_ratio=10.0,
     )
     assert spark.table(f"{hd}.sigs").count() > 0
-    assert D.maybe_auto_compact(spark, hb, hd, ratio=10.0) is None
+    assert maybe_fold_delta(spark, hb, hd, D._NEAR_IDX_TABLES, ratio=10.0) is None
 
     for db in (cb, cd, ab, ad, hb, hd):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
@@ -1621,12 +1623,17 @@ def test_exact_auto_compaction_and_duplicate_tolerance(spark, sf_small):
     """The exact gate's LSM sibling: the size-ratio trigger folds the
     delta hash overlay into the base mid-stream with verdicts identical
     to an uncompacted control; and the probe is DUPLICATE-TOLERANT —
-    a hash sitting in BOTH layers (compact_exact_index's crash window)
-    still yields one verdict row per doc with unchanged values, and the
-    replayed fold completes without re-appending."""
+    a hash sitting in BOTH layers (state written outside the admission
+    protocol) still yields one verdict row per doc with unchanged
+    values, before and after a fold, and the fold preserves the
+    base ∪ delta multiset."""
     from pyspark.sql import functions as F
 
     from dbt_bigquery_udf_spark.operators import dedup as D
+    from dbt_bigquery_udf_spark.operators.index_store import (
+        fold_delta,
+        reset_scratch,
+    )
 
     def _mk_pair(tag):
         base = D._exact_index_db(sf_small) + tag
@@ -1676,14 +1683,12 @@ def test_exact_auto_compaction_and_duplicate_tolerance(spark, sf_small):
     )
     assert auto0 == ctl0 and auto1 == ctl1
 
-    # crash-window duplicate tolerance: replay batch 1's hashes into
-    # the delta WITHOUT truncating (a fold interrupted mid-way), then
-    # probe batch 2 — one row per doc, values equal the clean control
+    # duplicate tolerance: batch 1 admitted and folded, then its
+    # hashes written into the delta again, so every one of them now
+    # exists in BOTH layers
     db_b, db_d = _mk_pair("_xdup")
     D._admit_exact_batch_df(spark, (db_b, db_d), _batch(D.INCR_IDX_BATCH1), db_d)
-    D.compact_exact_index(spark, db_b, db_d)
-    # re-insert the folded overlay rows into the delta: every one of
-    # these hashes now exists in BOTH layers (the interrupted-fold state)
+    fold_delta(spark, db_b, db_d, ("hashes",))
     folded = (
         D._docs(spark, sf_small)
         .filter(F.col("doc_id") % D.INCR_NEAR_MOD == D.INCR_IDX_BATCH1)
@@ -1695,28 +1700,32 @@ def test_exact_auto_compaction_and_duplicate_tolerance(spark, sf_small):
         f"{db_d}.hashes"
     )
     spark.catalog.refreshTable(f"{db_d}.hashes")
-    dup_verdicts = D._admit_exact_batch_df(
-        spark, (db_b, db_d), _batch(D.INCR_IDX_BATCH2), db_d
-    )
-    got = _verdicts(dup_verdicts)
-    assert got == ctl1  # same one-row-per-doc verdicts despite dup state
-    # the replayed fold completes the truncation without re-appending
-    n_base_before = spark.table(f"{db_b}.hashes").count()
-    stats = D.compact_exact_index(spark, db_b, db_d)
-    # batch-2 admissions are genuinely new (moved); the re-inserted
-    # batch-1 duplicates must NOT move again
-    assert spark.table(f"{db_d}.hashes").count() == 0
-    n_new_b2 = sum(1 for (_, is_dup, h) in got if not is_dup and h is not None)
-    assert stats["hashes_moved"] <= n_new_b2
-    assert (
-        spark.table(f"{db_b}.hashes").count()
-        == n_base_before + stats["hashes_moved"]
-    )
-    # base stays duplicate-free after the fold
-    n_all = spark.table(f"{db_b}.hashes").count()
-    assert spark.table(f"{db_b}.hashes").distinct().count() == n_all
+    side = db_b + "p"
 
-    for db in (cb, cd, ab, ad, db_b, db_d):
+    def _probe_b2():
+        # batch 2's new hashes go to a side table, so the layered state
+        # under test stays exactly the duplicated one
+        reset_scratch(spark, side, {"hashes": "h string"})
+        return _verdicts(
+            D._admit_exact_batch_df(
+                spark, (db_b, db_d), _batch(D.INCR_IDX_BATCH2), side
+            )
+        )
+
+    def _state():
+        return sorted(
+            r.h for db in (db_b, db_d) for r in spark.table(f"{db}.hashes").collect()
+        )
+
+    # same one-row-per-doc verdicts despite the duplicated state
+    assert _probe_b2() == ctl1
+    before = _state()
+    fold_delta(spark, db_b, db_d, ("hashes",))
+    assert spark.table(f"{db_d}.hashes").count() == 0
+    assert _state() == before  # the fold preserves base ∪ delta
+    assert _probe_b2() == ctl1  # and the verdicts re-probed after it
+
+    for db in (cb, cd, ab, ad, db_b, db_d, side):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
@@ -1835,9 +1844,19 @@ def test_persisted_index_warm_warehouse_cycle(spark, sf_small, which):
     entries while keeping the parquet (what a brand-new session sees),
     and verify the bootstrap ADOPTS the files — instead of crashing
     with LOCATION_ALREADY_EXISTS (the round-7 driver-bench killer) or
-    silently rebuilding — and that the served results are unchanged."""
+    silently rebuilding — and that the served results are unchanged.
+    Families with a fold then wipe the catalog once more and fold: the
+    fold must adopt the tombstones or delta it finds on disk, fold all
+    of them, and leave them empty (EXTERNAL tables reject TRUNCATE)."""
+    import os
+
     from dbt_bigquery_udf_spark.operators import dedup as D
     from dbt_bigquery_udf_spark.operators import similarity as S
+    from dbt_bigquery_udf_spark.operators.index_store import (
+        db_location,
+        fold_delta,
+        fold_tombstones,
+    )
     from dbt_bigquery_udf_spark.queries import QUERIES
 
     if which == "near":
@@ -1869,7 +1888,7 @@ def test_persisted_index_warm_warehouse_cycle(spark, sf_small, which):
     elif which == "forget":
         # the erasure index: bands/sigs adopt like the shared near-dup
         # artifact, and the TOMBSTONES table adopts through the same
-        # shared bootstrap inside forget_near_dup_docs
+        # shared bootstrap inside index_store.forget
         dbs = [D._near_index_db(sf_small) + "_fg"]
         query, reuse = "dedup_index_forget", (
             lambda: D.build_near_dup_index(spark, sf_small, db=dbs[0])
@@ -1983,6 +2002,35 @@ def test_persisted_index_warm_warehouse_cycle(spark, sf_small, which):
     # replay appended nothing: every persisted table is unchanged
     for name, n in counts.items():
         assert spark.table(name).count() == n, name
+
+    # the family's fold over a warm warehouse: (db, tables) whose rows
+    # on disk it must fold, and the fold itself
+    folds = {
+        "forget": (dbs[0], ("tombstones",), lambda: fold_tombstones(
+            spark, dbs[0], D._NEAR_IDX_TABLES, "doc_id")),
+        "exact_forget": (dbs[0], ("tombstones",), lambda: fold_tombstones(
+            spark, dbs[0], ("doc_hashes",), "doc_id")),
+        "ivf_forget": (dbs[0], ("tombstones",), lambda: fold_tombstones(
+            spark, dbs[0], ("assign",), "vec_id")),
+        "stream_layers": (dbs[-1], D._NEAR_IDX_TABLES, lambda: fold_delta(
+            spark, dbs[0], dbs[1], D._NEAR_IDX_TABLES)),
+    }
+    if which in folds:
+        db, tables, fold = folds[which]
+        path = db_location(spark, db).removeprefix("file:")
+        on_disk = {
+            t: spark.read.parquet(os.path.join(path, t)).count() for t in tables
+        }
+        assert all(on_disk.values()), on_disk
+        for d in dbs:
+            _wipe_catalog_keep_files(spark, d)
+        folded = fold()
+        if which == "stream_layers":
+            assert folded == on_disk
+        else:
+            assert folded == on_disk["tombstones"]
+        for t in tables:
+            assert spark.table(f"{db}.{t}").count() == 0, t
     for db in dbs:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
@@ -2131,6 +2179,12 @@ def test_near_dup_index_forget_lifecycle(spark, sf_small):
     from dbt_bigquery_udf_spark.operators import dedup as D
     from dbt_bigquery_udf_spark.queries import QUERIES
 
+    from dbt_bigquery_udf_spark.operators.index_store import (
+        fold_tombstones,
+        forget,
+        read_live,
+    )
+
     db = D._near_index_db(sf_small) + "_fg"
     _drop_index_db(spark, db)
     verdicts = sorted(
@@ -2143,7 +2197,7 @@ def test_near_dup_index_forget_lifecycle(spark, sf_small):
         .count()
     )
     assert erased > 0
-    bands, sigs = D._index_relations(spark, db)
+    bands, sigs = read_live(spark, db, ("bands", "sigs"), "doc_id")
     assert (
         sigs.filter(F.col("doc_id") % D.INCR_NEAR_MOD == D.INCR_IDX_FORGET)
         .count()
@@ -2160,7 +2214,7 @@ def test_near_dup_index_forget_lifecycle(spark, sf_small):
         .filter(F.col("doc_id") % D.INCR_NEAR_MOD == D.INCR_IDX_FORGET)
         .select("doc_id")
     )
-    assert D.forget_near_dup_docs(spark, db, ids) == 0
+    assert forget(spark, db, "doc_id", ids) == 0
     n_sigs_before = spark.table(f"{db}.sigs").count()
     # raw-table rows for the erased slice (unsignaturable docs never had
     # a sigs row, so the physical shrink is bounded by this, not erased)
@@ -2170,16 +2224,7 @@ def test_near_dup_index_forget_lifecycle(spark, sf_small):
         .count()
     )
     # compaction folds the tombstones: physical rows drop, verdicts don't
-    delta = db + "_cd"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {delta}")
-    spark.createDataFrame([], "doc_id bigint, hs array<bigint>").write.format(
-        "parquet"
-    ).saveAsTable(f"{delta}.sigs")
-    spark.createDataFrame(
-        [], "doc_id bigint, band int, key string"
-    ).write.format("parquet").saveAsTable(f"{delta}.bands")
-    stats = D.compact_near_dup_index(spark, db, delta)
-    assert stats["tombstones_folded"] == erased
+    assert fold_tombstones(spark, db, D._NEAR_IDX_TABLES, "doc_id") == erased
     assert spark.table(f"{db}.tombstones").count() == 0
     assert (
         spark.table(f"{db}.sigs").count()
@@ -2189,7 +2234,6 @@ def test_near_dup_index_forget_lifecycle(spark, sf_small):
         map(tuple, QUERIES["dedup_index_forget"](spark, sf_small).collect())
     )
     assert v_after == verdicts
-    spark.sql(f"DROP DATABASE IF EXISTS {delta} CASCADE")
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
@@ -2202,6 +2246,11 @@ def test_ivf_index_forget_lifecycle(spark, sf_small):
     from pyspark.sql import functions as F
 
     from dbt_bigquery_udf_spark.operators import similarity as S
+    from dbt_bigquery_udf_spark.operators.index_store import (
+        fold_tombstones,
+        forget,
+        read_live,
+    )
     from dbt_bigquery_udf_spark.queries import QUERIES
 
     db = S._ivf_index_db(sf_small) + "_fg"
@@ -2220,25 +2269,20 @@ def test_ivf_index_forget_lifecycle(spark, sf_small):
     # no served result may be an erased vector
     assert not {v for v, _ in served} & erased_ids
     # the serving relation really subtracts them
-    assert (
-        S._ivf_assign(spark, db)
-        .filter(F.col("vec_id") % S.IVF_FORGET_MOD == 4)
-        .count()
-        == 0
-    )
+    (assign,) = read_live(spark, db, ("assign",), "vec_id")
+    assert assign.filter(F.col("vec_id") % S.IVF_FORGET_MOD == 4).count() == 0
     # idempotent replay
     ids = spark.createDataFrame(
         [(int(i),) for i in erased_ids], "vec_id bigint"
     )
-    assert S.forget_ivf_vectors(spark, db, ids) == 0
+    assert forget(spark, db, "vec_id", ids) == 0
     n_assign = spark.table(f"{db}.assign").count()
     n_erased_rows = (
         spark.table(f"{db}.assign")
         .filter(F.col("vec_id") % S.IVF_FORGET_MOD == 4)
         .count()
     )
-    stats = S.compact_ivf_index(spark, db)
-    assert stats["tombstones_folded"] == len(erased_ids)
+    assert fold_tombstones(spark, db, ("assign",), "vec_id") == len(erased_ids)
     assert spark.table(f"{db}.tombstones").count() == 0
     assert spark.table(f"{db}.assign").count() == n_assign - n_erased_rows
     v_after = sorted(
@@ -2298,8 +2342,9 @@ def test_exact_forget_shared_hash_semantics(spark, tmp_path, sf_small):
     assert verdicts == {7: False, 14: True}
     db = D._exact_index_db(root) + "_fg"
     # fold + invariance + idempotent re-forget
-    stats = D.compact_exact_forget_index(spark, db)
-    assert stats["tombstones_folded"] == 2
+    from dbt_bigquery_udf_spark.operators.index_store import fold_tombstones
+
+    assert fold_tombstones(spark, db, ("doc_hashes",), "doc_id") == 2
     assert spark.table(f"{db}.doc_hashes").count() == 2  # docs 4 and 2
     verdicts2 = {
         r["doc_id"]: r["is_dup"]

@@ -7,8 +7,8 @@ in-process reentrancy.
 Integration layer: TWO real driver processes (two JVMs, each with its
 own Derby metastore) sharing one warehouse — a maintainer folding the
 exact gate's layered hash state in a loop while this process drives
-admissions through ``_admit_exact_batch_df``. Without the lease the
-fold's copy→truncate window can discard admissions appended in between;
+admissions through ``_admit_exact_batch_df``. Without the lease a fold
+could interleave with an admission's probe and append and lose rows;
 the assertion is NO LOST ROWS: every hash ever admitted is present in
 base ∪ delta afterwards.
 """
@@ -90,7 +90,7 @@ def test_lease_reacquire_same_owner_and_renew(tmp_path):
 
 def test_maintenance_lease_reentrant_in_process(spark, tmp_path):
     """The contextmanager nests: a fold invoked by an admission that
-    already holds the lease (the maybe_auto_compact path) must not
+    already holds the lease (the maybe_fold_delta path) must not
     self-deadlock, and the lease releases only at the outermost exit."""
     from dbt_bigquery_udf_spark.operators.lease import maintenance_lease
 
@@ -109,8 +109,7 @@ _MAINTAINER = """\
 import sys, time
 sys.path.insert(0, {repo!r})
 from dbt_bigquery_udf_spark import get_spark
-from dbt_bigquery_udf_spark.operators.dedup import compact_exact_index
-from dbt_bigquery_udf_spark.operators.index_store import ensure_tables
+from dbt_bigquery_udf_spark.operators.index_store import ensure_tables, fold_delta
 
 base, delta, ready_file, n_folds = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
 spark = get_spark(app_name="lease-maintainer", cpus=4)
@@ -119,7 +118,7 @@ ensure_tables(spark, base, ("hashes",), boom, expect={{"hashes": ("h",)}})
 ensure_tables(spark, delta, ("hashes",), boom, expect={{"hashes": ("h",)}})
 open(ready_file, "w").write("ok")
 for _ in range(n_folds):
-    compact_exact_index(spark, base, delta)
+    fold_delta(spark, base, delta, ("hashes",))
     time.sleep(0.05)
 print("MAINTAINER_DONE", flush=True)
 spark.stop()
@@ -131,16 +130,16 @@ def test_cross_process_fold_vs_admission_no_lost_rows(spark, tmp_path):
     contract's own scenario (VERDICT r9 #2): a subprocess maintainer
     folds the layered exact-hash pair in a loop while this process
     admits batches. The lease serializes the writers; the invariant is
-    that no admitted hash is ever lost (the unleased failure mode: the
-    fold truncates the delta AFTER reading it, discarding a concurrent
+    that no admitted hash is ever lost (the unleased failure mode: a
+    fold clears the delta AFTER reading it, discarding a concurrent
     admission's append)."""
     from pyspark.sql import functions as F
 
-    from dbt_bigquery_udf_spark.operators.dedup import (
-        _admit_exact_batch_df,
-        compact_exact_index,
+    from dbt_bigquery_udf_spark.operators.dedup import _admit_exact_batch_df
+    from dbt_bigquery_udf_spark.operators.index_store import (
+        db_location,
+        fold_delta,
     )
-    from dbt_bigquery_udf_spark.operators.index_store import db_location
 
     base, delta = "t_lease2p_base", "t_lease2p_delta"
     for db in (base, delta):
@@ -201,7 +200,7 @@ def test_cross_process_fold_vs_admission_no_lost_rows(spark, tmp_path):
         if proc.poll() is None:
             proc.kill()
     # settle with one final fold, then assert nothing was lost
-    compact_exact_index(spark, base, delta)
+    fold_delta(spark, base, delta, ("hashes",))
     for db in (base, delta):
         spark.catalog.refreshTable(f"{db}.hashes")
     state = {
