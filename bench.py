@@ -204,12 +204,9 @@ HEADLINE = [n for n in HEADLINE if not _is_lifecycle(n)] + [
 _INDEX_DB_PREFIXES = ("dedup_near_idx_", "dedup_exact_idx_", "sim_ivf_idx_")
 
 
-def _fresh_indexes(spark) -> None:
-    """Drop every persisted-index database (catalog AND files): each
-    name under ``_INDEX_DB_PREFIXES`` that the catalog lists or that
-    only a warehouse directory still holds — the bench corpus' indexes
-    and those of corpora since regenerated (new fingerprint, new name),
-    so stale artifacts don't accumulate in the warehouse."""
+def _drop_databases(spark, names) -> None:
+    """Drop each database, catalog AND warehouse directory, and forget
+    its cached location."""
     import shutil
 
     from dbt_bigquery_udf_spark.operators.index_store import (
@@ -217,13 +214,23 @@ def _fresh_indexes(spark) -> None:
     )
 
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    dbs = {d.name for d in spark.catalog.listDatabases()}
-    if os.path.isdir(wh):
-        dbs |= {d.removesuffix(".db") for d in os.listdir(wh) if d.endswith(".db")}
-    for db in sorted(d for d in dbs if d.startswith(_INDEX_DB_PREFIXES)):
+    for db in names:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
         invalidate_db_location(db)
         shutil.rmtree(os.path.join(wh, db + ".db"), ignore_errors=True)
+
+
+def _fresh_indexes(spark) -> None:
+    """Drop every persisted-index database (catalog AND files): each
+    name under ``_INDEX_DB_PREFIXES`` that the catalog lists or that
+    only a warehouse directory still holds — the bench corpus' indexes
+    and those of corpora since regenerated (new fingerprint, new name),
+    so stale artifacts don't accumulate in the warehouse."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    dbs = {d.name for d in spark.catalog.listDatabases()}
+    if os.path.isdir(wh):
+        dbs |= {d.removesuffix(".db") for d in os.listdir(wh) if d.endswith(".db")}
+    _drop_databases(spark, sorted(d for d in dbs if d.startswith(_INDEX_DB_PREFIXES)))
 
 
 def _reset_epoch_dbs(spark) -> None:
@@ -235,19 +242,9 @@ def _reset_epoch_dbs(spark) -> None:
     epoch-1 lifecycle the oracles replay. The serving/admission index
     databases are deliberately kept (their adopt-vs-build split is the
     measurement; --fresh-indexes resets those)."""
-    import shutil
-
     from dbt_bigquery_udf_spark.operators import similarity as S
 
-    from dbt_bigquery_udf_spark.operators.index_store import (
-        invalidate_db_location,
-    )
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for db in (S._rt_db(SF_DIR), S._rt_db(SF_DIR) + "_e2"):
-        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
-        invalidate_db_location(db)
-        shutil.rmtree(os.path.join(wh, db + ".db"), ignore_errors=True)
+    _drop_databases(spark, (S._rt_db(SF_DIR), S._rt_db(SF_DIR) + "_e2"))
 
 
 def main() -> None:

@@ -35,7 +35,6 @@ execution time, which is exactly BigQuery's behavior (SURVEY.md §3 E3).
 
 from __future__ import annotations
 
-import os
 import re
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -1013,8 +1012,13 @@ class Engine:
                 #                     default; models/incremental.py).
                 # Incremental runs route through reconcile_schema first
                 # (dbt's on_schema_change).
+                from ..operators import index_store
+
                 target = f"{db}.{spec.relation_name}"
                 self._check_contract_sql(spec, body)
+                # a merge rewrite cut short is finished, not taken for a
+                # missing table (which would rebuild it from the body)
+                index_store.recover_staged(self.spark, db, (spec.relation_name,))
                 if spec.incremental_strategy == "microbatch":
                     # Owns its own first-run path (batch-by-batch from
                     # `begin`), so it never takes the CTAS below.
@@ -1028,20 +1032,9 @@ class Engine:
                         batch_size=spec.batch_size,
                         lookback=spec.lookback,
                         begin=spec.begin,
-                        clean_location=lambda: self._clean_stale_location(
-                            db, spec.relation_name
-                        ),
                     )
                 elif not self.spark.catalog.tableExists(target):
-                    self._clean_stale_location(db, spec.relation_name)
-                    part = (
-                        f" PARTITIONED BY ({', '.join(spec.partition_by)})"
-                        if spec.partition_by
-                        else ""
-                    )
-                    self.spark.sql(
-                        f"CREATE TABLE {target} USING parquet{part} AS {body}"
-                    )
+                    self._replace_table(spec, db, body)
                 else:
                     from .incremental import merge_upsert, reconcile_schema
 
@@ -1111,26 +1104,17 @@ class Engine:
                         )
                         batch.filter(match).write.insertInto(target)
                     else:  # insert_overwrite, dynamic partition mode
-                        prev_mode = self.spark.conf.get(
-                            "spark.sql.sources.partitionOverwriteMode", "static"
-                        )
-                        self.spark.conf.set(
-                            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                        )
-                        try:
-                            batch.write.insertInto(target, overwrite=True)
-                        finally:
-                            self.spark.conf.set(
-                                "spark.sql.sources.partitionOverwriteMode", prev_mode
-                            )
+                        from .incremental import overwrite_partitions
+
+                        overwrite_partitions(self.spark, target, batch)
                 self._persist_docs(spec, db)
             elif spec.kind == "snapshot":
+                from ..operators import index_store
                 from .snapshots import build_snapshot
 
-                if not self.spark.catalog.tableExists(f"{db}.{spec.relation_name}"):
-                    # Fresh metastore + leftover warehouse dir from a
-                    # previous process: clear it or CTAS refuses.
-                    self._clean_stale_location(db, spec.relation_name)
+                # finish a rewrite cut short first: taken for a missing
+                # table, the snapshot would restart and lose its history
+                index_store.recover_staged(self.spark, db, (spec.relation_name,))
                 build_snapshot(
                     self.spark,
                     f"{db}.{spec.relation_name}",
@@ -1160,10 +1144,7 @@ class Engine:
                     )
                 else:
                     reader = reader.option("inferSchema", "true")
-                df = reader.csv(body)
-                self.spark.sql(f"DROP TABLE IF EXISTS {db}.{spec.relation_name}")
-                self._clean_stale_location(db, spec.relation_name)
-                df.write.format("parquet").saveAsTable(f"{db}.{spec.relation_name}")
+                self._replace_table(spec, db, reader.csv(body))
                 self._persist_docs(spec, db)
             elif spec.kind == "python":
                 df = spec.python_body(self.spark, _PythonModelContext(self))
@@ -1173,9 +1154,7 @@ class Engine:
                         f"got {type(df).__name__}"
                     )
                 self._enforce_contract(spec, df.schema)
-                self.spark.sql(f"DROP TABLE IF EXISTS {db}.{spec.relation_name}")
-                self._clean_stale_location(db, spec.relation_name)
-                df.write.format("parquet").saveAsTable(f"{db}.{spec.relation_name}")
+                self._replace_table(spec, db, df)
                 self._persist_docs(spec, db)
             elif spec.kind == "copy":
                 # dbt-bigquery's `copy` materialization (BQ table copy
@@ -1183,17 +1162,7 @@ class Engine:
                 # parquet; a SELECT * CTAS is the honest equivalent —
                 # still zero transform logic, and partitioning carries
                 # via partition_by. body is the resolved relation name.
-                self.spark.sql(f"DROP TABLE IF EXISTS {db}.{spec.relation_name}")
-                self._clean_stale_location(db, spec.relation_name)
-                part = (
-                    f" PARTITIONED BY ({', '.join(spec.partition_by)})"
-                    if spec.partition_by
-                    else ""
-                )
-                self.spark.sql(
-                    f"CREATE TABLE {db}.{spec.relation_name} USING parquet{part} "
-                    f"AS SELECT * FROM {body}"
-                )
+                self._replace_table(spec, db, f"SELECT * FROM {body}")
                 self._persist_docs(spec, db)
             elif spec.kind in ("table", "view"):
                 # The body may invoke TVFs, which resolve against the
@@ -1205,17 +1174,7 @@ class Engine:
                 try:
                     self._check_contract_sql(spec, body)
                     if spec.kind == "table":
-                        self.spark.sql(f"DROP TABLE IF EXISTS {db}.{spec.relation_name}")
-                        self._clean_stale_location(db, spec.relation_name)
-                        part = (
-                            f" PARTITIONED BY ({', '.join(spec.partition_by)})"
-                            if spec.partition_by
-                            else ""
-                        )
-                        self.spark.sql(
-                            f"CREATE TABLE {db}.{spec.relation_name} USING parquet{part} "
-                            f"AS {body}"
-                        )
+                        self._replace_table(spec, db, body)
                     else:
                         self.spark.sql(
                             f"CREATE OR REPLACE VIEW {db}.{spec.relation_name} AS {body}"
@@ -1231,23 +1190,23 @@ class Engine:
         self.relations[spec.registry_key] = rel  # F9
         return rel
 
-    def _clean_stale_location(self, db: str, name: str) -> None:
-        """Remove an orphaned managed-table directory.
+    def _replace_table(self, spec: ModelSpec, db: str, rows: str | DataFrame) -> None:
+        """Drop and replace: clear the old table and its directory with
+        ``index_store.clear_tables`` (a directory a previous process left
+        behind would fail the create with LOCATION_ALREADY_EXISTS), then
+        create it from ``rows``: a SELECT (one CTAS, partitioned by
+        ``partition_by``) or a DataFrame (seeds and python models)."""
+        from ..operators import index_store
 
-        A previous process may have left ``<warehouse>/<db>.db/<name>``
-        on disk while the current (fresh) metastore has no record of the
-        table — DROP TABLE is then a no-op and CTAS fails with
-        LOCATION_ALREADY_EXISTS. Only ever called right after the DROP,
-        so any directory still present is orphaned by definition."""
-        import shutil
-        from urllib.parse import urlparse
-
-        warehouse = urlparse(self.spark.conf.get("spark.sql.warehouse.dir", "")).path
-        if not warehouse:
+        target = f"{db}.{spec.relation_name}"
+        index_store.clear_tables(self.spark, db, (spec.relation_name,))
+        if isinstance(rows, DataFrame):
+            rows.write.format("parquet").saveAsTable(target)
             return
-        stale = os.path.join(warehouse, f"{db.lower()}.db", name.lower())
-        if os.path.isdir(stale):
-            shutil.rmtree(stale, ignore_errors=True)
+        part = (
+            f" PARTITIONED BY ({', '.join(spec.partition_by)})" if spec.partition_by else ""
+        )
+        self.spark.sql(f"CREATE TABLE {target} USING parquet{part} AS {rows}")
 
     def _tvf_call_database(self, spec: ModelSpec) -> str | None:
         for ref in spec.refs:
@@ -1383,9 +1342,11 @@ class Engine:
         value as a civil date/hour/month (the microbatch batch_key
         formats) and drops partitions older than the TTL; unparseable
         values are left alone. Each drop is a metadata operation plus
-        one directory delete — O(expired objects), never a scan.
+        one directory delete — O(expired objects), never a scan. Tables
+        rewritten in place (snapshots, merges) are EXTERNAL after their
+        first rewrite, so every table is swept; only views are skipped.
         """
-        from .table_swap import rm_path, table_location
+        from ..operators import index_store
 
         now = time.time() if now is None else now
         out: dict[str, list[str]] = {"tables": [], "partitions": []}
@@ -1394,7 +1355,7 @@ class Engine:
             if not self.spark.catalog.databaseExists(db):
                 continue
             for t in self.spark.catalog.listTables(db):
-                if t.tableType != "MANAGED":
+                if t.tableType in ("VIEW", "TEMPORARY"):
                     continue
                 full = f"{db}.{t.name}"
                 props = {
@@ -1403,9 +1364,7 @@ class Engine:
                 }
                 exp = props.get("bigquery.expiration_epoch")
                 if exp and float(exp) <= now:
-                    loc = table_location(self.spark, full)
-                    self.spark.sql(f"DROP TABLE {full}")
-                    rm_path(loc)
+                    index_store.clear_tables(self.spark, db, (t.name,))
                     out["tables"].append(full)
                     continue
                 pdays = props.get("bigquery.partition_expiration_days")
@@ -1762,11 +1721,13 @@ class Engine:
             self.spark.sql(hook)
         try:
             if full_refresh:
+                from ..operators import index_store
+
                 for spec in graph.values():
                     if spec.kind in ("incremental", "snapshot"):
                         db = self.database_for(spec)
-                        self.spark.sql(f"DROP TABLE IF EXISTS {db}.{spec.relation_name}")
-                        self._clean_stale_location(db, spec.relation_name)
+                        ensure_database(self.spark, db)
+                        index_store.clear_tables(self.spark, db, (spec.relation_name,))
             ts = TopologicalSorter(
                 {n: self._edge_keys(s) & graph.keys() for n, s in graph.items()}
             )

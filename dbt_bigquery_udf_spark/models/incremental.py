@@ -5,12 +5,12 @@ project would get it on any incremental model it added: BigQuery MERGE
 target USING (body) ON unique_key, matched rows updated, unmatched
 inserted). Plain parquet has no MERGE, so:
 
-- unpartitioned targets: full rewrite-and-swap — the merged next state
-  (target rows whose key is absent from the batch, matched rows with
-  updated columns, new rows) is staged and renamed over the target.
+- unpartitioned targets: full rewrite — the merged next state (target
+  rows whose key is absent from the batch, matched rows with updated
+  columns, new rows) is committed by ``index_store.staged_overwrite``.
 - partitioned targets: partition-scoped rewrite — only the partitions
   the batch touches are recomputed (target slice ⟂ batch, merged),
-  then INSERT OVERWRITE in dynamic mode replaces exactly those
+  then :func:`overwrite_partitions` replaces exactly those
   partitions. At 100 TB this is the difference between rewriting a day
   and rewriting the table. Invariant (documented, same caveat as dbt's
   own insert_overwrite): a unique_key must not move between partitions
@@ -39,16 +39,16 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.util import local_rows_df
-
 from ..catalog import EngineError
-from .table_swap import rm_default_location, swap_table
+from ..operators import index_store
+from ..operators.util import local_rows_df
 
 __all__ = [
     "reconcile_schema",
     "merge_upsert",
     "run_microbatch",
     "delete_keys",
+    "overwrite_partitions",
     "table_provider",
     "merge_into_sql",
     "MERGE_CAPABLE_PROVIDERS",
@@ -262,27 +262,41 @@ def merge_upsert(
     if carried is not None:
         merged = merged.unionByName(carried)
 
-    if not partition_by:
-        swap_table(spark, target, merged)
-        return
+    if partition_by:
+        overwrite_partitions(spark, target, merged, stage=True)
+    else:
+        index_store.staged_overwrite(spark, *target.split("."), merged)
 
-    # Stage the merged slice (the INSERT OVERWRITE below may not read
-    # the table it overwrites), then dynamically overwrite exactly the
-    # touched partitions.
-    staging = f"{target}__merge_staging"
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    rm_default_location(spark, staging)
-    merged.write.format("parquet").saveAsTable(staging)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+
+def overwrite_partitions(
+    spark: SparkSession, target: str, rows: DataFrame, stage: bool = False
+) -> None:
+    """Replace exactly the partitions of ``target`` that ``rows`` holds
+    (dynamic partition overwrite); every other partition keeps its
+    files. The one place the engine sets ``partitionOverwriteMode``, and
+    it restores the session's value. ``stage``: ``rows`` reads
+    ``target`` (a merge or delete slice), which an INSERT OVERWRITE may
+    not, so they are written to a staging table first and the overwrite
+    reads that."""
+    db, name = target.split(".")
+    staging = f"{name}__partition_staging"
+    if stage:
+        index_store.clear_tables(spark, db, (staging,))
+        rows.write.format("parquet").saveAsTable(f"{db}.{staging}")
+        rows = spark.table(f"{db}.{staging}")
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    prev_mode = spark.conf.get(mode, "static")
+    spark.conf.set(mode, "dynamic")
     try:
-        # Partition columns must come last in the INSERT's projection;
-        # the target's own column order already guarantees that.
-        order = ", ".join(spark.table(target).columns)
-        spark.sql(f"INSERT OVERWRITE {target} SELECT {order} FROM {staging}")
+        # by position: partition columns must come last, as the
+        # target's own column order has them
+        rows.select(*spark.table(target).columns).write.insertInto(
+            target, overwrite=True
+        )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
+        spark.conf.set(mode, prev_mode)
+        if stage:
+            index_store.clear_tables(spark, db, (staging,))
 
 
 # -- microbatch (dbt >= 1.9's time-batched incremental strategy) ----------
@@ -298,7 +312,6 @@ def run_microbatch(
     batch_size: str = "day",
     lookback: int = 1,
     begin: str | None = None,
-    clean_location=None,
 ) -> list[str]:
     """dbt's microbatch strategy: the model is processed one time batch
     at a time, each batch idempotently replacing its own partition.
@@ -350,30 +363,24 @@ def run_microbatch(
     pending = batched if cutoff is None else batched.filter(F.col("batch_key") >= cutoff)
     batches = sorted(r[0] for r in pending.select("batch_key").distinct().collect())
     if not exists:
-        if clean_location is not None:
-            clean_location()
+        db, name = target.split(".")
+        index_store.clear_tables(spark, db, (name,))
         # Zero-row CTAS pins schema + partitioning; batches then land
         # one INSERT OVERWRITE each.
         batched.filter(F.lit(False)).write.format("parquet").partitionBy(
             "batch_key"
         ).saveAsTable(target)
 
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for b in batches:
-            lo = F.to_timestamp(F.lit(b), fmt)
-            hi = lo + F.expr(f"INTERVAL 1 {batch_size.upper()}")
-            # Filter on the raw event_time range (scan-prunable), not
-            # the derived batch_key.
-            batch_df = batched.filter(
-                (F.col(event_time) >= lo) & (F.col(event_time) < hi)
-            )
-            batch_df.select(*spark.table(target).columns).write.insertInto(
-                target, overwrite=True
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    for b in batches:
+        lo = F.to_timestamp(F.lit(b), fmt)
+        hi = lo + F.expr(f"INTERVAL 1 {batch_size.upper()}")
+        # Filter on the raw event_time range (scan-prunable), not
+        # the derived batch_key.
+        overwrite_partitions(
+            spark,
+            target,
+            batched.filter((F.col(event_time) >= lo) & (F.col(event_time) < hi)),
+        )
     return batches
 
 
@@ -394,8 +401,8 @@ def delete_keys(
     The erasure-request shape: the key set is tiny (it broadcasts), the
     table is huge. One semi-join scan finds the matching rows AND the
     partitions they live in; then only those partitions are rewritten
-    (staging + dynamic partition overwrite) — unpartitioned tables fall
-    back to one rewrite-and-swap. At 100 TB deleting a user rewrites
+    (:func:`overwrite_partitions`) — unpartitioned tables fall back to
+    one ``index_store.staged_overwrite``. At 100 TB deleting a user rewrites
     the handful of partitions that user appears in, not the table; with
     a partition layout keyed on the deletion key (or a key-to-partition
     index) the finding scan prunes too. Delta/Iceberg DELETE is the
@@ -435,7 +442,9 @@ def delete_keys(
     if not partition_by:
         n = matches.count()
         if n:
-            swap_table(spark, target, tgt.join(F.broadcast(kdf), key_col, "left_anti"))
+            index_store.staged_overwrite(
+                spark, *target.split("."), tgt.join(F.broadcast(kdf), key_col, "left_anti")
+            )
         return n
 
     # One scan: count matches and collect the partitions they live in.
@@ -451,16 +460,5 @@ def delete_keys(
     kept_slice = tgt.join(F.broadcast(parts), list(partition_by), "left_semi").join(
         F.broadcast(kdf), key_col, "left_anti"
     )
-    staging = f"{target}__delete_staging"
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    rm_default_location(spark, staging)
-    kept_slice.write.format("parquet").saveAsTable(staging)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        order = ", ".join(tgt.columns)
-        spark.sql(f"INSERT OVERWRITE {target} SELECT {order} FROM {staging}")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
+    overwrite_partitions(spark, target, kept_slice, stage=True)
     return n

@@ -241,15 +241,14 @@ def run_tests(
         audit = None
         if store_failures and n > 0:
             from ..catalog import ensure_database
+            from ..operators import index_store
 
             ensure_database(spark, audit_database)
             table = t.name.replace(".", "_")
             audit = f"{audit_database}.{table}"
-            spark.sql(f"DROP TABLE IF EXISTS {audit}")
-            # A fresh metastore + leftover warehouse dir from a previous
-            # process makes the DROP a no-op and the CTAS fail with
-            # LOCATION_ALREADY_EXISTS — same cleanup as Engine CTAS.
-            engine._clean_stale_location(audit_database, table)
+            # the table AND a directory a previous process left behind,
+            # which would fail the CTAS with LOCATION_ALREADY_EXISTS
+            index_store.clear_tables(spark, audit_database, (table,))
             spark.sql(
                 f"CREATE TABLE {audit} USING parquet AS {t.failing_rows_sql(engine)}"
             )

@@ -20,13 +20,15 @@ Change detection strategies, as in dbt:
   (null-safe); validity stamps are the run's clock.
 
 Spark has no MERGE over plain parquet tables, so the update is a
-rewrite-and-swap: compute the next snapshot state as one FULL-OUTER
+rewrite in place: compute the next snapshot state as one FULL-OUTER
 join between current versions and the fresh body, union the immutable
-history back in, write to a staging table, and atomically rename over
-the target. At 100 TB the rewrite cost is bounded by partitioning the
-snapshot on a stable key prefix and the join being key-to-key (both
-sides shuffle on unique_key — co-bucketable); Delta/Iceberg MERGE is
-the drop-in upgrade and changes only this module.
+history back in, and commit it with ``index_store.staged_overwrite``
+(staged, then an atomic directory rename; a commit cut short is
+finished by ``index_store.recover_staged``). At 100 TB the rewrite
+cost is bounded by partitioning the snapshot on a stable key prefix
+and the join being key-to-key (both sides shuffle on unique_key —
+co-bucketable); Delta/Iceberg MERGE is the drop-in upgrade and changes
+only this module.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import EngineError
-from .table_swap import swap_table
+from ..operators import index_store
 
 __all__ = ["build_snapshot"]
 
@@ -85,6 +87,9 @@ def build_snapshot(
         raise EngineError(f"snapshot {target}: unknown strategy {strategy!r}")
 
     if not spark.catalog.tableExists(target):
+        # a directory a previous process left would fail the create
+        db, name = target.split(".")
+        index_store.clear_tables(spark, db, (name,))
         _first_snapshot(src, valid_from).write.format("parquet").saveAsTable(target)
         return
 
@@ -151,7 +156,6 @@ def build_snapshot(
 
     next_state = history.unionByName(kept).unionByName(closed).unionByName(opened)
 
-    # Rewrite-and-swap (shared with the merge incremental strategy):
-    # the next state reads the target, so it cannot overwrite it in
-    # place; stage then rename (metadata-only move for managed tables).
-    swap_table(spark, target, next_state)
+    # the next state reads the target, so it cannot overwrite it
+    # directly: stage, then commit by directory rename
+    index_store.staged_overwrite(spark, *target.split("."), next_state)

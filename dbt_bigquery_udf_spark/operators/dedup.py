@@ -1315,7 +1315,7 @@ def build_near_dup_index(
     adoption, clear-and-rebuild on half-written groups) is the shared
     ``index_store.ensure_tables`` contract — see that module."""
     from ..catalog import catalog_lock
-    from .index_store import clear_tables, ensure_tables
+    from .index_store import _ensure_db, clear_tables, ensure_tables
 
     db = db or _near_index_db(sf_dir)
 
@@ -1342,6 +1342,7 @@ def build_near_dup_index(
             # deterministic rebuild: clear catalog entries AND leftover
             # location files (a prior PROCESS's index survives a
             # catalog-only drop and would otherwise be adopted)
+            _ensure_db(spark, db)
             clear_tables(spark, db, _NEAR_IDX_TABLES)
             _build()
             return "built"

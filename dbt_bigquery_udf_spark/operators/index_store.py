@@ -47,6 +47,17 @@ Tables are emptied by deleting their data files in place
 delta and tombstone tables are emptied in place, or created empty;
 scratch left by another process is cleared, never adopted.
 
+**Model tables** commit here too, one protocol per kind of write. A
+model rewritten in place from a frame that reads it (a snapshot's SCD2
+step, an unpartitioned ``merge`` or ``delete_keys``) is a
+:func:`staged_overwrite`, and the build runs :func:`recover_staged`
+first, so a rewrite cut short is finished rather than mistaken for a
+missing table. A model dropped and re-created (tables, copies, seeds,
+python models, first incremental and snapshot runs, full refreshes,
+stored test failures, expired tables) is cleared by
+:func:`clear_tables`. Plain parquet has no MERGE: Delta/Iceberg MERGE is
+the drop-in upgrade and would replace only the staged rewrite.
+
 **Corpus identity** (:func:`index_db_name`): the database name embeds a
 fingerprint of the corpus (absolute path plus size and mtime_ns of every
 data file), so two corpora that share a leaf directory name, or a corpus
@@ -132,7 +143,7 @@ def scratch_dir(
 
 
 def _ensure_db(spark: SparkSession, db: str) -> None:
-    """:func:`ensure_database` (runs on every clear/ensure/recover,
+    """:func:`ensure_database` (runs on every ensure/recover/reset,
     several times per lifecycle query), forgetting any cached location
     of a database it had to create."""
     if ensure_database(spark, db):
@@ -178,13 +189,14 @@ def db_location(spark: SparkSession, db: str) -> str:
 def clear_tables(spark: SparkSession, db: str, tables: Iterable[str]) -> None:
     """Drop the named tables AND their location directories (a prior
     PROCESS's files survive a catalog-only drop and would otherwise be
-    adopted — by design). Safe on half-written groups."""
+    adopted — by design; an EXTERNAL table's drop keeps its files).
+    Safe on half-written groups. The one drop for every index table and
+    every model table the engine replaces. ``db`` must exist: every
+    caller has already ensured it, so no second probe is paid here."""
     with catalog_lock:
-        _ensure_db(spark, db)
-        path = db_location(spark, db).removeprefix("file:")
         for t in tables:
             spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-            shutil.rmtree(os.path.join(path, t), ignore_errors=True)
+            shutil.rmtree(_table_dir(spark, db, t), ignore_errors=True)
 
 
 def staged_overwrite(spark: SparkSession, db: str, table: str, df) -> None:
@@ -226,9 +238,8 @@ def staged_overwrite(spark: SparkSession, db: str, table: str, df) -> None:
         # source. saveAsTable returning implies job commit, so the
         # marker written here is a truthful completeness witness under
         # ANY committer config.
-        sdir = db_location(spark, db).removeprefix("file:")
         with open(
-            os.path.join(sdir, staged, STAGE_COMPLETE_MARKER), "w"
+            os.path.join(_table_dir(spark, db, staged), STAGE_COMPLETE_MARKER), "w"
         ) as f:
             f.write("complete")
         _commit_stage(spark, db, table)
@@ -276,11 +287,12 @@ def _commit_stage(spark: SparkSession, db: str, table: str) -> None:
     staged = f"{table}__staged"
     with catalog_lock:
         schema = spark.table(f"{db}.{staged}").schema  # catalog-only read
-        loc = db_location(spark, db)
-        path = loc.removeprefix("file:")
+        live = _table_dir(spark, db, table)
         clear_tables(spark, db, (table,))
-        os.rename(os.path.join(path, staged), os.path.join(path, table))
-        _register_external(spark, f"{db}.{table}", schema, f"{loc}/{table}")
+        os.rename(_table_dir(spark, db, staged), live)
+        _register_external(
+            spark, f"{db}.{table}", schema, f"{db_location(spark, db)}/{table.lower()}"
+        )
         spark.catalog.refreshTable(f"{db}.{table}")
         # entry only: the managed stage's directory was renamed away, so
         # the drop's file cleanup is a no-op
@@ -319,11 +331,10 @@ def recover_staged(
     with catalog_lock:
         _ensure_db(spark, db)
         loc = db_location(spark, db)
-        path = loc.removeprefix("file:")
-        for t in tables:
+        for t in map(str.lower, tables):
             staged = f"{t}__staged"
-            sdir = os.path.join(path, staged)
-            tdir = os.path.join(path, t)
+            sdir = _table_dir(spark, db, staged)
+            tdir = _table_dir(spark, db, t)
             if spark.catalog.tableExists(f"{db}.{staged}"):
                 if os.path.isdir(sdir):
                     # stage intact (crash before/at the live clear, or
@@ -397,7 +408,9 @@ def move_table_files(
 
 
 def _table_dir(spark: SparkSession, db: str, table: str) -> str:
-    return os.path.join(db_location(spark, db).removeprefix("file:"), table)
+    """A managed table's directory: the catalog stores table names, and
+    so their default locations, lower-cased."""
+    return os.path.join(db_location(spark, db).removeprefix("file:"), table.lower())
 
 
 def _has_parts(path: str) -> bool:

@@ -3519,10 +3519,11 @@ def sim_ivf_retrain_epoch2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..catalog import catalog_lock
 
-    from .index_store import clear_tables
+    from .index_store import _ensure_db, clear_tables
 
     db = _rt_db(sf_dir) + "_e2"
     with catalog_lock:
+        _ensure_db(spark, db)
         clear_tables(
             spark, db, _RT_V1_TABLES + _RT_V2_TABLES
         )

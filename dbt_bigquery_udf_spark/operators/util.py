@@ -18,15 +18,16 @@ def _sql_literal(v, dtype: T.DataType) -> str:
     Doubles use ``repr`` (shortest round-trip decimal — parses back to
     the identical IEEE double) with the ``D`` suffix; strings escape
     backslash and quote; arrays recurse element-wise; timestamps render
-    as ``TIMESTAMP '...'`` (exact under the engine's session-UTC pin —
-    ``session.py`` sets ``spark.sql.session.timeZone=UTC`` and the
-    classic ``createDataFrame`` path interprets naive datetimes in the
-    process zone, also UTC here; aware datetimes are converted to UTC
-    first, matching ``TimestampType.toInternal``). Values are accepted
-    only at their EXACT Python type (ADVICE r11: ``str(v)``/``int(v)``
-    previously coerced mismatches that ``createDataFrame``'s schema
-    verification would reject — e.g. a bool rendering as the integer 1,
-    or a dict stringifying into data); anything else raises
+    as ``TIMESTAMP_LTZ '...'`` in UTC (exact under the engine's
+    session-UTC pin — ``session.py`` sets
+    ``spark.sql.session.timeZone=UTC``), converted with ``astimezone``,
+    which reads a naive datetime in the process zone exactly as
+    ``TimestampType.toInternal`` does on the ``createDataFrame`` path).
+    Values are accepted only at their EXACT Python type (ADVICE r11:
+    ``str(v)``/``int(v)`` previously coerced mismatches that
+    ``createDataFrame``'s schema verification would reject — e.g. a bool
+    rendering as the integer 1, or a dict stringifying into data);
+    anything else raises
     ``TypeError`` so the caller's ``createDataFrame`` fallback engages
     and applies the reference semantics.
     """
@@ -70,8 +71,7 @@ def _sql_literal(v, dtype: T.DataType) -> str:
     if isinstance(dtype, T.TimestampType):
         if not isinstance(v, _dt.datetime):
             raise TypeError(f"timestamp literal expects datetime, got {type(v)}")
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
         # explicit LTZ keyword: the session's timestampType=TIMESTAMP_NTZ
         # pin would otherwise retype a bare TIMESTAMP literal
         return f"TIMESTAMP_LTZ '{v.isoformat(sep=' ')}'"

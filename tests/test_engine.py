@@ -551,11 +551,10 @@ def test_on_run_start_end_hooks(spark, sf_small, tmp_path):
         ),
         on_run_end=("INSERT INTO datamart.run_audit VALUES ('end')",),
     )
-    from dbt_bigquery_udf_spark.models.table_swap import rm_default_location
+    from dbt_bigquery_udf_spark.operators.index_store import clear_tables
 
     spark.sql("CREATE DATABASE IF NOT EXISTS datamart")
-    spark.sql("DROP TABLE IF EXISTS datamart.run_audit")
-    rm_default_location(spark, "datamart.run_audit")  # stale-dir gotcha
+    clear_tables(spark, "datamart", ("run_audit",))  # stale-dir gotcha
     register_sources_catalog(spark, sf_small)
     engine.register(*REFERENCE_MODELS, replace=True)
     engine.build()

@@ -127,6 +127,26 @@ def test_timestamp_ltz_and_date_literals(spark):
     assert _no_python_scan(got)
 
 
+def test_naive_ltz_reads_process_zone(spark, monkeypatch):
+    """A naive datetime on the LTZ fast path is process-local time, as
+    ``createDataFrame`` reads it, also when the process is not on UTC."""
+    import time
+    from datetime import datetime
+
+    rows = [(datetime(2001, 8, 1, 12, 0, 0),)]
+    monkeypatch.setenv("TZ", "Asia/Taipei")
+    time.tzset()
+    try:
+        got = local_rows_df(spark, rows, "ts timestamp_ltz")
+        ref = spark.createDataFrame(rows, "ts timestamp_ltz")
+        micros = [d.selectExpr("unix_micros(ts)").first()[0] for d in (got, ref)]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert micros[0] == micros[1]
+    assert _no_python_scan(got)
+
+
 def test_dict_rows_bind_by_name(spark):
     """ADVICE r11 (high): Mapping rows bind by FIELD NAME — missing
     keys become NULL like createDataFrame; a string first column must

@@ -79,6 +79,36 @@ def test_staged_overwrite_empty_kept_set(spark, db):
     assert [f.name for f in spark.table(f"{db}.live").schema.fields] == ["id"]
 
 
+def test_staged_overwrite_keeps_model_schema(spark, db):
+    """Model tables reach the rewrite with user schemas, which the
+    commit re-registers explicitly: decimal, timestamp_ntz, struct,
+    array-of-struct and map columns keep their types and values over
+    two rewrites."""
+    from datetime import datetime
+    from decimal import Decimal
+
+    ddl = (
+        "id int, amount decimal(10,2), seen timestamp_ntz, "
+        "who struct<name:string,age:int>, "
+        "tags array<struct<k:string,w:double>>, attrs map<string,bigint>"
+    )
+    rows = [
+        (1, Decimal("12.34"), datetime(2024, 1, 2, 3, 4, 5), ("ann", 31),
+         [("a", 1.5), ("b", -2.0)], {"x": 1, "y": -7}),
+        (2, None, None, None, [], {}),
+    ]
+    spark.createDataFrame(rows, ddl).write.saveAsTable(f"{db}.live")
+
+    def state():
+        t = spark.table(f"{db}.live")
+        return t.dtypes, sorted(t.collect(), key=lambda r: r.id)
+
+    want = state()
+    for _ in range(2):
+        staged_overwrite(spark, db, "live", spark.table(f"{db}.live"))
+    assert state() == want
+
+
 def _stage_complete_copy(spark, db, rows):
     """Simulate staged_overwrite up to (and including) the marker."""
     clear_tables(spark, db, ("live__staged",))
