@@ -40,6 +40,7 @@ from dbt_bigquery_udf_spark import get_spark  # noqa: E402
 from dbt_bigquery_udf_spark import queries as Q  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+REPO = os.path.dirname(os.path.abspath(__file__))
 
 # Bench coverage (round 10, VERDICT r9 #7): the FULL registry is
 # benched — _CURATED holds the historical headline ordering (kept so
@@ -171,33 +172,16 @@ if _unknown:  # a rename must update the curated prefix
     raise RuntimeError(f"bench curated names not registered: {_unknown}")
 
 # Session-ordering pin (VERDICT r10 #8): index-LIFECYCLE queries —
-# admissions, folds, retrains, upserts, erasures, their streaming
-# gates, and the audits composing them — run AFTER every serving/read
-# query. They mutate sibling warehouse databases and accumulate heavy
-# session state (micro-batch clones, staged writes, version swaps);
-# r10 measured the warm serving reads (sim_ivf_trained_indexed et al.)
-# swinging 2-4x between same-HEAD runs purely from preceding lifecycle
-# work. Per-query minima are order-independent as COMPARISONS, so
-# moving the mutators to the end de-noises round-over-round deltas at
-# zero plan cost. Membership is by name pattern so new lifecycle
-# queries inherit the pin automatically.
-_LIFECYCLE_MARKERS = (
-    "_indexed", "_admission", "_forget", "_auto_compacted", "_upsert",
-    "_retrain", "stream_", "pipeline_incremental",
-)
-# serving reads that merely PROBE a persisted index stay early; the
-# trained-index read is the canonical one the pin protects
-_LIFECYCLE_EXEMPT = {"sim_ivf_trained_indexed"}
-
-
-def _is_lifecycle(name: str) -> bool:
-    if name in _LIFECYCLE_EXEMPT:
-        return False
-    return any(m in name for m in _LIFECYCLE_MARKERS)
-
-
-HEADLINE = [n for n in HEADLINE if not _is_lifecycle(n)] + [
-    n for n in HEADLINE if _is_lifecycle(n)
+# those registered with ``lifecycle=True`` (``queries.LIFECYCLE``) — run
+# AFTER every serving/read query. They mutate sibling warehouse
+# databases and accumulate heavy session state (micro-batch clones,
+# staged writes, version swaps); r10 measured the warm serving reads
+# (sim_ivf_trained_indexed et al.) swinging 2-4x between same-HEAD runs
+# purely from preceding lifecycle work. Per-query minima are
+# order-independent as COMPARISONS, so moving the mutators to the end
+# de-noises round-over-round deltas at zero plan cost.
+HEADLINE = [n for n in HEADLINE if n not in Q.LIFECYCLE] + [
+    n for n in HEADLINE if n in Q.LIFECYCLE
 ]
 
 
@@ -233,7 +217,7 @@ def _fresh_indexes(spark) -> None:
     _drop_databases(spark, sorted(d for d in dbs if d.startswith(_INDEX_DB_PREFIXES)))
 
 
-def _reset_epoch_dbs(spark) -> None:
+def _reset_epoch_dbs(spark, sf_dir: str = SF_DIR) -> None:
     """Drop the RETRAIN-EPOCH databases unconditionally (VERDICT r10
     #8): gc_ivf_versions advances the epoch, so a second bench over the
     same warehouse would measure epoch-2 work (training off promoted
@@ -244,7 +228,23 @@ def _reset_epoch_dbs(spark) -> None:
     measurement; --fresh-indexes resets those)."""
     from dbt_bigquery_udf_spark.operators import similarity as S
 
-    _drop_databases(spark, (S._rt_db(SF_DIR), S._rt_db(SF_DIR) + "_e2"))
+    _drop_databases(spark, (S._rt_db(sf_dir), S._rt_db(sf_dir) + "_e2"))
+
+
+def sidecar_file(cores: int) -> str:
+    """The per-query sidecar a bench on ``cores`` cores writes."""
+    return f"BENCH_RUNS_c{cores}.json"
+
+
+def time_query(spark, fn, runs: int, sf_dir: str = SF_DIR) -> list[float]:
+    """``runs`` end-to-end timings of ``fn(spark, sf_dir).collect()``
+    (plan construction + execution + collect), rounded to the ms."""
+    per_run: list[float] = []
+    for _ in range(runs):
+        t = time.perf_counter()
+        fn(spark, sf_dir).collect()
+        per_run.append(round(time.perf_counter() - t, 3))
+    return per_run
 
 
 def main() -> None:
@@ -282,14 +282,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
     for name in HEADLINE:
-        fn = Q.QUERIES[name]
-        per_run: list[float] = []
-        for _ in range(n_runs if name in curated else tail_runs):
-            t = time.perf_counter()
-            rows = fn(spark, SF_DIR).collect()
-            dt = time.perf_counter() - t
-            per_run.append(round(dt, 3))
-            assert len(rows) >= 0
+        per_run = time_query(
+            spark, Q.QUERIES[name], n_runs if name in curated else tail_runs
+        )
         runs[name] = per_run
         timings[name] = min(per_run)
         spark.catalog.clearCache()  # keep per-query persists from compounding
@@ -309,11 +304,10 @@ def main() -> None:
         "n_curated": len(_CURATED),
         "sf": sf,
     }
+    # one sidecar per core count, so a c8 run does not overwrite c32's
+    sidecar_name = sidecar_file(spark.sparkContext.defaultParallelism)
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_RUNS.json"),
-            "w",
-        ) as fh:
+        with open(os.path.join(REPO, sidecar_name), "w") as fh:
             json.dump(sidecar, fh)
     except OSError:
         pass
@@ -330,7 +324,7 @@ def main() -> None:
                 "sf": sf,
                 "startup_sec": round(startup, 3),
                 "cpus": os.environ.get("SPARK_GRAFT_CPUS", "auto"),
-                "per_query": "BENCH_RUNS.json",
+                "per_query": sidecar_name,
             }
         )
     )

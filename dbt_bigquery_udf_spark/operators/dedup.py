@@ -886,8 +886,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     used 50k clusters for LAION — the same regime; past the cap the
     pair space is O(n^2 / 64k), still blocked). Assignment stays one
     broadcast join against the k-row centroid table (widen the '%05d'
-    cluster-id encoding past 100k clusters). Measured
-    (scripts/scale_probe_r2.py): 10x vectors with k 31->312 costs ~1x
+    cluster-id encoding past 100k clusters). Measured (SCALE.md,
+    round-2 scaling): 10x vectors with k 31->312 costs ~1x
     wall; 30x (60k vectors, k=937) costs 2.9x. Threshold 0.40 is a
     demo value for the synthetic fixture (max pair cosine ~0.51 —
     random vectors have no true dups); production SemDeDup uses ~0.95+.
@@ -1533,7 +1533,7 @@ def _duck_incr_indexed() -> str:
     """
 
 
-@register("dedup_incr_near_indexed", _duck_incr_indexed())
+@register("dedup_incr_near_indexed", _duck_incr_indexed(), lifecycle=True)
 def dedup_incr_near_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-build incremental near-dup admission against a PERSISTED LSH
     index (the round-7 production upgrade of dedup_incremental_near):
@@ -1661,7 +1661,7 @@ def _duck_stream_admission() -> str:
     """
 
 
-@register("stream_near_dup_admission", _duck_stream_admission())
+@register("stream_near_dup_admission", _duck_stream_admission(), lifecycle=True)
 def stream_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS corpus ingestion with near-dup admission — the
     streaming composition of the round-7 persisted index: a document
@@ -1801,7 +1801,7 @@ def _duck_incr_exact_indexed() -> str:
     """
 
 
-@register("dedup_incr_exact_indexed", _duck_incr_exact_indexed())
+@register("dedup_incr_exact_indexed", _duck_incr_exact_indexed(), lifecycle=True)
 def dedup_incr_exact_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-build EXACT-dedup admission against the persisted hash set —
     the exact-hash sibling of dedup_incr_near_indexed, completing the
@@ -1993,7 +1993,7 @@ def _reset_layered_pair(
         reset_scratch(spark, delta_db, delta_schemas)
 
 
-@register("dedup_near_auto_compacted", _duck_stream_admission())
+@register("dedup_near_auto_compacted", _duck_stream_admission(), lifecycle=True)
 def dedup_near_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-batch near-dup admission with the SIZE-RATIO AUTO-COMPACTION
     firing between the batches (VERDICT r8 #4 made driver-checkable):
@@ -2065,7 +2065,7 @@ def dedup_near_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_exact_auto_compacted", _duck_incr_exact_indexed())
+@register("dedup_exact_auto_compacted", _duck_incr_exact_indexed(), lifecycle=True)
 def dedup_exact_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact gate's auto-compacted sibling: two-batch hash
     admission with the low-ratio fold firing between the batches (the
@@ -2160,7 +2160,7 @@ def _duck_index_forget() -> str:
     """
 
 
-@register("dedup_index_forget", _duck_index_forget())
+@register("dedup_index_forget", _duck_index_forget(), lifecycle=True)
 def dedup_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Targeted erasure E2E over the persisted near-dup index: build (or
     adopt) a dedicated index over the owned corpus, FORGET the
@@ -2286,7 +2286,7 @@ def _duck_stream_forget() -> str:
     )
 
 
-@register("stream_near_dup_forget", _duck_stream_forget())
+@register("stream_near_dup_forget", _duck_stream_forget(), lifecycle=True)
 def stream_near_dup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ERASURE — right-to-be-forgotten requests arriving as
     micro-batches against the persisted near-dup index, with serving
@@ -2368,6 +2368,7 @@ def stream_near_dup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN ({_duck_incr_indexed()}) nr ON nr.new_id = ex.doc_id
     WHERE ex.batch_id = 1
     """,
+    lifecycle=True,
 )
 def pipeline_incremental_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-7 theme composed end-to-end: batch-2 documents pass
@@ -2509,6 +2510,7 @@ def _admit_exact_batch_df(
     # ledger gate: micro-batch 0 = the b0 arrival file, 1 = b1 — the
     # registered batch oracle states the identical update sequence
     _duck_incr_exact_indexed(),
+    lifecycle=True,
 )
 def stream_exact_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS ingestion through the EXACT-dedup gate — the
@@ -2618,7 +2620,7 @@ def _duck_exact_forget() -> str:
     """
 
 
-@register("dedup_exact_forget", _duck_exact_forget())
+@register("dedup_exact_forget", _duck_exact_forget(), lifecycle=True)
 def dedup_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Targeted erasure for the EXACT-dedup gate — the boundary
     dedup_incr_exact_indexed can't cross: its state is a bare
@@ -2638,8 +2640,8 @@ def dedup_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state is (16-byte hash, id) rows — doc-level rather than the
     plain gate's distinct-hash set, the storage price of erasability;
-    probes add one broadcast anti-join (measured ~free,
-    scale_probe_r8); the probe-set distinct is computed per batch from
+    probes add one broadcast anti-join (measured ~free, SCALE.md
+    round-8 erasure scaling); the probe-set distinct is computed per batch from
     the bucketed doc_hashes relation, at 100 TB a partial-agg over the
     probe's semi-joined partitions only.
     """
@@ -2718,7 +2720,7 @@ def _duck_stream_exact_forget() -> str:
     """ + " UNION ALL ".join(selects)
 
 
-@register("stream_exact_forget", _duck_stream_exact_forget())
+@register("stream_exact_forget", _duck_stream_exact_forget(), lifecycle=True)
 def stream_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ERASURE for the exact gate — the doc-level sibling of
     stream_near_dup_forget, extending erasure-as-a-stream to the second

@@ -86,6 +86,7 @@ __all__ = [
     "corpus_fingerprint",
     "index_db_name",
     "db_location",
+    "db_dir",
     "ensure_tables",
     "clear_tables",
     "scratch_dir",
@@ -186,6 +187,19 @@ def db_location(spark: SparkSession, db: str) -> str:
     return loc
 
 
+def db_dir(spark: SparkSession, db: str) -> str:
+    """The database's directory on the local filesystem. Raises, naming
+    the URI, when the location is not ``file:``: the rename, hardlink
+    and file-move commits assume one local POSIX volume."""
+    loc = db_location(spark, db)
+    if not loc.startswith("file:"):
+        raise RuntimeError(
+            f"database {db} is at {loc}: index and table commits need a "
+            "local (file:) warehouse"
+        )
+    return loc.removeprefix("file:")
+
+
 def clear_tables(spark: SparkSession, db: str, tables: Iterable[str]) -> None:
     """Drop the named tables AND their location directories (a prior
     PROCESS's files survive a catalog-only drop and would otherwise be
@@ -195,8 +209,9 @@ def clear_tables(spark: SparkSession, db: str, tables: Iterable[str]) -> None:
     caller has already ensured it, so no second probe is paid here."""
     with catalog_lock:
         for t in tables:
+            path = _table_dir(spark, db, t)
             spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-            shutil.rmtree(_table_dir(spark, db, t), ignore_errors=True)
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def staged_overwrite(spark: SparkSession, db: str, table: str, df) -> None:
@@ -410,7 +425,7 @@ def move_table_files(
 def _table_dir(spark: SparkSession, db: str, table: str) -> str:
     """A managed table's directory: the catalog stores table names, and
     so their default locations, lower-cased."""
-    return os.path.join(db_location(spark, db).removeprefix("file:"), table.lower())
+    return os.path.join(db_dir(spark, db), table.lower())
 
 
 def _has_parts(path: str) -> bool:
@@ -616,9 +631,7 @@ def _snap_root(spark: SparkSession, db: str) -> str:
     rmtree) retires the snapshot together with the tables it mirrors;
     no table can be named ``_pristine`` (Spark's file listing skips
     underscore-prefixed paths), so it can never be adopted as data."""
-    return os.path.join(
-        db_location(spark, db).removeprefix("file:"), _SNAP_DIR
-    )
+    return os.path.join(db_dir(spark, db), _SNAP_DIR)
 
 
 def snapshot_tables(
@@ -637,7 +650,7 @@ def snapshot_tables(
     if os.path.isfile(os.path.join(snap, SNAP_COMPLETE_MARKER)):
         return
     shutil.rmtree(snap, ignore_errors=True)
-    path = db_location(spark, db).removeprefix("file:")
+    path = db_dir(spark, db)
     for t in tables:
         tdir = os.path.join(path, t)
         sdir = os.path.join(snap, t)
@@ -680,7 +693,7 @@ def restore_snapshot(
     snap = _snap_root(spark, db)
     if not os.path.isfile(os.path.join(snap, SNAP_COMPLETE_MARKER)):
         return False
-    path = db_location(spark, db).removeprefix("file:")
+    path = db_dir(spark, db)
     with catalog_lock:
         if not all(spark.catalog.tableExists(f"{db}.{t}") for t in tables):
             return False

@@ -250,13 +250,13 @@ def maintenance_lease(
     to its warehouse location), reentrantly within the calling THREAD.
     Yields the :class:`MaintenanceLease` — callers ``check()`` before
     each destructive step and ``renew()`` between long table swaps."""
-    from .index_store import _ensure_db, db_location
+    from .index_store import _ensure_db, db_dir
 
     # existence probe, not a bare CREATE DATABASE: the SQL command pays
     # full parse/plan (~40ms) on EVERY lease entry — admissions enter
     # this several times per query (acquire + nested folds)
     _ensure_db(spark, db)
-    path = os.path.realpath(db_location(spark, db).removeprefix("file:"))
+    path = os.path.realpath(db_dir(spark, db))
     held = getattr(_tls, "held", None)
     if held is None:
         held = _tls.held = {}

@@ -1886,7 +1886,7 @@ def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~64 keeps the pair space O(n * 64); the rank window shuffles
     |cells| * 64 * 64 fixed-width rows on src; mutuality joins
     |n * k| narrow edges. All stages measured flat-to-sublinear for the
-    shared assignment in scripts/scale_probe_r2.py.
+    shared assignment (SCALE.md, round-2 scaling).
 
     The finished edge table is memoized + PERSISTED per
     (session, sf_dir) like the other shared stages: label propagation
@@ -2494,6 +2494,7 @@ IVF_FORGET_MOD = 9  # vec_id % 9 == 4 -> the erased slice (never the query vec)
 @register(
     "sim_ivf_forget",
     _duck_ivf_trained(exclude=f"AND e.vec_id % {IVF_FORGET_MOD} <> 4"),
+    lifecycle=True,
 )
 def sim_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Targeted erasure E2E over the persisted IVF index: build (or
@@ -2574,7 +2575,7 @@ def _duck_stream_ivf_forget() -> str:
     )
 
 
-@register("stream_ivf_forget", _duck_stream_ivf_forget())
+@register("stream_ivf_forget", _duck_stream_ivf_forget(), lifecycle=True)
 def stream_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING ERASURE for the vector index — completing erasure-as-
     a-stream across all three index families ({exact, near-dup, IVF} x
@@ -2810,7 +2811,7 @@ def _duck_ivf_upsert() -> str:
     )
 
 
-@register("sim_ivf_upsert", _duck_ivf_upsert())
+@register("sim_ivf_upsert", _duck_ivf_upsert(), lifecycle=True)
 def sim_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index UPSERT + serve — the missing half of the index
     lifecycle: the base index is trained/persisted over the owned split
@@ -3342,7 +3343,7 @@ def _duck_ivf_retrain() -> str:
     )
 
 
-@register("sim_ivf_retrain", _duck_ivf_retrain())
+@register("sim_ivf_retrain", _duck_ivf_retrain(), lifecycle=True)
 def sim_ivf_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retrain EXECUTION — the capstone of the index lifecycle
     (build -> upsert -> drift trigger -> THIS -> serve): run
@@ -3493,7 +3494,7 @@ def _duck_ivf_epoch2() -> str:
     )
 
 
-@register("sim_ivf_retrain_epoch2", _duck_ivf_epoch2())
+@register("sim_ivf_retrain_epoch2", _duck_ivf_epoch2(), lifecycle=True)
 def sim_ivf_retrain_epoch2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO full lifecycle turns of the versioned index — retrain, GC
     (promote + epoch advance), retrain again — then serve from the
@@ -3695,7 +3696,7 @@ def _duck_retrain_policy() -> str:
     )
 
 
-@register("sim_ivf_retrain_policy", _duck_retrain_policy())
+@register("sim_ivf_retrain_policy", _duck_retrain_policy(), lifecycle=True)
 def sim_ivf_retrain_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH branches of the retrain policy gate, driver-checkable
     (VERDICT r9 #5): run :func:`maybe_retrain_ivf` twice against
@@ -4271,7 +4272,7 @@ def _duck_stream_ivf() -> str:
     )
 
 
-@register("stream_ivf_admission", _duck_stream_ivf())
+@register("stream_ivf_admission", _duck_stream_ivf(), lifecycle=True)
 def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS vector ingestion through the IVF index — the
     embedding-side sibling of the two document streaming gates,

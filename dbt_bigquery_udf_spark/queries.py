@@ -18,19 +18,27 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .api import prepared_engine
 
-__all__ = ["QUERIES", "ORACLES", "register", "curated_queries"]
+__all__ = ["QUERIES", "ORACLES", "LIFECYCLE", "register", "curated_queries"]
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+# Index-lifecycle queries: admissions, folds, retrains, upserts,
+# erasures, the streaming pipelines and the audits composing them. They
+# mutate sibling warehouse databases or run streaming queries, so
+# bench.py runs them after every serving read.
+LIFECYCLE: set[str] = set()
 
 
-def register(name: str, oracle: str | None = None):
-    """Decorator: add a query (and its oracle) to the registry."""
+def register(name: str, oracle: str | None = None, *, lifecycle: bool = False):
+    """Decorator: add a query (and its oracle) to the registry;
+    ``lifecycle=True`` also records it in :data:`LIFECYCLE`."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if lifecycle:
+            LIFECYCLE.add(name)
         return fn
 
     return deco

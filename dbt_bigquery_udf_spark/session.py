@@ -27,7 +27,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "apply_engine_confs"]
+__all__ = ["get_spark", "apply_engine_confs", "default_cpus"]
 
 # Confs that are session-settable at runtime (spark.conf.set) — applied
 # also when we receive a foreign SparkSession (the driver's) so engine
@@ -67,6 +67,12 @@ def apply_engine_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_cpus() -> int:
+    """Local cores a session gets by default: ``$SPARK_GRAFT_CPUS`` or
+    all local cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+
+
 def get_spark(
     app_name: str = "dbt_bigquery_udf_spark",
     cpus: int | None = None,
@@ -75,10 +81,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores.
+    ``cpus`` defaults to :func:`default_cpus`.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
 

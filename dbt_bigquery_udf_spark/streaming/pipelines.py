@@ -146,6 +146,7 @@ def _run_to_memory(out: DataFrame, mode: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
+    lifecycle=True,
 )
 def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window rollup (1h event-time windows).
@@ -198,6 +199,7 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     WHERE session_end <= (SELECT max(ts) FROM events)
     """,
+    lifecycle=True,
 )
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization via ``session_window`` (30-min gap) with
@@ -284,6 +286,7 @@ def _update_user_state(
     FROM events
     GROUP BY user_id
     """,
+    lifecycle=True,
 )
 def stream_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful streaming via ``applyInPandasWithState``:
@@ -321,6 +324,7 @@ def stream_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
            date_trunc('minute', ts) AS minute_start
     FROM events
     """,
+    lifecycle=True,
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication: at most one record per
@@ -373,6 +377,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN user_profile p USING (user_id)
     WHERE e.event_type = 'purchase'
     """,
+    lifecycle=True,
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: enrich a live event stream with a batch-built
@@ -424,6 +429,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.event_type = 'purchase' AND c.event_type = 'click'
      AND c.ts BETWEEN p.ts - INTERVAL 30 MINUTE AND p.ts
     """,
+    lifecycle=True,
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join with watermarks: each purchase joined to
@@ -489,6 +495,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n, round(sum(value), 2) AS value_sum
     FROM events GROUP BY 1, 2
     """,
+    lifecycle=True,
 )
 def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming aggregation delivered through ``foreachBatch`` into a
@@ -569,6 +576,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn <= 3
     ORDER BY w_start, n DESC, event_type
     """,
+    lifecycle=True,
 )
 def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trending top-k: per 6-hour event-time window, the 3 most frequent
@@ -675,6 +683,7 @@ def _make_user_stats_processor():
            round(max(value), 2) AS value_max
     FROM events GROUP BY user_id
     """,
+    lifecycle=True,
 )
 def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful streaming on the Spark 4 transformWithState
@@ -775,6 +784,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type
     """,
+    lifecycle=True,
 )
 def stream_recovery_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once restart semantics as a driver-checkable query.
@@ -935,7 +945,7 @@ def _stream_gate_oracle() -> str:
     """
 
 
-@register("stream_quality_gate", _stream_gate_oracle())
+@register("stream_quality_gate", _stream_gate_oracle(), lifecycle=True)
 def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality gating IN-STREAM: per-source pass rates for the core
     Gopher bounds (word count, mean word length — equal to the

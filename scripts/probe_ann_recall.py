@@ -18,8 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dbt_bigquery_udf_spark import get_spark  # noqa: E402
 from dbt_bigquery_udf_spark import queries as Q  # noqa: E402
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+from dbt_bigquery_udf_spark.sources.registry import DEFAULT_SF_DIR  # noqa: E402
 
 VARIANTS = [
     "sim_topk_brute",      # the exact baseline (recall 1.0 by definition)
@@ -34,17 +33,18 @@ VARIANTS = [
 
 
 def main() -> None:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
     spark = get_spark(app_name="ann-recall-probe")
-    brute = {r.vec_id for r in Q.QUERIES["sim_topk_brute"](spark, SF_DIR).collect()}
+    brute = {r.vec_id for r in Q.QUERIES["sim_topk_brute"](spark, sf_dir).collect()}
     assert len(brute) == 10
-    print(f"sf_dir={SF_DIR}")
+    print(f"sf_dir={sf_dir}")
     for name in VARIANTS:
         fn = Q.QUERIES[name]
         walls = []
         ids: set = set()
         for _ in range(2):
             t = time.perf_counter()
-            ids = {r.vec_id for r in fn(spark, SF_DIR).collect()}
+            ids = {r.vec_id for r in fn(spark, sf_dir).collect()}
             walls.append(time.perf_counter() - t)
         print(
             {

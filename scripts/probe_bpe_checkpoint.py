@@ -22,10 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dbt_bigquery_udf_spark import get_spark  # noqa: E402
 from dbt_bigquery_udf_spark.operators import text as T  # noqa: E402
-
-STEPS = int(sys.argv[1]) if len(sys.argv) > 1 else 24
-SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-
+from dbt_bigquery_udf_spark.sources.registry import DEFAULT_SF_DIR  # noqa: E402
 
 def run_arm(base, steps: int, every: int) -> dict:
     t0 = time.perf_counter()
@@ -86,12 +83,14 @@ def run_arm(base, steps: int, every: int) -> dict:
 
 
 def main() -> None:
+    steps = int(sys.argv[1]) if len(sys.argv) > 1 else 24
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else DEFAULT_SF_DIR
     spark = get_spark(app_name="bpe-ckpt-probe")
-    base = T._bpe_base_vocab(spark, SF_DIR).persist()
+    base = T._bpe_base_vocab(spark, sf_dir).persist()
     base.count()
-    print(f"steps={STEPS} sf_dir={SF_DIR} vocab_rows={base.count()}")
+    print(f"steps={steps} sf_dir={sf_dir} vocab_rows={base.count()}")
     for every in (0, 8, 4, 2):
-        r = run_arm(base, STEPS, every)
+        r = run_arm(base, steps, every)
         print(r)
 
 

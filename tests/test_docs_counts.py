@@ -54,3 +54,58 @@ def test_curated_window_is_exactly_the_driver_prefix():
     assert len(set(_CURATED_WINDOW)) == 50
     missing = [q for q in _CURATED_WINDOW if q not in QUERIES]
     assert not missing, missing
+
+
+# Every query registered with ``lifecycle=True``: admissions, folds,
+# retrains, upserts, erasures, the streaming pipelines and the audits
+# composing them.
+_LIFECYCLE_NAMES = {
+    # operators/dedup.py
+    "dedup_incr_near_indexed", "stream_near_dup_admission",
+    "dedup_incr_exact_indexed", "dedup_near_auto_compacted",
+    "dedup_exact_auto_compacted", "dedup_index_forget",
+    "stream_near_dup_forget", "pipeline_incremental_admission",
+    "stream_exact_admission", "dedup_exact_forget", "stream_exact_forget",
+    # operators/similarity.py
+    "sim_ivf_forget", "stream_ivf_forget", "sim_ivf_upsert",
+    "sim_ivf_retrain", "sim_ivf_retrain_epoch2", "sim_ivf_retrain_policy",
+    "stream_ivf_admission",
+    # streaming/pipelines.py
+    "stream_hourly_rollup", "stream_sessionize", "stream_user_state",
+    "stream_dedup", "stream_static_join", "stream_stream_join",
+    "stream_foreachbatch_sink", "stream_topk_trending",
+    "stream_transform_with_state", "stream_recovery_resume",
+    "stream_quality_gate",
+}
+
+
+def test_lifecycle_flag_orders_the_bench(monkeypatch):
+    """The registry's ``lifecycle=True`` flag, not the query names,
+    decides which queries bench.py runs last: HEADLINE is its serving
+    reads, then its lifecycle queries, each group in curated-then-
+    registration order."""
+    monkeypatch.syspath_prepend(REPO)
+    import bench
+    from dbt_bigquery_udf_spark.queries import LIFECYCLE, QUERIES
+
+    assert LIFECYCLE == _LIFECYCLE_NAMES
+    assert "sim_ivf_trained_indexed" not in LIFECYCLE
+    order = bench._CURATED + [n for n in QUERIES if n not in bench._CURATED]
+    assert bench.HEADLINE == [n for n in order if n not in LIFECYCLE] + [
+        n for n in order if n in LIFECYCLE
+    ]
+
+
+def test_perfbench_index_queries_are_lifecycle(monkeypatch):
+    """perfbench picks its index-mutating queries by its own name rule;
+    every pick is a lifecycle query except the trained-IVF serving read,
+    which builds its index when absent (a write perfbench times) but
+    serves reads in bench.py. A new drift between the two rules fails
+    here."""
+    monkeypatch.syspath_prepend(os.path.join(REPO, "perfbench"))
+    import workloads
+
+    from dbt_bigquery_udf_spark.queries import LIFECYCLE, QUERIES
+
+    picked = set(workloads.index_queries(QUERIES))
+    assert picked - LIFECYCLE == {"sim_ivf_trained_indexed"}

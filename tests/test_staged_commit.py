@@ -19,6 +19,7 @@ import pytest
 from dbt_bigquery_udf_spark.operators.index_store import (
     STAGE_COMPLETE_MARKER,
     clear_tables,
+    db_dir,
     db_location,
     drop_snapshot,
     recover_staged,
@@ -233,3 +234,22 @@ def test_snapshot_restore_of_empty_table(spark, db):
     snapshot_tables(spark, db, ("live",))
     assert restore_snapshot(spark, db, ("live",))
     assert _ids(spark, db) == []
+
+
+def test_non_local_warehouse_raises(spark, db, monkeypatch):
+    """The commits rename, hardlink and move files on one local volume,
+    so a database whose location is not ``file:`` fails loudly, naming
+    the URI, before anything is dropped — no silent fallback."""
+    from dbt_bigquery_udf_spark.operators import index_store
+
+    _mk_live(spark, db, range(3))
+    monkeypatch.setitem(
+        index_store._DB_LOCATION_CACHE,
+        (index_store._warehouse(spark), db),
+        "s3a://b/x.db",
+    )
+    with pytest.raises(RuntimeError, match="s3a://b/x.db"):
+        db_dir(spark, db)
+    with pytest.raises(RuntimeError, match="s3a://b/x.db"):
+        clear_tables(spark, db, ("live",))
+    assert spark.catalog.tableExists(f"{db}.live")
