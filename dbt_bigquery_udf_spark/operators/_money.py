@@ -28,15 +28,6 @@ def disc_revenue_sum(prefix: str = "") -> Column:
     )
 
 
-def disc_revenue_sum_sql(prefix: str = "") -> str:
-    """DuckDB oracle text for the same exact-integer revenue sum."""
-    return (
-        f"round(CAST(sum(CAST(round({prefix}l_extendedprice * 100, 0) AS BIGINT)"
-        f" * (100 - CAST(round({prefix}l_discount * 100, 0) AS BIGINT)))"
-        " AS DOUBLE) / 10000.0, 2)"
-    )
-
-
 def cents_sum(col: str) -> Column:
     """Spark: exact BIGINT-cents sum of a 2-decimal money column,
     DECIMAL(38,0)-accumulated (order-free)."""

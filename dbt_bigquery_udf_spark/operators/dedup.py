@@ -1190,12 +1190,10 @@ def _near_index_db(sf_dir: str) -> str:
 
 
 def _near_index_has_batch(spark: SparkSession, db: str, mod: int) -> bool:
-    return (
+    return not (
         spark.table(f"{db}.sigs")
         .filter(F.col("doc_id") % INCR_NEAR_MOD == mod)
-        .limit(1)
-        .count()
-        > 0
+        .isEmpty()
     )
 
 
@@ -1250,6 +1248,11 @@ def _score_batch_vs_index(
         )
     )
     inter = F.size(F.array_intersect("ha", "hb"))
+    # union >= 1 on every scored row: a signature row exists only for a
+    # doc with at least one shingle, so both hs arrays are non-empty.
+    # That keeps jac, and so the struct's first field nj, non-NULL; the
+    # struct min below sorts a NULL first field FIRST, where the window
+    # it replaced sorted a NULL jaccard last.
     union = F.size("ha") + F.size("hb") - inter
     jac = F.round(inter.cast("double") / union, 4)
     best = (
@@ -1862,12 +1865,10 @@ def dedup_incr_exact_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     for bid, mod in ((0, INCR_IDX_BATCH1), (1, INCR_IDX_BATCH2)):
         with catalog_lock:
-            done = (
+            done = not (
                 spark.table(f"{db}.verdicts")
                 .filter(F.col("batch_id") == bid)
-                .limit(1)
-                .count()
-                > 0
+                .isEmpty()
             )
             if not done:
                 batch = (
@@ -1955,6 +1956,11 @@ def _reset_layered_pair(
     Production never does this reset — it keeps folding forward; the
     demo needs replay determinism for its oracle.
 
+    WHEN the probe runs: only when ``build_base()`` reused (or adopted)
+    an existing base, or when ``recover_staged`` finished an interrupted
+    commit. A base this call has just built from the corpus holds no
+    batch rows, so probing it would only spend Spark jobs.
+
     ORDER MATTERS: the probe runs AFTER ``build_base()``, not before —
     a fresh session's catalog is empty, but ``ensure_tables`` then
     ADOPTS the previous process's (possibly polluted) parquet by
@@ -1976,11 +1982,12 @@ def _reset_layered_pair(
 
     base_tables = tuple(delta_schemas)
     with catalog_lock:
-        if build_base() == "built":  # adopt-or-build; may adopt polluted
+        built = build_base() == "built"  # adopt-or-build; may adopt polluted
+        if built:
             drop_snapshot(spark, base_db)
         # finish any interrupted restore/depollute commit before probing
-        recover_staged(spark, base_db, base_tables)
-        if pollution_probe(base_db):
+        recovered = recover_staged(spark, base_db, base_tables)
+        if (recovered or not built) and pollution_probe(base_db):
             if not restore_snapshot(spark, base_db, base_tables):
                 if depollute is not None:
                     depollute(base_db)
@@ -2011,8 +2018,8 @@ def dedup_near_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical read/write shape to the streaming gate, plus the
     fold (a delta-sized file move, no write job) amortized across the
-    batches that triggered it; the trigger check itself is two metadata
-    row counts per admission.
+    batches that triggered it; the trigger check itself is two
+    parquet-footer row counts per admission, no Spark job.
     """
     from .index_store import staged_overwrite
 
@@ -2039,11 +2046,9 @@ def dedup_near_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta_db,
         lambda: build_near_dup_index(spark, sf_dir, db=base_db),
         _NEAR_IDX_DDL,
-        lambda db: spark.table(f"{db}.sigs")
+        lambda db: not spark.table(f"{db}.sigs")
         .filter(F.col("doc_id") % INCR_NEAR_MOD < INCR_IDX_BASE_MOD)
-        .limit(1)
-        .count()
-        > 0,
+        .isEmpty(),
         depollute=_depollute,
     )
     out = []
@@ -2089,13 +2094,11 @@ def dedup_exact_auto_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("doc_id") % INCR_NEAR_MOD >= INCR_IDX_BASE_MOD)
             .select(F.md5("text").alias("h"))
         )
-        return (
+        return not (
             spark.table(f"{db}.hashes")
             .join(batch_hashes, "h", "left_semi")
             .join(base_only, "h", "left_anti")
-            .limit(1)
-            .count()
-            > 0
+            .isEmpty()
         )
 
     _reset_layered_pair(

@@ -43,6 +43,11 @@ Tables are emptied by deleting their data files in place
 (:func:`empty_table`), which works on managed and EXTERNAL tables alike;
 ``TRUNCATE TABLE`` is rejected on the EXTERNAL tables adoption creates.
 
+**Bookkeeping without Spark jobs.** A table's row count
+(:func:`row_count`) is the sum of its part files' parquet-footer row
+counts, and a table copy (:func:`clone_table`) hardlinks the source's
+part files and registers them by location, so neither starts a job.
+
 **Per-run scratch** (:func:`reset_scratch`): the demo queries' per-run
 delta and tombstone tables are emptied in place, or created empty;
 scratch left by another process is cleared, never adopted.
@@ -74,6 +79,7 @@ import re
 import shutil
 from typing import Callable, Iterable, Mapping, Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -96,6 +102,8 @@ __all__ = [
     "restore_snapshot",
     "drop_snapshot",
     "move_table_files",
+    "clone_table",
+    "row_count",
     "empty_table",
     "reset_scratch",
     "read_live",
@@ -170,19 +178,14 @@ def _warehouse(spark: SparkSession) -> str:
 
 
 def db_location(spark: SparkSession, db: str) -> str:
-    """The database's warehouse location URI (``file:/...``), cached per
-    (warehouse, db): a database's location never changes while it
-    exists, and every re-create lands at the same derived location, so
-    the DESCRIBE round-trip (~50ms) is paid once per process instead of
-    several times per staged write."""
+    """The database's warehouse location URI (``file:/...``), read from
+    the catalog (no Spark job) and cached per (warehouse, db): a
+    database's location never changes while it exists, and every
+    re-create lands at the same derived location."""
     key = (_warehouse(spark), db)
     loc = _DB_LOCATION_CACHE.get(key)
     if loc is None:
-        loc = (
-            spark.sql(f"DESCRIBE DATABASE {db}")
-            .filter(F.col("info_name") == "Location")
-            .first()["info_value"]
-        )
+        loc = spark.catalog.getDatabase(db).locationUri
         _DB_LOCATION_CACHE[key] = loc
     return loc
 
@@ -376,13 +379,10 @@ def recover_staged(
                 continue
             if not os.path.isdir(sdir):
                 continue
-            has_parts = any(
-                f.endswith(".parquet") for f in os.listdir(sdir)
-            )
             complete = os.path.isfile(
                 os.path.join(sdir, STAGE_COMPLETE_MARKER)
             ) or os.path.isfile(os.path.join(sdir, "_SUCCESS"))
-            if has_parts and complete:
+            if _part_files(sdir) and complete:
                 spark.sql(
                     f"CREATE TABLE {db}.{staged} USING parquet "
                     f"LOCATION '{loc}/{staged}'"
@@ -411,15 +411,49 @@ def move_table_files(
     tables afterwards."""
     src = _table_dir(spark, src_db, src_table)
     dst = _table_dir(spark, dst_db, dst_table)
-    n = 0
-    if not os.path.isdir(src):
-        return 0
-    os.makedirs(dst, exist_ok=True)
-    for f in os.listdir(src):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(src, f), os.path.join(dst, f))
-            n += 1
-    return n
+    parts = _part_files(src)
+    if parts:
+        os.makedirs(dst, exist_ok=True)
+    for f in parts:
+        os.rename(os.path.join(src, f), os.path.join(dst, f))
+    return len(parts)
+
+
+def clone_table(
+    spark: SparkSession,
+    src_db: str,
+    src_table: str,
+    dst_db: str,
+    dst_table: str,
+) -> None:
+    """Replace ``dst`` with a copy of ``src`` without a Spark job:
+    hardlink ``src``'s part files into ``dst``'s directory and register
+    ``dst`` EXTERNAL over them with ``src``'s catalog schema (so a
+    source with zero part files clones as an empty table). Parquet files
+    are never rewritten in place, so later appends, moves and clears of
+    ``src`` leave the clone's rows as they were."""
+    schema = spark.table(f"{src_db}.{src_table}").schema  # catalog-only read
+    with catalog_lock:
+        clear_tables(spark, dst_db, (dst_table,))
+        _link_parts(
+            _table_dir(spark, src_db, src_table), _table_dir(spark, dst_db, dst_table)
+        )
+        _register_external(
+            spark,
+            f"{dst_db}.{dst_table}",
+            schema,
+            f"{db_location(spark, dst_db)}/{dst_table.lower()}",
+        )
+
+
+def row_count(spark: SparkSession, db: str, table: str) -> int:
+    """``db.table``'s rows on disk, summed from its part files' parquet
+    footers: no Spark job. Reads the table's directory, not the
+    catalog's cached file listing."""
+    path = _table_dir(spark, db, table)
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows for f in _part_files(path)
+    )
 
 
 def _table_dir(spark: SparkSession, db: str, table: str) -> str:
@@ -428,10 +462,36 @@ def _table_dir(spark: SparkSession, db: str, table: str) -> str:
     return os.path.join(db_dir(spark, db), table.lower())
 
 
-def _has_parts(path: str) -> bool:
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    )
+def _part_files(path: str) -> list[str]:
+    """The names of the parquet part files in table directory ``path``
+    (none when it is missing). Underscore- and dot-prefixed entries are
+    bookkeeping (markers, checksums, a writer's ``_temporary``) and are
+    skipped, as Spark's file listing skips them. Raises on any other
+    subdirectory: a partitioned layout, which nothing here supports."""
+    if not os.path.isdir(path):
+        return []
+    parts = []
+    for f in sorted(os.listdir(path)):
+        if f.startswith(("_", ".")):
+            continue
+        if os.path.isdir(os.path.join(path, f)):
+            raise RuntimeError(
+                f"{path} holds subdirectory {f}: partitioned tables are not supported"
+            )
+        if f.endswith(".parquet"):
+            parts.append(f)
+    return parts
+
+
+def _link_parts(src: str, dst: str) -> None:
+    """Hardlink every part file of directory ``src`` into ``dst``
+    (created), byte-copying on filesystems without hardlinks."""
+    os.makedirs(dst, exist_ok=True)
+    for f in _part_files(src):
+        try:
+            os.link(os.path.join(src, f), os.path.join(dst, f))
+        except OSError:
+            shutil.copy2(os.path.join(src, f), os.path.join(dst, f))
 
 
 def _adopt(spark: SparkSession, db: str, table: str) -> bool:
@@ -442,7 +502,7 @@ def _adopt(spark: SparkSession, db: str, table: str) -> bool:
         if spark.catalog.tableExists(f"{db}.{table}"):
             return True
         _ensure_db(spark, db)
-        if not _has_parts(_table_dir(spark, db, table)):
+        if not _part_files(_table_dir(spark, db, table)):
             return False
         loc = db_location(spark, db)
         spark.sql(
@@ -554,14 +614,15 @@ def fold_delta(
     layer at every instant: a crash mid-move leaves the remaining files
     in the delta, and the next fold moves them. Delta tables on disk but
     not cataloged are adopted first. Holds the pair's lease, keyed on
-    the base like the admissions. Returns the rows moved per table."""
+    the base like the admissions. Returns the rows moved per table,
+    counted from the delta's parquet footers (:func:`row_count`)."""
     with catalog_lock, maintenance_lease(spark, base_db) as lease:
         recover_staged(spark, base_db, tables)
         present = [t for t in tables if _adopt(spark, delta_db, t)]
         for t in present:
             _adopt(spark, base_db, t)
         _refresh(spark, (base_db, delta_db), present)
-        moved = {t: spark.table(f"{delta_db}.{t}").count() for t in present}
+        moved = {t: row_count(spark, delta_db, t) for t in present}
         if any(moved.values()):
             lease.renew()
             lease.check()  # fence at the destructive step, the move
@@ -615,11 +676,11 @@ def maybe_fold_delta(
     """Size-ratio trigger, checked at admission time (the LSM shape):
     run :func:`fold_delta` once the delta's first table holds at least
     ``ratio`` times the base's rows. Below the threshold this costs two
-    row counts (at scale a parquet-footer read). The ratio self-scales:
-    a large base tolerates a large delta before folding. Returns the
-    fold's counts, or None if the trigger did not fire."""
-    n_base = spark.table(f"{base_db}.{tables[0]}").count()
-    n_delta = spark.table(f"{delta_db}.{tables[0]}").count()
+    footer reads (:func:`row_count`), no Spark job. The ratio
+    self-scales: a large base tolerates a large delta before folding.
+    Returns the fold's counts, or None if the trigger did not fire."""
+    n_base = row_count(spark, base_db, tables[0])
+    n_delta = row_count(spark, delta_db, tables[0])
     if n_delta and n_delta >= ratio * max(n_base, 1):
         return fold_delta(spark, base_db, delta_db, tables)
     return None
@@ -650,18 +711,9 @@ def snapshot_tables(
     if os.path.isfile(os.path.join(snap, SNAP_COMPLETE_MARKER)):
         return
     shutil.rmtree(snap, ignore_errors=True)
-    path = db_dir(spark, db)
     for t in tables:
-        tdir = os.path.join(path, t)
-        sdir = os.path.join(snap, t)
-        os.makedirs(sdir, exist_ok=True)
         # a table with no data files may have no directory at all
-        for f in os.listdir(tdir) if os.path.isdir(tdir) else ():
-            if f.endswith(".parquet"):
-                try:
-                    os.link(os.path.join(tdir, f), os.path.join(sdir, f))
-                except OSError:
-                    shutil.copy2(os.path.join(tdir, f), os.path.join(sdir, f))
+        _link_parts(_table_dir(spark, db, t), os.path.join(snap, t))
     with open(os.path.join(snap, SNAP_COMPLETE_MARKER), "w") as fh:
         fh.write("complete")
 
@@ -702,17 +754,7 @@ def restore_snapshot(
             staged = f"{t}__staged"
             clear_tables(spark, db, (staged,))
             sdir = os.path.join(path, staged)
-            os.makedirs(sdir, exist_ok=True)
-            for f in os.listdir(os.path.join(snap, t)):
-                if f.endswith(".parquet"):
-                    try:
-                        os.link(
-                            os.path.join(snap, t, f), os.path.join(sdir, f)
-                        )
-                    except OSError:
-                        shutil.copy2(
-                            os.path.join(snap, t, f), os.path.join(sdir, f)
-                        )
+            _link_parts(os.path.join(snap, t), sdir)
             with open(
                 os.path.join(sdir, STAGE_COMPLETE_MARKER), "w"
             ) as fh:

@@ -2717,12 +2717,10 @@ def upsert_ivf_vectors(spark: SparkSession, sf_dir: str) -> str:
 
     db = _ivf_index_db(sf_dir) + "_up"
     with catalog_lock, maintenance_lease(spark, db) as lease:
-        done = (
+        done = not (
             spark.table(f"{db}.assign")
             .filter(F.col("vec_id") % IVF_UPSERT_MOD == 0)
-            .limit(1)
-            .count()
-            > 0
+            .isEmpty()
         )
         if done:
             return "reused"
@@ -3048,14 +3046,17 @@ def _rt_live_version(spark: SparkSession, db: str) -> int:
     ]
     if not available:
         return 1
-    rows = []
-    if spark.catalog.tableExists(f"{db}.live_version"):
-        rows = spark.table(f"{db}.live_version").collect()
-    if rows:
-        ptr = max(int(r["version"]) for r in rows)
-        if ptr in available:
-            return ptr
-    return max(available)
+    ptr = _rt_pointer(spark, db)
+    return ptr if ptr in available else max(available)
+
+
+def _rt_pointer(spark: SparkSession, db: str) -> int | None:
+    """The ``live_version`` pointer's value (its highest row; one
+    collect), or None when the table is missing or empty."""
+    if not spark.catalog.tableExists(f"{db}.live_version"):
+        return None
+    rows = spark.table(f"{db}.live_version").collect()
+    return max((int(r["version"]) for r in rows), default=None)
 
 
 def _rt_set_live_version(spark: SparkSession, db: str, version: int) -> None:
@@ -3083,20 +3084,19 @@ def _rt_ensure_v1(spark: SparkSession, sf_dir: str, db: str) -> str:
     ``_up`` artifact (owned-split training + frozen-centroid upserts)
     with a pointer at 1 — shared by :func:`retrain_ivf_index` and the
     policy gate :func:`maybe_retrain_ivf` (whose skip branch must still
-    have a live version to serve from)."""
-    from .index_store import ensure_tables
+    have a live version to serve from). The v1 tables are hardlink
+    clones of the ``_up`` tables (:func:`index_store.clone_table`): no
+    Spark job and no bytes copied. The pointer is written last, so its
+    presence witnesses a complete group."""
+    from .index_store import clone_table, ensure_tables
 
     up = _ivf_index_db(sf_dir) + "_up"
 
     def _build_v1() -> None:
         build_ivf_base_index(spark, sf_dir)
         upsert_ivf_vectors(spark, sf_dir)
-        spark.table(f"{up}.centroids").write.format("parquet").saveAsTable(
-            f"{db}.centroids_v1"
-        )
-        spark.table(f"{up}.assign").write.format("parquet").saveAsTable(
-            f"{db}.assign_v1"
-        )
+        clone_table(spark, up, "centroids", db, "centroids_v1")
+        clone_table(spark, up, "assign", db, "assign_v1")
         local_rows_df(spark, [(1,)], "version int").write.format(
             "parquet"
         ).saveAsTable(f"{db}.live_version")
@@ -3114,8 +3114,9 @@ def retrain_ivf_index(
        training + full-corpus assignment, i.e. the shared ``_up`` index
        incl. its upserts), versioned into a dedicated ``_rt`` database
        as ``centroids_v1``/``assign_v1`` with a 1-row ``live_version``
-       pointer. At 100 TB this copy is a metadata operation (snapshot /
-       CTAS of the index partitions); here it's a small table copy.
+       pointer. The copy is a hardlink clone of the ``_up`` files
+       (:func:`index_store.clone_table`): a metadata operation at any
+       scale, with no Spark job.
     2. **v2** = the retrain: ONE Lloyd refresh over the CURRENT corpus
        grouped by the v1 assignment (exactly the step the drift trigger
        measures — trigger and execution share the math), then a full
@@ -3134,7 +3135,9 @@ def retrain_ivf_index(
     ``index_store.ensure_tables`` bootstrap (catalog-first reuse,
     cross-session location adoption, clear-and-rebuild on half-written
     groups), and the pointer bump replays harmlessly. Returns
-    ``{"v1": ..., "v2": ..., "live": 2}``.
+    ``{"v1": ..., "v2": ..., "live": 2}``: the swap reads the pointer
+    once, and afterwards it says 2 with v2 complete, so callers serve
+    ``live`` without resolving the version again.
     """
     from ..catalog import catalog_lock
 
@@ -3184,12 +3187,10 @@ def retrain_ivf_index(
             spark, db, _RT_V2_TABLES, _build_v2, expect=_RT_SCHEMA
         )
         with catalog_lock:
-            if _rt_live_version(spark, db) < 2 or not spark.table(
-                f"{db}.live_version"
-            ).count():
+            if _rt_pointer(spark, db) != 2:
                 lease.check()  # fence before the pointer swap
                 _rt_set_live_version(spark, db, 2)
-    return {"v1": r1, "v2": r2, "live": _rt_live_version(spark, db)}
+    return {"v1": r1, "v2": r2, "live": 2}
 
 
 def gc_ivf_versions(
@@ -3231,10 +3232,7 @@ def gc_ivf_versions(
         have_v2 = all(
             spark.catalog.tableExists(f"{db}.{t}") for t in _RT_V2_TABLES
         )
-        ptr_rows = []
-        if spark.catalog.tableExists(f"{db}.live_version"):
-            ptr_rows = spark.table(f"{db}.live_version").collect()
-        ptr = max((int(r["version"]) for r in ptr_rows), default=0)
+        ptr = _rt_pointer(spark, db)
         if not have_v2:
             if ptr != 1:
                 # step-3 crash remnant: finish the pointer reset
@@ -3363,9 +3361,8 @@ def sim_ivf_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     readers never block on the rebuild (FAISS/production vector-store
     shape).
     """
-    retrain_ivf_index(spark, sf_dir)
+    v = retrain_ivf_index(spark, sf_dir)["live"]
     db = _rt_db(sf_dir)
-    v = _rt_live_version(spark, db)
     e = _emb(spark, sf_dir)
     qv = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("emb").head()[0]
     q_lit = F.array(*[F.lit(float(x)) for x in qv])
@@ -3531,8 +3528,7 @@ def sim_ivf_retrain_epoch2(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrain_ivf_index(spark, sf_dir, db=db)
     gc = gc_ivf_versions(spark, sf_dir, db=db)
     assert gc["gc"] == "promoted", gc
-    retrain_ivf_index(spark, sf_dir, db=db)
-    v = _rt_live_version(spark, db)
+    v = retrain_ivf_index(spark, sf_dir, db=db)["live"]
     e = _emb(spark, sf_dir)
     qv = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("emb").head()[0]
     q_lit = F.array(*[F.lit(float(x)) for x in qv])

@@ -16,6 +16,9 @@ canonicalizer ``sort_values``-crashes on ``numpy.ndarray`` columns (round-1
 ``stats_approx_sketches`` err), even for rows-only queries, so any query
 that could rotate into the driver's window must serialize arrays to
 scalars/strings first.
+
+:func:`job_ids` counts the Spark jobs a block starts; the tests and
+``scripts/probe.py time`` share it.
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ import datetime
 import decimal
 import math
 import os
+import uuid
+from contextlib import contextmanager
 from typing import Any
 
 import duckdb
@@ -31,7 +36,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
-__all__ = ["duckdb_connection", "compare_query"]
+__all__ = ["duckdb_connection", "compare_query", "job_ids"]
 
 TABLES = (
     "region",
@@ -177,3 +182,20 @@ def compare_query(
         return result
     result.update(status="match", ok=True)
     return result
+
+
+@contextmanager
+def job_ids(spark: SparkSession):
+    """Collects the ids of the Spark jobs started inside the block (from
+    this thread, or threads that inherit its job group)."""
+    sc = spark.sparkContext
+    group = f"job-ids-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))

@@ -7,7 +7,8 @@ replicas, and per-query comparison of two bench sidecars.
 
 ``time`` resets the retrain-epoch databases (``bench._reset_epoch_dbs``)
 and prints, per query, the end-to-end fn+collect runs and their minimum
-(``bench.time_query``, the bench's own timing loop). ``--top N`` adds
+(``bench.time_query``, the bench's own timing loop), and the number of
+Spark jobs each run started (``jobs``). ``--top N`` adds
 the N slowest queries of the bench sidecar for this core count;
 ``--plans DIR`` writes each query's ``explain("formatted")`` to
 ``DIR/<name>.txt`` (for lifecycle queries that is the plan of the final
@@ -51,6 +52,7 @@ import bench  # noqa: E402
 from dbt_bigquery_udf_spark import get_spark  # noqa: E402
 from dbt_bigquery_udf_spark import queries as Q  # noqa: E402
 from dbt_bigquery_udf_spark.session import default_cpus  # noqa: E402
+from dbt_bigquery_udf_spark.testing import job_ids  # noqa: E402
 
 # Key columns shifted per replica copy, so joins and groups scale with
 # the data instead of collapsing onto the first copy's keys.
@@ -133,7 +135,11 @@ def _time(args) -> None:
     for name in names:
         fn = Q.QUERIES[name]
         bench._reset_epoch_dbs(spark, args.sf_dir)
-        runs = bench.time_query(spark, fn, args.runs, args.sf_dir)
+        runs, jobs = [], []
+        for _ in range(args.runs):
+            with job_ids(spark) as ids:
+                runs += bench.time_query(spark, fn, 1, args.sf_dir)
+            jobs.append(len(ids))
         if args.plans:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
@@ -141,7 +147,8 @@ def _time(args) -> None:
             with open(os.path.join(args.plans, f"{name}.txt"), "w") as fh:
                 fh.write(buf.getvalue())
         spark.catalog.clearCache()
-        print(json.dumps({"query": name, "runs": runs, "min": min(runs)}))
+        print(json.dumps(
+            {"query": name, "runs": runs, "min": min(runs), "jobs": jobs}))
         sys.stdout.flush()
 
 

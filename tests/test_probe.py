@@ -49,6 +49,7 @@ def test_time_prints_one_line_per_query(spark, sf_small, capsys):
     rec = json.loads(lines[0])
     assert rec["query"] == "q1_pricing_summary"
     assert len(rec["runs"]) == 1 and rec["min"] == rec["runs"][0] > 0
+    assert len(rec["jobs"]) == 1 and rec["jobs"][0] > 0
 
 
 def test_compare_ratios_and_geomean(tmp_path, capsys):

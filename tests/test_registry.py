@@ -12,9 +12,7 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import uuid
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -28,6 +26,7 @@ from dbt_bigquery_udf_spark.sources.registry import (
     register_sources,
     register_sources_catalog,
 )
+from dbt_bigquery_udf_spark.testing import job_ids
 
 DB = "t_registry_src"
 
@@ -58,22 +57,6 @@ def corpus(sf_small, tmp_path):
     return str(d)
 
 
-@contextmanager
-def _jobs(spark):
-    """Collects the ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    group = f"registry-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "registry test")
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
@@ -83,9 +66,9 @@ def test_bootstrap_infers_each_source_once_per_session(spark, sf_small):
     inference, shared by both registrations); a repeat runs none."""
     s = spark.newSession()
     try:
-        with _jobs(s) as first:
+        with job_ids(s) as first:
             api.bootstrap(s, sf_small)
-        with _jobs(s) as second:
+        with job_ids(s) as second:
             api.bootstrap(s, sf_small)
     finally:
         # the src tables are session-global: make the next
@@ -102,7 +85,7 @@ def test_concurrent_registrations_share_one_inference(spark, sf_small):
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
-        with _jobs(s) as jobs:
+        with job_ids(s) as jobs:
             register = inheritable_thread_target(s)(
                 lambda: register_sources(s, sf_small)
             )
@@ -117,7 +100,7 @@ def test_concurrent_registrations_share_one_inference(spark, sf_small):
 
 def test_view_and_catalog_schemas_match(session, corpus):
     register_sources(session, corpus)
-    with _jobs(session) as jobs:
+    with job_ids(session) as jobs:
         register_sources_catalog(session, corpus, database=DB)
     assert jobs == []  # the catalog reuses the temp views' inference
     for name in SOURCE_TABLES:
@@ -151,7 +134,7 @@ def test_file_regenerated_in_place_is_inferred_again(session, corpus):
     pq.write_table(t.append_column("r_extra", pa.array(range(t.num_rows))), path)
     st = os.stat(path)  # a distinct mtime even on a coarse-clock filesystem
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    with _jobs(session) as jobs:
+    with job_ids(session) as jobs:
         register_sources(session, corpus)
         register_sources_catalog(session, corpus, database=DB)
     assert len(jobs) == 1  # region only
@@ -164,7 +147,7 @@ def test_symlinked_sources_share_their_target_inference(session, sf_small, tmp_p
     register_sources(session, sf_small)
     for name in SOURCE_TABLES:
         os.symlink(os.path.join(sf_small, f"{name}.parquet"), tmp_path / f"{name}.parquet")
-    with _jobs(session) as jobs:
+    with job_ids(session) as jobs:
         register_sources(session, str(tmp_path))
     assert jobs == []
 
