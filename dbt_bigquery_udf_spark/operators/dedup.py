@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ..queries import register
 from .util import local_rows_df
 from ..sources.registry import register_sources
+from .streams import Staged, scratch_dir, stage_batches, stream_batches
 from .util import ensure_min_partitions
 
 N_HASHES = 16
@@ -1294,15 +1295,6 @@ _NEAR_IDX_TABLES = tuple(_NEAR_IDX_DDL)
 _NEAR_IDX_SCHEMA = {"bands": ("doc_id", "band", "key"), "sigs": ("doc_id", "hs")}
 
 
-def _clear_partial_index(spark: SparkSession, db: str) -> None:
-    """A half-written index (one table dir present, its sibling missing —
-    a crash between the two writes) is garbage: drop any registered
-    half and its leftover location so the rebuild starts clean."""
-    from .index_store import clear_tables
-
-    clear_tables(spark, db, _NEAR_IDX_TABLES)
-
-
 def build_near_dup_index(
     spark: SparkSession, sf_dir: str, db: str | None = None, fresh: bool = False
 ) -> str:
@@ -1567,41 +1559,19 @@ def dedup_incr_near_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- STREAMING near-dup admission over the persisted index -------------------
 
 
-def _stage_near_dup_arrivals(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the arriving corpus as TWO parquet files in a stream-source
-    directory — batch 1 (doc_id % {INCR_NEAR_MOD} == {INCR_IDX_BATCH1})
-    with an older mtime than batch 2 ({INCR_IDX_BATCH2}), so the file
-    source (which orders by modification time) delivers them as two
-    micro-batches in a pinned order. In production this is the landing
-    prefix batches arrive at; this function disappears."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from .index_store import scratch_dir
-
-    # fingerprint-keyed (ADVICE r8): a corpus regenerated in place gets
-    # a fresh staging dir instead of replaying stale arrival files
-    stage = scratch_dir("docs_arrivals", sf_dir, ("documents.parquet",))
-    if all(
-        os.path.exists(os.path.join(stage, f"b{i}.parquet")) for i in (0, 1)
-    ):
-        return stage
-    os.makedirs(stage, exist_ok=True)
+def _stage_doc_waves(
+    spark: SparkSession, sf_dir: str, kind: str, mods: tuple[int, int], *cols: str
+) -> Staged:
+    """Stage the ``doc_id % {INCR_NEAR_MOD}`` slices ``mods`` (``cols``
+    only, default every column) as micro-batches 0 and 1 of a document
+    stream (:func:`streams.stage_batches`). The arriving corpus is
+    {INCR_IDX_BATCH1} then {INCR_IDX_BATCH2}; forget requests are
+    {INCR_IDX_FORGET} then {NEAR_FORGET_WAVE2}, doc_id only."""
     d = _docs(spark, sf_dir)
-    now = time.time()
-    for i, mod in enumerate((INCR_IDX_BATCH1, INCR_IDX_BATCH2)):
-        tmp = os.path.join(stage, f".tmp{i}")
-        d.filter(F.col("doc_id") % INCR_NEAR_MOD == mod).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(stage, f"b{i}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dest, (now - 120 + i * 60, now - 120 + i * 60))
-    return stage
+    waves = [d.filter(F.col("doc_id") % INCR_NEAR_MOD == m) for m in mods]
+    if cols:
+        waves = [w.select(*cols) for w in waves]
+    return stage_batches(spark, kind, sf_dir, "documents.parquet", waves)
 
 
 def _duck_stream_admission() -> str:
@@ -1693,7 +1663,7 @@ def stream_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged dir and the sink becomes the curated-corpus table; nothing
     else changes.
     """
-    from .index_store import reset_scratch, scratch_dir
+    from .index_store import reset_scratch
 
     # Layered index, the production shape: the BASE is immutable and
     # built/adopted ONCE (reused across invocations — at 100 TB you
@@ -1702,7 +1672,9 @@ def stream_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without a rebuild (measured: ~6s -> ~2s per bench run at sf0.1).
     base_db = _near_index_db(sf_dir) + "_sbase"
     delta_db = _near_index_db(sf_dir) + "_sdelta"
-    stage = _stage_near_dup_arrivals(spark, sf_dir)
+    staged = _stage_doc_waves(
+        spark, sf_dir, "docs_arrivals", (INCR_IDX_BATCH1, INCR_IDX_BATCH2)
+    )
     build_near_dup_index(spark, sf_dir, db=base_db)
     reset_scratch(spark, delta_db, _NEAR_IDX_DDL)
 
@@ -1713,31 +1685,12 @@ def stream_near_dup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         "near_dup_verdicts", sf_dir, ("documents.parquet",), fresh=True
     )
 
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts = _admit_batch_df(
+    def _on_batch(batch_df: DataFrame) -> DataFrame:
+        return _admit_batch_df(
             spark, (base_db, delta_db), batch_df, write_db=delta_db
-        )
-        verdicts.withColumn(
-            "batch_id", F.lit(int(batch_id)).cast("int")
-        ).select(
-            "batch_id", "new_id", "matched_doc", "jaccard", "is_near_dup"
-        ).write.mode("append").parquet(out_dir)
+        ).select("new_id", "matched_doc", "jaccard", "is_near_dup")
 
-    schema = spark.read.parquet(stage).schema
-    docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = (
-        docs.writeStream.foreachBatch(_on_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming query did not terminate within 600s")
-    return spark.read.parquet(out_dir)
+    return stream_batches(spark, staged, _on_batch, out_dir)
 
 
 # -- incremental EXACT dedup against a PERSISTED hash set --------------------
@@ -2206,39 +2159,6 @@ def dedup_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEAR_FORGET_WAVE2 = 4  # doc_id % 7 == 4 -> the second streamed erasure wave
 
 
-def _stage_forget_requests(spark: SparkSession, sf_dir: str) -> str:
-    """Stage two FORGET-REQUEST files (doc_id only) in pinned mtime
-    order: wave 1 = the {INCR_IDX_FORGET} slice, wave 2 = the
-    {NEAR_FORGET_WAVE2} slice. In production this is the
-    right-to-be-forgotten request queue's landing prefix."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from .index_store import scratch_dir
-
-    stage = scratch_dir("forget_arrivals", sf_dir, ("documents.parquet",))
-    if all(
-        os.path.exists(os.path.join(stage, f"b{i}.parquet")) for i in (0, 1)
-    ):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    d = _docs(spark, sf_dir)
-    now = time.time()
-    for i, mod in enumerate((INCR_IDX_FORGET, NEAR_FORGET_WAVE2)):
-        tmp = os.path.join(stage, f".tmp{i}")
-        d.filter(F.col("doc_id") % INCR_NEAR_MOD == mod).select(
-            "doc_id"
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(stage, f"b{i}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dest, (now - 120 + i * 60, now - 120 + i * 60))
-    return stage
-
-
 def _duck_stream_forget() -> str:
     """Oracle: the probe batch scored twice against the owned index
     with PROGRESSIVELY larger erased sets — after wave 1 the
@@ -2315,12 +2235,14 @@ def stream_near_dup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|wave|) regardless of index size; verdicts are sink-written,
     never collected.
     """
-    from .index_store import forget, reset_scratch, scratch_dir
+    from .index_store import forget, reset_scratch
 
     db = _near_index_db(sf_dir) + "_fgs"
     build_near_dup_index(spark, sf_dir, db=db)
     reset_scratch(spark, db, {"tombstones": "doc_id bigint"})
-    stage = _stage_forget_requests(spark, sf_dir)
+    staged = _stage_doc_waves(
+        spark, sf_dir, "forget_arrivals", (INCR_IDX_FORGET, NEAR_FORGET_WAVE2), "doc_id"
+    )
     out_dir = scratch_dir(
         "forget_verdicts", sf_dir, ("documents.parquet",), fresh=True
     )
@@ -2328,35 +2250,13 @@ def stream_near_dup_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % INCR_NEAR_MOD == INCR_IDX_BATCH1
     )
 
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def _on_batch(batch_df: DataFrame) -> DataFrame:
         forget(spark, db, "doc_id", batch_df.select("doc_id"))
-        (
-            _score_batch_vs_index(
-                spark, db, _doc_signatures(probe), anchor_docs=probe
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("int"))
-            .select(
-                "batch_id", "new_id", "matched_doc", "jaccard", "is_near_dup"
-            )
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        return _score_batch_vs_index(
+            spark, db, _doc_signatures(probe), anchor_docs=probe
+        ).select("new_id", "matched_doc", "jaccard", "is_near_dup")
 
-    schema = spark.read.parquet(stage).schema
-    reqs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = (
-        reqs.writeStream.foreachBatch(_on_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming query did not terminate within 600s")
-    return spark.read.parquet(out_dir)
+    return stream_batches(spark, staged, _on_batch, out_dir)
 
 
 @register(
@@ -2540,11 +2440,13 @@ def stream_exact_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup gate in pipeline_incremental_admission's production
     ordering. Verdicts are WRITTEN (parquet sink), never collected.
     """
-    from .index_store import reset_scratch, scratch_dir
+    from .index_store import reset_scratch
 
     base_db = _exact_index_db(sf_dir) + "_sbase"
     delta_db = _exact_index_db(sf_dir) + "_sdelta"
-    stage = _stage_near_dup_arrivals(spark, sf_dir)
+    staged = _stage_doc_waves(
+        spark, sf_dir, "docs_arrivals", (INCR_IDX_BATCH1, INCR_IDX_BATCH2)
+    )
     build_exact_dup_index(spark, sf_dir, db=base_db)
     reset_scratch(spark, delta_db, {"hashes": "h string"})
 
@@ -2555,31 +2457,12 @@ def stream_exact_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_verdicts", sf_dir, ("documents.parquet",), fresh=True
     )
 
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts = _admit_exact_batch_df(
+    def _on_batch(batch_df: DataFrame) -> DataFrame:
+        return _admit_exact_batch_df(
             spark, (base_db, delta_db), batch_df, write_db=delta_db
-        )
-        verdicts.withColumn(
-            "batch_id", F.lit(int(batch_id)).cast("int")
-        ).select("batch_id", "doc_id", "is_dup").write.mode(
-            "append"
-        ).parquet(out_dir)
+        ).select("doc_id", "is_dup")
 
-    schema = spark.read.parquet(stage).schema
-    docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = (
-        docs.writeStream.foreachBatch(_on_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming query did not terminate within 600s")
-    return spark.read.parquet(out_dir)
+    return stream_batches(spark, staged, _on_batch, out_dir)
 
 
 # -- targeted erasure for the EXACT gate (doc-level hash state) --------------
@@ -2741,12 +2624,14 @@ def stream_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-sized probe through a broadcast anti-join + a probe-set
     distinct over the semi-joined partitions.
     """
-    from .index_store import forget, reset_scratch, scratch_dir
+    from .index_store import forget, reset_scratch
 
     db = _exact_index_db(sf_dir) + "_fgx"
     _build_doc_hashes(spark, sf_dir, db)
     reset_scratch(spark, db, {"tombstones": "doc_id bigint"})
-    stage = _stage_forget_requests(spark, sf_dir)
+    staged = _stage_doc_waves(
+        spark, sf_dir, "forget_arrivals", (INCR_IDX_FORGET, NEAR_FORGET_WAVE2), "doc_id"
+    )
     out_dir = scratch_dir(
         "exact_forget_verdicts", sf_dir, ("documents.parquet",), fresh=True
     )
@@ -2754,31 +2639,11 @@ def stream_exact_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % INCR_NEAR_MOD == INCR_IDX_BATCH1
     )
 
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def _on_batch(batch_df: DataFrame) -> DataFrame:
         forget(spark, db, "doc_id", batch_df.select("doc_id"))
-        (
-            _score_batch_vs_doc_hashes(spark, db, probe)
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("int"))
-            .select("batch_id", "doc_id", "is_dup")
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        return _score_batch_vs_doc_hashes(spark, db, probe)
 
-    schema = spark.read.parquet(stage).schema
-    reqs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = (
-        reqs.writeStream.foreachBatch(_on_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming query did not terminate within 600s")
-    return spark.read.parquet(out_dir)
+    return stream_batches(spark, staged, _on_batch, out_dir)
 
 
 # -- LSH operational diagnostics: bucket skew / candidate-pair budget --------

@@ -48,9 +48,11 @@ Tables are emptied by deleting their data files in place
 counts, and a table copy (:func:`clone_table`) hardlinks the source's
 part files and registers them by location, so neither starts a job.
 
-**Per-run scratch** (:func:`reset_scratch`): the demo queries' per-run
-delta and tombstone tables are emptied in place, or created empty;
-scratch left by another process is cleared, never adopted.
+**Per-run scratch** (:func:`reset_scratch`): the streaming gates'
+per-run delta and tombstone tables are emptied in place, or created
+empty; scratch left by another process is cleared, never adopted. Their
+staged arrival files and parquet sinks are directories under
+``.stream-staging``, named by :func:`.streams.scratch_dir`.
 
 **Model tables** commit here too, one protocol per kind of write. A
 model rewritten in place from a frame that reads it (a snapshot's SCD2
@@ -95,7 +97,6 @@ __all__ = [
     "db_dir",
     "ensure_tables",
     "clear_tables",
-    "scratch_dir",
     "staged_overwrite",
     "recover_staged",
     "snapshot_tables",
@@ -125,30 +126,6 @@ def index_db_name(prefix: str, sf_dir: str, files: Sequence[str]) -> str:
     aids debugging; the fingerprint carries the identity guarantee."""
     tag = re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
     return f"{prefix}_{tag}_{corpus_fingerprint(sf_dir, files)}"
-
-
-def scratch_dir(
-    kind: str, sf_dir: str, files: Sequence[str], fresh: bool = False
-) -> str:
-    """Deterministic ``.stream-staging`` subdirectory for the streaming
-    gates, keyed on the CORPUS FINGERPRINT — the same identity rule as
-    ``index_db_name``: a corpus regenerated in place (same path, new
-    data) resolves to a NEW directory, so staged arrival files from the
-    old corpus can never be replayed against the new one (the
-    wrong-verdict hazard fingerprinting exists to prevent). Directory
-    names are stable across runs, so per-run artifacts don't accumulate:
-    pass ``fresh=True`` for sink dirs that must start each run empty
-    (the old run's directory is REUSED — removed and rewritten in
-    place — instead of leaking one uuid-named dir per invocation)."""
-    d = os.path.join(
-        os.path.abspath(
-            os.path.join(os.path.dirname(__file__), "..", "..", ".stream-staging")
-        ),
-        f"{kind}_{corpus_fingerprint(sf_dir, files)}",
-    )
-    if fresh:
-        shutil.rmtree(d, ignore_errors=True)
-    return d
 
 
 def _ensure_db(spark: SparkSession, db: str) -> None:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..queries import register
 from .util import local_rows_df
 from ..sources.registry import register_sources
+from .streams import scratch_dir, stage_batches, stream_batches
 
 TOP_K = 10
 QUERY_VEC_ID = 0  # the corpus vector used as the single-query probe
@@ -2527,39 +2528,6 @@ def sim_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_FORGET_WAVE2 = 7  # vec_id % 9 == 7 -> the second streamed erasure wave
 
 
-def _stage_ivf_forget_requests(spark: SparkSession, sf_dir: str) -> str:
-    """Stage two vector FORGET-REQUEST files (vec_id only) in pinned
-    mtime order: wave 1 = the %{IVF_FORGET_MOD}=={4} slice, wave 2 =
-    %{IVF_FORGET_MOD}=={IVF_FORGET_WAVE2} (neither ever the query
-    vector)."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from .index_store import scratch_dir
-
-    stage = scratch_dir("ivf_forget_arrivals", sf_dir, ("embeddings.parquet",))
-    if all(
-        os.path.exists(os.path.join(stage, f"b{i}.parquet")) for i in (0, 1)
-    ):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    e = _emb(spark, sf_dir)
-    now = time.time()
-    for i, mod in enumerate((4, IVF_FORGET_WAVE2)):
-        tmp = os.path.join(stage, f".tmp{i}")
-        e.filter(F.col("vec_id") % IVF_FORGET_MOD == mod).select(
-            "vec_id"
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(stage, f"b{i}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dest, (now - 120 + i * 60, now - 120 + i * 60))
-    return stage
-
-
 def _duck_stream_ivf_forget() -> str:
     """Oracle: the standard serve replayed after each erasure wave —
     training always on the FULL corpus (erasure never retrains), the
@@ -2591,42 +2559,30 @@ def stream_ivf_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     start. Scale: per wave, one O(|wave|) append + one nprobe-bounded
     serve through the broadcast anti-join.
     """
-    from .index_store import forget, reset_scratch, scratch_dir
+    from .index_store import forget, reset_scratch
 
     db = _ivf_index_db(sf_dir) + "_fgs"
     build_ivf_index(spark, sf_dir, db=db)
     reset_scratch(spark, db, {"tombstones": "vec_id bigint"})
-    stage = _stage_ivf_forget_requests(spark, sf_dir)
+    e = _emb(spark, sf_dir)
+    # forget waves (vec_id only): the vec_id % IVF_FORGET_MOD == 4 slice,
+    # then == IVF_FORGET_WAVE2; neither ever holds the query vector
+    staged = stage_batches(
+        spark, "ivf_forget_arrivals", sf_dir, "embeddings.parquet",
+        [
+            e.filter(F.col("vec_id") % IVF_FORGET_MOD == m).select("vec_id")
+            for m in (4, IVF_FORGET_WAVE2)
+        ],
+    )
     out_dir = scratch_dir(
         "ivf_forget_serves", sf_dir, ("embeddings.parquet",), fresh=True
     )
-    e = _emb(spark, sf_dir)
 
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def _on_batch(batch_df: DataFrame) -> DataFrame:
         forget(spark, db, "vec_id", batch_df.select("vec_id"))
-        (
-            _serve_ivf_index(spark, db, e)
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("int"))
-            .select("batch_id", "vec_id", "cosine")
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        return _serve_ivf_index(spark, db, e).select("vec_id", "cosine")
 
-    schema = spark.read.parquet(stage).schema
-    reqs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = (
-        reqs.writeStream.foreachBatch(_on_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming query did not terminate within 600s")
-    return spark.read.parquet(out_dir)
+    return stream_batches(spark, staged, _on_batch, out_dir)
 
 
 # -- IVF index UPSERT: new vectors join the index without retraining ---------
@@ -4161,41 +4117,6 @@ IVF_STREAM_B1 = 0    # vec_id % 10 == 0 -> first arrival file
 IVF_STREAM_B2 = 5    # vec_id % 10 == 5 -> second arrival file
 
 
-def _stage_ivf_arrivals(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the arriving vectors as TWO parquet files in mtime order
-    (the embedding-side mirror of the document staging helper): batch 1
-    = vec_id % {IVF_STREAM_MOD} == {IVF_STREAM_B1}, batch 2 ==
-    {IVF_STREAM_B2}. In production this is the landing prefix."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from .index_store import scratch_dir
-
-    # fingerprint-keyed (ADVICE r8): a corpus regenerated in place gets
-    # a fresh staging dir instead of replaying stale arrival files
-    stage = scratch_dir("emb_arrivals", sf_dir, ("embeddings.parquet",))
-    if all(
-        os.path.exists(os.path.join(stage, f"b{i}.parquet")) for i in (0, 1)
-    ):
-        return stage
-    os.makedirs(stage, exist_ok=True)
-    e = _emb(spark, sf_dir).select("vec_id", "emb")
-    now = time.time()
-    for i, mod in enumerate((IVF_STREAM_B1, IVF_STREAM_B2)):
-        tmp = os.path.join(stage, f".tmp{i}")
-        e.filter(F.col("vec_id") % IVF_STREAM_MOD == mod).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dest = os.path.join(stage, f"b{i}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dest, (now - 120 + i * 60, now - 120 + i * 60))
-    return stage
-
-
 def _duck_stream_ivf() -> str:
     """Oracle: the frozen-centroid chain (train on the owned split,
     assign everything), then TWO serving replays — after batch 1 the
@@ -4296,11 +4217,19 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe-bounded probe over the layered assignment relation.
     Verdicts are sink-written, never collected.
     """
-    from .index_store import read_live, reset_scratch, scratch_dir
+    from .index_store import read_live, reset_scratch
 
     base_db = _ivf_index_db(sf_dir) + "_svb"
     delta_db = _ivf_index_db(sf_dir) + "_svd"
-    stage = _stage_ivf_arrivals(spark, sf_dir)
+    e = _emb(spark, sf_dir)
+    # arriving vectors: vec_id % IVF_STREAM_MOD == IVF_STREAM_B1, then B2
+    staged = stage_batches(
+        spark, "emb_arrivals", sf_dir, "embeddings.parquet",
+        [
+            e.filter(F.col("vec_id") % IVF_STREAM_MOD == m).select("vec_id", "emb")
+            for m in (IVF_STREAM_B1, IVF_STREAM_B2)
+        ],
+    )
     build_ivf_base_index(spark, sf_dir, db=base_db)
     reset_scratch(spark, delta_db, {"assign": "vec_id bigint, cid int"})
 
@@ -4308,7 +4237,6 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["cid"]), [float(x) for x in r["cv"]])
         for r in spark.table(f"{base_db}.centroids").collect()
     ]
-    e = _emb(spark, sf_dir)
     qv = e.filter(F.col("vec_id") == QUERY_VEC_ID).select("emb").head()[0]
     q_lit = F.array(*[F.lit(float(x)) for x in qv])
     # deterministic fingerprint-keyed sink, cleared at run start: the
@@ -4318,7 +4246,7 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivf_serve", sf_dir, ("embeddings.parquet",), fresh=True
     )
 
-    def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def _on_batch(batch_df: DataFrame) -> DataFrame:
         wide = _kmeans_wide(batch_df.select("vec_id", "emb"))
         (
             _assign_enc(spark, wide, cents)
@@ -4342,7 +4270,7 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, (base_db, delta_db), ("assign",), "vec_id"
         )
         cand = assign_all.join(F.broadcast(probes), "cid", "left_semi")
-        (
+        return (
             e.filter(F.col("vec_id") != QUERY_VEC_ID)
             .join(cand, "vec_id", "left_semi")
             .withColumn("qv", q_lit)
@@ -4352,24 +4280,6 @@ def stream_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy(F.col("cosine").desc(), "vec_id")
             .limit(TOP_K)
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("int"))
-            .select("batch_id", "vec_id", "cosine")
-            .write.mode("append")
-            .parquet(out_dir)
         )
 
-    schema = spark.read.parquet(stage).schema
-    vecs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    q = (
-        vecs.writeStream.foreachBatch(_on_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("streaming query did not terminate within 600s")
-    return spark.read.parquet(out_dir)
+    return stream_batches(spark, staged, _on_batch, out_dir)

@@ -41,6 +41,7 @@ from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 from ..catalog import ensure_database
@@ -51,6 +52,7 @@ __all__ = [
     "register_sources",
     "register_sources_catalog",
     "read_source",
+    "source_schema",
 ]
 
 SOURCE_TABLES: tuple[str, ...] = (
@@ -206,6 +208,14 @@ def _sources(
 
 def read_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _sources(spark, sf_dir, (name,))[name].view
+
+
+def source_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema of ``name``'s parquet file as this session inferred it
+    (raw, before the temp view's ``ts`` conversion), so a stream over the
+    same file reads it without another footer job."""
+    src = _sources(spark, sf_dir, (name,))[name]
+    return (src.view if src.raw is None else src.raw).schema
 
 
 def register_sources(

@@ -42,50 +42,30 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..queries import register
+from ..operators.streams import (
+    run_available_now,
+    scratch_dir,
+    stage_source_dir,
+    state_partitions,
+)
 from ..operators.util import local_rows_df
-
-_STAGING_ROOT = os.path.join(os.path.dirname(__file__), "..", "..", ".stream-staging")
-
-# (session id, staged dir) -> inferred schema; see read_events_stream.
-_SCHEMA_CACHE: dict[tuple[int, str], object] = {}
-
-
-def stage_events_dir(sf_dir: str) -> str:
-    """File-stream sources read *directories*; the testdata tables are
-    single parquet files. Stage a per-sf directory of symlinks (O(1),
-    no data copy). In production this is the landing prefix / Kafka
-    topic and this function disappears."""
-    name = "events_" + sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    stage = os.path.abspath(os.path.join(_STAGING_ROOT, name))
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    src = os.path.join(sf_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return stage
+from ..sources.registry import read_source, source_schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the staged events directory.
+    """``readStream`` over the staged events directory, with the schema
+    the source registry inferred for ``events.parquet`` (no footer job).
 
     ``ts`` arrives as nanosecond longs (see sources/registry.py) and is
     converted to TIMESTAMP (session TZ is UTC) because event-time
     watermarks require TIMESTAMP, not TIMESTAMP_NTZ.
     """
-    stage = stage_events_dir(sf_dir)
+    stage = stage_source_dir(sf_dir, "events")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    # schema inference memoized per (session, stage): the staged corpus
-    # is immutable for a given fingerprint, and every streaming query
-    # paid a ~0.1-0.2s footer-read job for the identical schema
-    key = (id(spark), stage)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(stage).schema
-        _SCHEMA_CACHE[key] = schema
-    ev = spark.readStream.schema(schema).parquet(stage)
+    ev = spark.readStream.schema(source_schema(spark, sf_dir, "events")).parquet(stage)
     if dict(ev.dtypes).get("ts") in ("bigint", "long"):
         ev = ev.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     else:
@@ -96,42 +76,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev
 
 
-def _state_partitions(spark: SparkSession) -> int:
-    """Stateful-operator shuffle partitions: the state store opens one
-    instance per partition per micro-batch, so oversizing buys pure
-    overhead. ``defaultParallelism / 4`` (floor 8) keeps batches dense
-    locally (measured 1.3s -> 0.85s at local[32]) and still scales the
-    partition count with the cluster (250 at 1000 cores). Overridable
-    via ``SPARK_GRAFT_STREAM_STATE_PARTITIONS``; note the count is
-    pinned by the checkpoint on first run, as in any Spark deployment.
-    """
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return int(env)
-    return max(8, spark.sparkContext.defaultParallelism // 4)
-
-
 def _run_to_memory(out: DataFrame, mode: str) -> DataFrame:
     """Execute a bounded streaming query into a memory sink and return
     the result table. The memory sink is the test/driver harness; the
     production sink is parquet/Kafka via the same ``writeStream``."""
     spark = out.sparkSession
     name = "q" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
+    with state_partitions(spark):
+        run_available_now(
+            out.writeStream.format("memory").queryName(name).outputMode(mode)
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("streaming query did not terminate within 600s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -396,12 +350,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream joins with watermarks take over.
     """
     ev = read_events_stream(spark, sf_dir)
-    from .pipelines import stage_events_dir  # self-import safe: module attr
-
-    batch = spark.read.parquet(stage_events_dir(sf_dir))
-    if dict(batch.dtypes).get("ts") in ("bigint", "long"):
-        batch = batch.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    profile = batch.groupBy("user_id").agg(
+    profile = read_source(spark, sf_dir, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).alias("lifetime_events"),
         F.round(F.sum("value"), 2).alias("lifetime_value"),
     )
@@ -529,8 +478,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_sum",
         )
     )
-    table = "fb_sink_" + uuid.uuid4().hex[:8]
-    out_dir = os.path.abspath(os.path.join(_STAGING_ROOT, table))
+    out_dir = scratch_dir("fb_sink", sf_dir, ("events.parquet",), fresh=True)
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -540,20 +488,10 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        q = (
-            agg.writeStream.foreachBatch(_write_batch)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    with state_partitions(spark):
+        run_available_now(
+            agg.writeStream.foreachBatch(_write_batch).outputMode("complete")
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("streaming query did not terminate within 600s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     out = spark.read.parquet(out_dir)
     # Partition column comes back as the directory key; restore column
     # order to the declared contract.
@@ -816,7 +754,7 @@ def stream_recovery_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src_dir)
 
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
+    events = read_source(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -841,33 +779,15 @@ def stream_recovery_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(out_dir)
 
-        # stateful-operator partition sizing, same rationale (and value)
-        # as _run_to_memory: the checkpoint pins the count on first run,
-        # so both runs here resume with the same state layout
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_state_partitions(spark))
-        )
-        try:
-            q = (
+        # the checkpoint pins the state partition count on first run, so
+        # both runs resume with the same state layout; a run that times
+        # out raises instead of racing run 2 on the same checkpoint
+        with state_partitions(spark):
+            run_available_now(
                 agg.writeStream.outputMode("complete")
                 .option("checkpointLocation", ckpt)
                 .foreachBatch(sink)
-                .trigger(availableNow=True)
-                .start()
             )
-            # awaitTermination(timeout) returns False on timeout with the
-            # query STILL RUNNING; racing run 2 against it on the same
-            # checkpoint yields confusing wrong totals. Fail loudly
-            # instead.
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "stream_recovery_resume: query did not terminate "
-                    "within 600s"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     try:
         run_once()  # run 1: batch A only, then "crash"
@@ -882,18 +802,6 @@ def stream_recovery_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- streaming quality gate --------------------------------------------------
-
-
-def stage_documents_dir(sf_dir: str) -> str:
-    """Same staging trick as stage_events_dir, for the documents table."""
-    name = "documents_" + sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    stage = os.path.abspath(os.path.join(_STAGING_ROOT, name))
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "documents.parquet")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return stage
 
 
 # Local copies of the Gopher gate bounds. NOT imported from
@@ -968,9 +876,9 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fractions, stopwords) is the same per-row shape and rides the same
     stream — this pipeline pins the composition, not a new gate.
     """
-    stage = stage_documents_dir(sf_dir)
-    schema = spark.read.parquet(stage).schema
-    docs = spark.readStream.schema(schema).parquet(stage)
+    docs = spark.readStream.schema(source_schema(spark, sf_dir, "documents")).parquet(
+        stage_source_dir(sf_dir, "documents")
+    )
     lo, hi, mlo, mhi = _gate_bounds()
     toks = (
         "filter(split(lower(trim(text)), '[ \\\\t\\\\n\\\\f\\\\r]'), "

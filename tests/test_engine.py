@@ -1164,13 +1164,14 @@ def test_near_dup_index_persistence(spark, sf_small):
     from pyspark.sql import functions as F
 
     from dbt_bigquery_udf_spark.operators import dedup as D
+    from dbt_bigquery_udf_spark.operators import index_store
 
     db = D._near_index_db(sf_small)
     # catalog-only drop is not enough across processes (files would be
     # adopted, by design): clear the location too
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
     spark.sql(f"CREATE DATABASE {db}")
-    D._clear_partial_index(spark, db)
+    index_store.clear_tables(spark, db, D._NEAR_IDX_TABLES)
     spark.sql(f"DROP DATABASE {db} CASCADE")
     assert D.build_near_dup_index(spark, sf_small) == "built"
     assert D.build_near_dup_index(spark, sf_small) == "reused"
