@@ -65,6 +65,20 @@ stored test failures, expired tables) is cleared by
 :func:`clear_tables`. Plain parquet has no MERGE: Delta/Iceberg MERGE is
 the drop-in upgrade and would replace only the staged rewrite.
 
+**Directory commits.** Every directory the engine replaces as a whole
+is committed here, one way: the new contents are written to a stage
+directory beside the live one, :func:`mark_complete` writes the stage's
+completion marker as its last step, and :func:`commit_dir` removes the
+live directory and renames the marked stage onto it (``os.rename``). A
+crash leaves either an unmarked stage (the live directory is whole) or
+a marked one (it holds the whole new contents); :func:`recover_dir`
+removes the first and finishes the second. Staged table rewrites
+(:func:`staged_overwrite`, :func:`restore_snapshot`) and
+``sources.sinks.compact_files`` commit this way; a pristine snapshot
+(:func:`snapshot_tables`) is trusted only once it carries its own
+marker. The rename needs stage and live on one local volume, so a
+location that is not a local ``file:`` path raises (:func:`local_dir`).
+
 **Corpus identity** (:func:`index_db_name`): the database name embeds a
 fingerprint of the corpus (absolute path plus size and mtime_ns of every
 data file), so two corpora that share a leaf directory name, or a corpus
@@ -80,6 +94,7 @@ import os
 import re
 import shutil
 from typing import Callable, Iterable, Mapping, Sequence
+from urllib.parse import urlparse
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -95,6 +110,10 @@ __all__ = [
     "index_db_name",
     "db_location",
     "db_dir",
+    "local_dir",
+    "mark_complete",
+    "commit_dir",
+    "recover_dir",
     "ensure_tables",
     "clear_tables",
     "staged_overwrite",
@@ -168,16 +187,62 @@ def db_location(spark: SparkSession, db: str) -> str:
 
 
 def db_dir(spark: SparkSession, db: str) -> str:
-    """The database's directory on the local filesystem. Raises, naming
-    the URI, when the location is not ``file:``: the rename, hardlink
-    and file-move commits assume one local POSIX volume."""
-    loc = db_location(spark, db)
-    if not loc.startswith("file:"):
+    """The database's directory on the local filesystem
+    (:func:`local_dir` of its location)."""
+    return local_dir(db_location(spark, db))
+
+
+def local_dir(uri: str) -> str:
+    """``uri`` (a plain path or a ``file:`` URI) as a local filesystem
+    path. Raises, naming the URI, for any other scheme: the rename,
+    hardlink and file-move commits assume one local POSIX volume."""
+    if urlparse(uri).scheme not in ("", "file"):
         raise RuntimeError(
-            f"database {db} is at {loc}: index and table commits need a "
-            "local (file:) warehouse"
+            f"{uri} is not a local (file:) path: index, table and "
+            "directory commits need one local volume"
         )
-    return loc.removeprefix("file:")
+    return uri.removeprefix("file:")
+
+
+def mark_complete(path: str, marker: str = STAGE_COMPLETE_MARKER) -> None:
+    """Write ``marker`` into directory ``path``, the last step of
+    writing a stage: the witness that ``path`` holds a complete set.
+    Underscore-prefixed, so Spark's file listing never reads it."""
+    with open(os.path.join(path, marker), "w") as fh:
+        fh.write("complete")
+
+
+def _is_complete(path: str, marker: str = STAGE_COMPLETE_MARKER) -> bool:
+    return os.path.isfile(os.path.join(path, marker))
+
+
+def commit_dir(stage: str, live: str) -> None:
+    """Replace directory ``live`` with the complete directory ``stage``:
+    check the stage's completion marker (raising, with nothing touched,
+    when it has none), remove ``live``, then ``os.rename`` the stage
+    onto it, atomic on one volume. A crash before the rename leaves the
+    marked stage, which :func:`recover_dir` commits."""
+    if not _is_complete(stage):
+        raise RuntimeError(
+            f"{stage} has no {STAGE_COMPLETE_MARKER} marker: not a complete stage"
+        )
+    shutil.rmtree(live, ignore_errors=True)
+    os.rename(stage, live)
+
+
+def recover_dir(stage: str, live: str) -> bool:
+    """Finish a directory commit that a crash cut short: a marked
+    ``stage`` is committed onto ``live`` (:func:`commit_dir`); an
+    unmarked one was cut short while being written, so ``live`` is
+    still whole and the stage is removed. Returns whether a stage was
+    committed."""
+    if not os.path.isdir(stage):
+        return False
+    if _is_complete(stage):
+        commit_dir(stage, live)
+        return True
+    shutil.rmtree(stage, ignore_errors=True)
+    return False
 
 
 def clear_tables(spark: SparkSession, db: str, tables: Iterable[str]) -> None:
@@ -233,10 +298,7 @@ def staged_overwrite(spark: SparkSession, db: str, table: str, df) -> None:
         # source. saveAsTable returning implies job commit, so the
         # marker written here is a truthful completeness witness under
         # ANY committer config.
-        with open(
-            os.path.join(_table_dir(spark, db, staged), STAGE_COMPLETE_MARKER), "w"
-        ) as f:
-            f.write("complete")
+        mark_complete(_table_dir(spark, db, staged))
         _commit_stage(spark, db, table)
 
 
@@ -250,7 +312,7 @@ def _register_external(spark: SparkSession, table: str, schema, location: str) -
 
 def _commit_stage(spark: SparkSession, db: str, table: str) -> None:
     """Commit a COMPLETE stage into the live slot without rewriting its
-    bytes: clear the live table, atomically ``os.rename`` the staged
+    bytes: drop the live table's entry, :func:`commit_dir` the staged
     directory onto the live path (same volume by construction — both
     live under the database location), register the live table over the
     moved files, and drop the now-dangling stage entry. Replaces the
@@ -267,7 +329,7 @@ def _commit_stage(spark: SparkSession, db: str, table: str) -> None:
     Crash windows, each detectable and finished by
     :func:`recover_staged`:
 
-    * after the live clear, before the rename — stage cataloged with
+    * after the live drop, before the rename — stage cataloged with
       its directory intact: recovery re-runs this commit;
     * after the rename, before the live re-register — stage cataloged
       but its directory GONE (the rename is the atomic commit point):
@@ -283,8 +345,10 @@ def _commit_stage(spark: SparkSession, db: str, table: str) -> None:
     with catalog_lock:
         schema = spark.table(f"{db}.{staged}").schema  # catalog-only read
         live = _table_dir(spark, db, table)
-        clear_tables(spark, db, (table,))
-        os.rename(_table_dir(spark, db, staged), live)
+        # a managed table's drop deletes its directory, an EXTERNAL
+        # one's keeps it: commit_dir removes what is left
+        spark.sql(f"DROP TABLE IF EXISTS {db}.{table}")
+        commit_dir(_table_dir(spark, db, staged), live)
         _register_external(
             spark, f"{db}.{table}", schema, f"{db_location(spark, db)}/{table.lower()}"
         )
@@ -319,9 +383,11 @@ def recover_staged(
     kept row the incomplete write missed, the exact loss
     ``staged_overwrite`` exists to prevent. Incomplete stages are
     cleared and the live table left untouched (the fold that crashed
-    simply re-runs from the live state). A CATALOGED stage needs no
-    marker check: ``saveAsTable`` registers the table only after its
-    write job commits, so catalog presence implies completeness."""
+    simply re-runs from the live state). This is :func:`recover_dir`'s
+    rule, plus the catalog steps. A CATALOGED stage needs no marker
+    check: ``saveAsTable`` registers the table only after its write job
+    commits, so catalog presence implies completeness, and recovery
+    writes the marker :func:`commit_dir` checks."""
     recovered: list[str] = []
     with catalog_lock:
         _ensure_db(spark, db)
@@ -334,7 +400,10 @@ def recover_staged(
                 if os.path.isdir(sdir):
                     # stage intact (crash before/at the live clear, or
                     # after it): the stage is the source — finish the
-                    # rename commit
+                    # rename commit. Cataloged means its write job
+                    # committed, so a crash before the marker only
+                    # left the marker unwritten.
+                    mark_complete(sdir)
                     _commit_stage(spark, db, t)
                     recovered.append(t)
                     continue
@@ -356,10 +425,11 @@ def recover_staged(
                 continue
             if not os.path.isdir(sdir):
                 continue
-            complete = os.path.isfile(
-                os.path.join(sdir, STAGE_COMPLETE_MARKER)
-            ) or os.path.isfile(os.path.join(sdir, "_SUCCESS"))
-            if _part_files(sdir) and complete:
+            if os.path.isfile(os.path.join(sdir, "_SUCCESS")):
+                # a stage from before the own marker: Spark's job-commit
+                # marker witnesses it
+                mark_complete(sdir)
+            if _part_files(sdir) and _is_complete(sdir):
                 spark.sql(
                     f"CREATE TABLE {db}.{staged} USING parquet "
                     f"LOCATION '{loc}/{staged}'"
@@ -685,14 +755,13 @@ def snapshot_tables(
     one (no ``_SNAP_COMPLETE``) is discarded and retaken. Falls back to
     a byte copy on filesystems without hardlinks."""
     snap = _snap_root(spark, db)
-    if os.path.isfile(os.path.join(snap, SNAP_COMPLETE_MARKER)):
+    if _is_complete(snap, SNAP_COMPLETE_MARKER):
         return
     shutil.rmtree(snap, ignore_errors=True)
     for t in tables:
         # a table with no data files may have no directory at all
         _link_parts(_table_dir(spark, db, t), os.path.join(snap, t))
-    with open(os.path.join(snap, SNAP_COMPLETE_MARKER), "w") as fh:
-        fh.write("complete")
+    mark_complete(snap, SNAP_COMPLETE_MARKER)
 
 
 def drop_snapshot(spark: SparkSession, db: str) -> None:
@@ -720,7 +789,7 @@ def restore_snapshot(
     snapshot holds zero part-files restores as an empty table instead
     of failing schema inference."""
     snap = _snap_root(spark, db)
-    if not os.path.isfile(os.path.join(snap, SNAP_COMPLETE_MARKER)):
+    if not _is_complete(snap, SNAP_COMPLETE_MARKER):
         return False
     path = db_dir(spark, db)
     with catalog_lock:
@@ -732,10 +801,7 @@ def restore_snapshot(
             clear_tables(spark, db, (staged,))
             sdir = os.path.join(path, staged)
             _link_parts(os.path.join(snap, t), sdir)
-            with open(
-                os.path.join(sdir, STAGE_COMPLETE_MARKER), "w"
-            ) as fh:
-                fh.write("complete")
+            mark_complete(sdir)
             loc = db_location(spark, db)
             _register_external(spark, f"{db}.{staged}", schema, f"{loc}/{staged}")
             _commit_stage(spark, db, t)

@@ -2990,11 +2990,9 @@ def _rt_live_version(spark: SparkSession, db: str) -> int:
     """Resolve the serving version: the pointer value when that
     version's tables are COMPLETE, else the highest complete version.
     Versions are immutable within an epoch, so every crash window of
-    the swap (:func:`retrain_ivf_index`) and of the promotion
-    (:func:`gc_ivf_versions`) resolves to a fully-built version: a lost
-    pointer falls back to v2 if it exists (it was fully committed
-    before any swap was attempted), and a pointer still saying 2 after
-    GC dropped v2 falls back to the promoted v1."""
+    the promotion (:func:`gc_ivf_versions`) resolves to a fully-built
+    version: a pointer still saying 2 after GC dropped v2 falls back to
+    the promoted v1."""
     available = [
         v
         for v, tables in ((1, _RT_V1_TABLES[:2]), (2, _RT_V2_TABLES))
@@ -3015,26 +3013,6 @@ def _rt_pointer(spark: SparkSession, db: str) -> int | None:
     return max((int(r["version"]) for r in rows), default=None)
 
 
-def _rt_set_live_version(spark: SparkSession, db: str, version: int) -> None:
-    """Write the 1-row ``live_version`` pointer with the repo-standard
-    clear-then-write (NEVER ``mode('overwrite').saveAsTable``): when a
-    fresh session adopted the ``_rt`` database, ``ensure_tables``
-    registered the pointer as an EXTERNAL table — overwrite's drop
-    keeps its files and the managed re-create dies with
-    LOCATION_ALREADY_EXISTS, so cross-session crash recovery (pointer
-    still 1, v2 complete) would FAIL instead of completing the swap
-    (ADVICE r9). The pointer is 1 row and versions are immutable, so a
-    crash inside this window still resolves via
-    :func:`_rt_live_version`'s highest-complete-version fallback."""
-    from .index_store import clear_tables
-
-    clear_tables(spark, db, ("live_version",))
-    local_rows_df(spark, [(version,)], "version int").write.format(
-        "parquet"
-    ).saveAsTable(f"{db}.live_version")
-    spark.catalog.refreshTable(f"{db}.live_version")
-
-
 def _rt_ensure_v1(spark: SparkSession, sf_dir: str, db: str) -> str:
     """Bootstrap the versioned-index database's v1 slot from the shared
     ``_up`` artifact (owned-split training + frozen-centroid upserts)
@@ -3043,8 +3021,11 @@ def _rt_ensure_v1(spark: SparkSession, sf_dir: str, db: str) -> str:
     have a live version to serve from). The v1 tables are hardlink
     clones of the ``_up`` tables (:func:`index_store.clone_table`): no
     Spark job and no bytes copied. The pointer is written last, so its
-    presence witnesses a complete group."""
-    from .index_store import clone_table, ensure_tables
+    presence witnesses a complete group. A pointer rewrite cut short
+    leaves ``live_version__staged`` and no pointer, so the staged commit
+    is finished first: otherwise the missing pointer would rebuild the
+    whole group."""
+    from .index_store import clone_table, ensure_tables, recover_staged
 
     up = _ivf_index_db(sf_dir) + "_up"
 
@@ -3057,6 +3038,7 @@ def _rt_ensure_v1(spark: SparkSession, sf_dir: str, db: str) -> str:
             "parquet"
         ).saveAsTable(f"{db}.live_version")
 
+    recover_staged(spark, db, ("live_version",))
     return ensure_tables(spark, db, _RT_V1_TABLES, _build_v1, expect=_RT_SCHEMA)
 
 
@@ -3080,12 +3062,13 @@ def retrain_ivf_index(
        centroids. Written as NEW tables ``centroids_v2``/``assign_v2``
        while v1 keeps serving — the old version stays readable until
        the swap.
-    3. **swap** = bump the ``live_version`` pointer to 2. Versions are
-       immutable and the pointer monotone, so every crash window
-       recovers: pointer lost mid-overwrite -> readers fall back to the
-       highest complete version (v2, already fully committed); crash
-       before the pointer write -> pointer still says v1, v2 is garbage
-       that the next retrain's ``ensure_tables`` adopts or rebuilds.
+    3. **swap** = bump the ``live_version`` pointer to 2 with
+       ``index_store.staged_overwrite``. Versions are immutable and the
+       pointer monotone, so every crash window recovers: crash before
+       the pointer write -> pointer still says v1, v2 is garbage that
+       the next retrain's ``ensure_tables`` adopts or rebuilds; crash
+       inside the staged commit -> the next retrain finishes it
+       (``recover_staged``) before anything reads the pointer.
 
     Idempotent end-to-end: both version groups ride the shared
     ``index_store.ensure_tables`` bootstrap (catalog-first reuse,
@@ -3097,7 +3080,7 @@ def retrain_ivf_index(
     """
     from ..catalog import catalog_lock
 
-    from .index_store import ensure_tables
+    from .index_store import ensure_tables, staged_overwrite
 
     db = db or _rt_db(sf_dir)
     r1 = _rt_ensure_v1(spark, sf_dir, db)
@@ -3145,7 +3128,8 @@ def retrain_ivf_index(
         with catalog_lock:
             if _rt_pointer(spark, db) != 2:
                 lease.check()  # fence before the pointer swap
-                _rt_set_live_version(spark, db, 2)
+                pointer = local_rows_df(spark, [(2,)], "version int")
+                staged_overwrite(spark, db, "live_version", pointer)
     return {"v1": r1, "v2": r2, "live": 2}
 
 
@@ -3163,7 +3147,9 @@ def gc_ivf_versions(
        v2 intact — serving unchanged; v1 already equals v2);
     2. drop the v2 tables (crash here: pointer says 2 but v2 is gone —
        ``_rt_live_version`` falls back to the promoted v1, same data);
-    3. reset the pointer to 1.
+    3. reset the pointer to 1 (``index_store.staged_overwrite``; a
+       crash inside it is finished by ``recover_staged`` before the
+       pointer is read again).
 
     A stale v2 can never be adopted by the next epoch because step 2
     precedes step 3: any state where the pointer reads 1 has no v2
@@ -3178,37 +3164,35 @@ def gc_ivf_versions(
     dedicated ``db``, never the query's shared ``_rt`` database."""
     from ..catalog import catalog_lock
 
-    from .index_store import clear_tables, staged_overwrite
+    from .index_store import clear_tables, recover_staged, staged_overwrite
     from .lease import maintenance_lease
 
     db = db or _rt_db(sf_dir)
     if not spark.catalog.databaseExists(db):
         return {"gc": "noop"}
     with catalog_lock, maintenance_lease(spark, db) as lease:
-        have_v2 = all(
-            spark.catalog.tableExists(f"{db}.{t}") for t in _RT_V2_TABLES
-        )
-        ptr = _rt_pointer(spark, db)
-        if not have_v2:
-            if ptr != 1:
-                # step-3 crash remnant: finish the pointer reset
-                _rt_set_live_version(spark, db, 1)
-                return {"gc": "repaired"}
+        recover_staged(spark, db, ("live_version",))
+        if not all(spark.catalog.tableExists(f"{db}.{t}") for t in _RT_V2_TABLES):
+            if _rt_pointer(spark, db) == 1:
+                return {"gc": "noop"}
+            out = "repaired"  # step-3 crash remnant: finish the pointer reset
+        elif _rt_live_version(spark, db) != 2:
             return {"gc": "noop"}
-        if _rt_live_version(spark, db) != 2:
-            return {"gc": "noop"}
-        lease.check()  # fence before the promote/drop/reset sequence
-        staged_overwrite(
-            spark, db, "centroids_v1", spark.table(f"{db}.centroids_v2")
-        )
-        lease.renew()  # heartbeat between table swaps
-        staged_overwrite(
-            spark, db, "assign_v1", spark.table(f"{db}.assign_v2")
-        )
-        lease.check()  # fence before the irreversible v2 drop
-        clear_tables(spark, db, _RT_V2_TABLES)
-        _rt_set_live_version(spark, db, 1)
-        return {"gc": "promoted"}
+        else:
+            lease.check()  # fence before the promote/drop/reset sequence
+            staged_overwrite(
+                spark, db, "centroids_v1", spark.table(f"{db}.centroids_v2")
+            )
+            lease.renew()  # heartbeat between table swaps
+            staged_overwrite(
+                spark, db, "assign_v1", spark.table(f"{db}.assign_v2")
+            )
+            lease.check()  # fence before the irreversible v2 drop
+            clear_tables(spark, db, _RT_V2_TABLES)
+            out = "promoted"
+        pointer = local_rows_df(spark, [(1,)], "version int")
+        staged_overwrite(spark, db, "live_version", pointer)
+        return {"gc": out}
 
 
 def _duck_rt_chain_ctes() -> list[str]:

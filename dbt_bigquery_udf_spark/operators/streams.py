@@ -70,8 +70,14 @@ def scratch_dir(
 def stage_source_dir(sf_dir: str, table: str) -> str:
     """File-stream sources read directories; a source table is a single
     parquet file. Stage a directory holding one symlink to
-    ``<sf_dir>/<table>.parquet`` (O(1), no data copy) and return it."""
+    ``<sf_dir>/<table>.parquet`` (O(1), no data copy) and return it.
+    Sibling ``<table>_*`` stages whose symlink dangles (their corpus was
+    deleted) are removed first, so stages of temporary corpora do not
+    pile up."""
     name = f"{table}.parquet"
+    for old in glob.glob(os.path.join(STAGING_ROOT, f"{table}_*", name)):
+        if not os.path.exists(old):
+            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
     stage = scratch_dir(table, sf_dir, (name,))
     link = os.path.join(stage, name)
     if not os.path.lexists(link):

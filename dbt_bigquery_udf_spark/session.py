@@ -29,6 +29,12 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "apply_engine_confs", "default_cpus"]
 
+# the checkout's own warehouse, beside the package (``$SPARK_WAREHOUSE_DIR``
+# overrides it), so two checkouts never share or adopt each other's indexes
+WAREHOUSE_DIR = os.path.abspath(
+    os.path.join(os.path.dirname(__file__), "..", ".spark-warehouse")
+)
+
 # Confs that are session-settable at runtime (spark.conf.set) — applied
 # also when we receive a foreign SparkSession (the driver's) so engine
 # semantics hold regardless of who built the session.
@@ -95,7 +101,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.environ.get(
-            "SPARK_WAREHOUSE_DIR", "/root/repo/.spark-warehouse"))
+            "SPARK_WAREHOUSE_DIR", WAREHOUSE_DIR))
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)

@@ -15,11 +15,22 @@ layouts that matter and the knobs that keep files healthy:
 Both repartition by the layout key before writing so each task owns
 whole output files (no small-file explosion: one file per partition
 value per shuffle partition, not per input task).
+
+``compact_files`` / ``compact_if_fragmented`` bin-pack a location that
+incremental appends fragmented. They work on local ``file:`` locations
+only and commit through ``operators.index_store``'s one directory
+commit (marked stage, remove, rename), like every other directory the
+engine replaces.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame
+
+from ..operators.index_store import commit_dir, local_dir, mark_complete, recover_dir
 
 __all__ = [
     "write_partitioned",
@@ -155,44 +166,28 @@ def write_zordered(
     )
 
 
-def _list_data_files(spark, path: str) -> tuple[int, int]:
-    """(file_count, total_bytes) of data files under ``path``, via the
-    Hadoop FileSystem API — scheme-agnostic (local, HDFS, s3a:// all
-    answer the same call), so the measurement works wherever the real
-    table lives."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    it = fs.listFiles(jpath, True)
-    n, total = 0, 0
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        n += 1
-        total += f.getLen()
-    return n, total
-
-
 def _data_file_set(spark, path: str) -> frozenset[tuple[str, int]]:
-    """The location's data files as {(path-under-root, length)} — the
-    change-detection snapshot compact_files compares before its swap."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    root = fs.makeQualified(jpath).toString().rstrip("/") + "/"
+    """The location's data files as {(path under it, bytes)}, from one
+    local directory walk (empty when it is missing): the size statistics
+    and the change-detection snapshot compact_files compares before its
+    commit. Names starting with ``_`` or ``.`` (markers, checksums, a
+    writer's ``_temporary``) are skipped, as Spark's file listing skips
+    them. ``path`` must be local (:func:`index_store.local_dir`)."""
+    root = local_dir(path)
     out = set()
-    if not fs.exists(jpath):
-        return frozenset()
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        out.add((f.getPath().toString().removeprefix(root), f.getLen()))
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(d, f)
+                out.add((os.path.relpath(full, root), os.path.getsize(full)))
     return frozenset(out)
+
+
+def _list_data_files(spark, path: str) -> tuple[int, int]:
+    """(file_count, total_bytes) of the data files under ``path``."""
+    files = _data_file_set(spark, path)
+    return len(files), sum(n for _, n in files)
 
 
 def compact_files(
@@ -200,10 +195,9 @@ def compact_files(
     path: str,
     target_file_bytes: int = 128 << 20,
     partition_by: list[str] | None = None,
-    _stats: tuple[int, int] | None = None,
 ) -> dict:
-    """Bin-pack a parquet location's small files — the ``OPTIMIZE``
-    pass every incrementally-written lake table needs.
+    """Bin-pack a local parquet location's small files — the
+    ``OPTIMIZE`` pass every incrementally-written lake table needs.
 
     Incremental/streaming writers (microbatch, foreachBatch, hourly
     appends) each land a few rows per trigger; after a month a 100 TB
@@ -211,48 +205,38 @@ def compact_files(
     open/seek/footer-parse per file, which dominates IO. This rewrites
     the location into ``ceil(total_bytes / target_file_bytes)`` files
     (per partition directory when ``partition_by`` is given, preserving
-    the pruning layout), then swaps directories via an O(1) filesystem
-    rename.
+    the pruning layout) in ``<path>__compact_staging``, then commits it
+    with ``index_store``'s one directory commit: mark the stage
+    complete, remove the location, rename the stage onto it. ``path``
+    must be a local ``file:`` path (or a plain one); any other scheme
+    raises, naming it.
 
     Concurrency contract: ONE writer at a time per location. The rewrite
-    snapshots the directory and swaps it, so a file a concurrent writer
-    lands mid-rewrite would vanish in the swap — guarded two ways: the
-    data-file set is re-listed immediately before the swap and the
-    compaction ABORTS (staging discarded, original untouched) if it
-    changed; and from a streaming pipeline the call belongs inside the
-    serialized foreachBatch callback (compact_if_fragmented), where the
-    engine guarantees no concurrent append. Crash-safe: a failure
-    between the two renames leaves the data at <path>__compact_old, and
-    the next call self-heals by renaming it back before proceeding.
+    snapshots the directory and replaces it, so a file a concurrent
+    writer lands mid-rewrite would vanish in the commit — guarded two
+    ways: the data-file set is re-listed immediately before the stage is
+    marked and the compaction ABORTS (stage removed, original untouched)
+    if it changed; and from a streaming pipeline the call belongs inside
+    the serialized foreachBatch callback (compact_if_fragmented), where
+    the engine guarantees no concurrent append. Crash-safe: a call
+    first finishes a previous call's commit (``index_store.recover_dir``:
+    a marked stage is committed, an unmarked one removed), so every
+    crash leaves the location's rows whole.
 
     Scale: the rewrite is one shuffle-free-read → repartition → write
     over only this location (compact partitions selectively by calling
-    with a partition subdirectory path); driver state is two longs from
-    a recursive listing. Returns {files_before, bytes, files_after}.
+    with a partition subdirectory path); driver state is one recursive
+    listing. Returns {files_before, bytes, files_after}.
     """
     import math
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jdst = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jdst.getFileSystem(conf)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact_old")
-    # Self-heal a crash between the two renames of a previous run: data
-    # is only at __compact_old — restore it before anything reads path.
-    if not fs.exists(jdst) and fs.exists(old):
-        if not fs.rename(old, jdst):
-            raise IOError(
-                f"compact_files: could not restore {path} from crashed run"
-            )
-        _stats = None  # stale caller-provided stats cannot describe the restore
-
-    files_before, total = _stats if _stats is not None else _list_data_files(
-        spark, path
-    )
+    staging = path.rstrip("/") + "__compact_staging"
+    stage, live = local_dir(staging), local_dir(path)
+    recover_dir(stage, live)
     snapshot = _data_file_set(spark, path)
+    files_before, total = len(snapshot), sum(n for _, n in snapshot)
     df = spark.read.parquet(path)
     n_out = max(1, math.ceil(total / max(target_file_bytes, 1)))
-    staging = path.rstrip("/") + "__compact_staging"
     if partition_by:
         # One writing task per partition value; a hot partition still
         # splits via maxRecordsPerFile sized from the observed average
@@ -268,25 +252,17 @@ def compact_files(
         )
     else:
         df.repartition(n_out).write.mode("overwrite").parquet(staging)
-    jsrc = jvm.org.apache.hadoop.fs.Path(staging)
     # Abort (not clobber) if a concurrent writer changed the location
-    # between our snapshot read and the swap — their files would be
-    # silently deleted by the rename otherwise.
+    # between our snapshot read and the commit — their files would be
+    # silently deleted by it otherwise.
     if _data_file_set(spark, path) != snapshot:
-        fs.delete(jsrc, True)
+        shutil.rmtree(stage, ignore_errors=True)
         raise IOError(
             f"compact_files: {path} changed during compaction "
             "(concurrent writer?) — aborted, location untouched"
         )
-    # Two renames, never delete-before-swap: the original survives any
-    # failure (as <path>__compact_old) until the new data is in place.
-    fs.delete(old, True)  # stale leftover from a crashed run
-    if not fs.rename(jdst, old):
-        raise IOError(f"compact_files: could not move {path} aside")
-    if not fs.rename(jsrc, jdst):
-        fs.rename(old, jdst)  # roll back
-        raise IOError(f"compact_files: could not install {staging}")
-    fs.delete(old, True)
+    mark_complete(stage)
+    commit_dir(stage, live)
     files_after, _ = _list_data_files(spark, path)
     return {"files_before": files_before, "bytes": total, "files_after": files_after}
 
@@ -307,15 +283,8 @@ def compact_if_fragmented(
     (not inside the streaming query) means the maintenance cadence is
     the operator's knob, independent of trigger cadence.
     """
-    stats = _list_data_files(spark, path)
-    if stats[0] <= max_files:
+    if _list_data_files(spark, path)[0] <= max_files:
         return None
-    # pass the listing through — on object stores with millions of
-    # files the recursive listing is the dominant cost of this check
     return compact_files(
-        spark,
-        path,
-        target_file_bytes=target_file_bytes,
-        partition_by=partition_by,
-        _stats=stats,
+        spark, path, target_file_bytes=target_file_bytes, partition_by=partition_by
     )

@@ -78,7 +78,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run_to_memory(out: DataFrame, mode: str) -> DataFrame:
     """Execute a bounded streaming query into a memory sink and return
-    the result table. The memory sink is the test/driver harness; the
+    the result table. The sink's view is dropped once the returned frame
+    has resolved it, so the rows live as long as that frame, not as long
+    as the session. The memory sink is the test/driver harness; the
     production sink is parquet/Kafka via the same ``writeStream``."""
     spark = out.sparkSession
     name = "q" + uuid.uuid4().hex[:12]
@@ -86,7 +88,9 @@ def _run_to_memory(out: DataFrame, mode: str) -> DataFrame:
         run_available_now(
             out.writeStream.format("memory").queryName(name).outputMode(mode)
         )
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 # -- watermarked tumbling-window rollup ------------------------------------

@@ -1370,6 +1370,10 @@ def test_ivf_retrain_lifecycle(spark, sf_small):
     from pyspark.sql import functions as F
 
     from dbt_bigquery_udf_spark.operators import similarity as S
+    from dbt_bigquery_udf_spark.operators.index_store import (
+        empty_table,
+        staged_overwrite,
+    )
     from dbt_bigquery_udf_spark.queries import QUERIES
 
     db = S._rt_db(sf_small)
@@ -1404,20 +1408,19 @@ def test_ivf_retrain_lifecycle(spark, sf_small):
     r1 = sorted(map(tuple, QUERIES["sim_ivf_retrain"](spark, sf_small).collect()))
     r2 = sorted(map(tuple, QUERIES["sim_ivf_retrain"](spark, sf_small).collect()))
     assert r1 == r2 and len(r1) == 10
-    # crash-window recovery 1: pointer LOST mid-swap (empty table) ->
-    # readers resolve to the highest complete version, retrain repairs
-    spark.sql(f"TRUNCATE TABLE {db}.live_version")
-    spark.catalog.refreshTable(f"{db}.live_version")
+    # an EMPTY pointer -> readers resolve to the highest complete
+    # version, retrain repairs (the staged pointer commit leaves the
+    # table EXTERNAL, which TRUNCATE rejects: empty it in place)
+    empty_table(spark, db, "live_version")
     assert S._rt_live_version(spark, db) == 2
     S.retrain_ivf_index(spark, sf_small)
     assert [int(r["version"]) for r in spark.table(f"{db}.live_version").collect()] == [2]
     # crash-window recovery 2: crash BEFORE the pointer bump (pointer
     # still v1, v2 fully built) -> v1 serves until the next retrain
     # call completes the swap idempotently
-    spark.createDataFrame([(1,)], "version int").write.format(
-        "parquet"
-    ).mode("overwrite").saveAsTable(f"{db}.live_version")
-    spark.catalog.refreshTable(f"{db}.live_version")
+    staged_overwrite(
+        spark, db, "live_version", spark.createDataFrame([(1,)], "version int")
+    )
     assert S._rt_live_version(spark, db) == 1
     S.retrain_ivf_index(spark, sf_small)
     assert S._rt_live_version(spark, db) == 2
@@ -1431,6 +1434,7 @@ def test_ivf_version_gc_epoch_cycle(spark, sf_small):
     (pointer=2 with v2 dropped) repairs; a dedicated db keeps the
     registered query's epoch-1 determinism untouched."""
     from dbt_bigquery_udf_spark.operators import similarity as S
+    from dbt_bigquery_udf_spark.operators.index_store import staged_overwrite
 
     db = S._rt_db(sf_small) + "_gc"
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
@@ -1465,10 +1469,9 @@ def test_ivf_version_gc_epoch_cycle(spark, sf_small):
     assert S.gc_ivf_versions(spark, sf_small, db=db)["gc"] == "noop"
     # crash remnant: pointer says 2 but v2 is gone -> resolver falls
     # back to the promoted v1; gc repairs the pointer
-    spark.createDataFrame([(2,)], "version int").write.format(
-        "parquet"
-    ).mode("overwrite").saveAsTable(f"{db}.live_version")
-    spark.catalog.refreshTable(f"{db}.live_version")
+    staged_overwrite(
+        spark, db, "live_version", spark.createDataFrame([(2,)], "version int")
+    )
     assert S._rt_live_version(spark, db) == 1
     assert S.gc_ivf_versions(spark, sf_small, db=db) == {"gc": "repaired"}
     assert S._rt_live_version(spark, db) == 1
@@ -2111,9 +2114,10 @@ def test_rt_pointer_bump_on_adopted_external_table(spark, sf_small):
     ``live_version`` as EXTERNAL, where a bare
     ``mode('overwrite').saveAsTable`` dies with
     LOCATION_ALREADY_EXISTS (drop keeps the files, managed re-create
-    collides). The clear-then-write pointer helper must succeed and the
-    crash window (pointer says 1, v2 complete) must finish the swap."""
+    collides). The pointer's staged commit must succeed and the crash
+    window (pointer says 1, v2 complete) must finish the swap."""
     from dbt_bigquery_udf_spark.operators import similarity as S
+    from dbt_bigquery_udf_spark.operators.index_store import staged_overwrite
 
     db = S._rt_db(sf_small)
     _drop_index_db(spark, db)
@@ -2121,7 +2125,9 @@ def test_rt_pointer_bump_on_adopted_external_table(spark, sf_small):
     assert out["live"] == 2
     # rewind the pointer to 1 (the pre-swap crash state: v2 committed,
     # bump never ran), then simulate the fresh session
-    S._rt_set_live_version(spark, db, 1)
+    staged_overwrite(
+        spark, db, "live_version", spark.createDataFrame([(1,)], "version int")
+    )
     _wipe_catalog_keep_files(spark, db)
     # the retrain entry point re-adopts everything EXTERNAL and must
     # complete the swap through the adopted pointer table

@@ -165,20 +165,23 @@ def test_compact_if_fragmented_threshold(spark, tmp_path):
 
 
 def test_compact_files_self_heals_crashed_swap(spark, tmp_path):
-    """A crash between the two renames leaves data only at
-    <path>__compact_old; the next compact_files call must restore it
-    and complete instead of failing on a missing path."""
+    """A crash after the commit removed the location, before its rename,
+    leaves data only in the marked <path>__compact_staging; the next
+    compact_files call must commit it and complete instead of failing
+    on a missing path."""
     import os
 
+    from dbt_bigquery_udf_spark.operators.index_store import mark_complete
     from dbt_bigquery_udf_spark.sources.sinks import compact_files
 
     path = str(tmp_path / "heal")
     spark.range(100).repartition(8).write.parquet(path)
-    os.rename(path, path + "__compact_old")  # simulate the crash window
+    os.rename(path, path + "__compact_staging")  # simulate the crash window
+    mark_complete(path + "__compact_staging")
     stats = compact_files(spark, path, target_file_bytes=1 << 30)
     assert stats["files_after"] == 1
     assert spark.read.parquet(path).count() == 100
-    assert not os.path.exists(path + "__compact_old")
+    assert not os.path.exists(path + "__compact_staging")
 
 
 def test_compact_files_aborts_on_concurrent_append(spark, tmp_path, monkeypatch):

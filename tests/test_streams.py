@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import io
 import os
+import shutil
 import time
 import tokenize
 
@@ -144,6 +145,44 @@ def test_foreachbatch_sink_reuses_one_directory(spark, sf_small):
     first = sinks()
     assert stream_foreachbatch_sink(spark, sf_small).count() == n > 0
     assert sinks() == first
+
+
+def test_stage_source_dir_removes_stages_of_deleted_corpora(
+    staging, tmp_path, sf_small
+):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def corpus(name):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(pa.table({"x": [1]}), d / "events.parquet")
+        return str(d)
+
+    gone = corpus("gone")
+    first = streams.stage_source_dir(gone, "events")
+    live = streams.stage_source_dir(sf_small, "events")
+    shutil.rmtree(gone)
+    streams.stage_source_dir(corpus("next"), "events")
+    assert not os.path.exists(first)
+    assert os.path.exists(os.path.join(live, "events.parquet"))
+
+
+def test_memory_sink_runs_leave_no_view(spark, sf_small):
+    """Each run's memory-sink view is dropped once its result is
+    resolved; the rows still match the oracle, run after run."""
+    import re
+
+    import __spark_entry__ as entrymod
+    from dbt_bigquery_udf_spark.streaming.pipelines import stream_hourly_rollup
+    from dbt_bigquery_udf_spark.testing import compare_query
+
+    oracle = entrymod.oracle_sql()["stream_hourly_rollup"]
+    for _ in range(3):
+        res = compare_query(spark, stream_hourly_rollup, oracle, sf_small)
+        assert res["status"] == "match", res
+    views = [t.name for t in spark.catalog.listTables()]
+    assert [v for v in views if re.fullmatch(r"q[0-9a-f]{12}", v)] == []
 
 
 # Code (not docstrings or comments) that belongs in operators/streams.py
