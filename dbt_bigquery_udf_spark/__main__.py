@@ -357,7 +357,7 @@ def main(argv: list[str] | None = None) -> int:
         # execute the resulting statements — the maintenance-macro surface
         # (grant sweeps, manual cleanups, ad-hoc DDL).
         from .catalog import EngineError
-        from .macros import _Unresolved, expand_macros
+        from .macros import expand_macros, split_quoted, var_lookup
         from .project import load_project
 
         proj = load_project(
@@ -392,39 +392,25 @@ def main(argv: list[str] | None = None) -> int:
             except json.JSONDecodeError:
                 import ast as _ast_mod
 
-                # Quote bare-word keys OUTSIDE quoted spans only — a
-                # value like 'retry: later, level: high' must survive
-                # the rewrite untouched (round-5 ADVICE: the naive
-                # re.sub also fired inside string literals).
-                def _outside_strings(s, sub_fn):
-                    parts = re.split(
-                        r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")", s
-                    )
-                    return "".join(
-                        p if i % 2 else sub_fn(p)
-                        for i, p in enumerate(parts)
-                    )
-
-                quoted = _outside_strings(
-                    args.args,
-                    lambda p: re.sub(
-                        r"([{,]\s*)([A-Za-z_]\w*)\s*:", r"\1'\2':", p
-                    ),
-                )
-                # YAML literals dbt accepts: true/false/null (and
-                # Jinja-ish none) -> Python spelling, outside strings
+                # Quote bare-word keys, then spell the YAML literals dbt
+                # accepts (true/false/null, and Jinja-ish none) the
+                # Python way — each OUTSIDE quoted spans only, so a
+                # value like 'retry: later, level: high' survives the
+                # rewrite untouched (round-5 ADVICE: the naive re.sub
+                # also fired inside string literals).
                 _YAML_LIT = {
                     "true": "True", "false": "False",
                     "null": "None", "none": "None",
                 }
-                quoted = _outside_strings(
-                    quoted,
-                    lambda p: re.sub(
-                        r"\b(true|false|null|none)\b",
-                        lambda m: _YAML_LIT[m.group(1)],
-                        p,
-                    ),
-                )
+                quoted = args.args
+                for pattern, repl in (
+                    (r"([{,]\s*)([A-Za-z_]\w*)\s*:", r"\1'\2':"),
+                    (r"\b(true|false|null|none)\b", lambda m: _YAML_LIT[m.group(1)]),
+                ):
+                    quoted = "".join(
+                        p if i % 2 else re.sub(pattern, repl, p)
+                        for i, p in enumerate(split_quoted(quoted))
+                    )
                 try:
                     kwargs = _ast_mod.literal_eval(quoted)
                 except (ValueError, SyntaxError):
@@ -444,20 +430,12 @@ def main(argv: list[str] | None = None) -> int:
             **proj.vars,
             **(json.loads(args.vars) if args.vars else {}),
         }
-
-        def _vf(name, default):
-            if name in merged_vars:
-                return merged_vars[name]
-            if default is not _Unresolved:
-                return default
-            raise EngineError(f"var({name!r}) has no value and no default")
+        op_var = var_lookup(merged_vars, f"run-operation {args.macro}")
 
         from .catalog import target_context
         from .macros import macro_context_callables, QueryResultTable
-        from .models.core import _TARGET_ATTR_RE
 
-        tgt = target_context(args.env)
-        op_env: dict = {"target": tgt}
+        op_env: dict = {"target": target_context(args.env)}
 
         # dbt's run-operation context: `context.get(name)` returns a
         # macro handle, and `run_query(sql)` executes against the
@@ -528,25 +506,16 @@ def main(argv: list[str] | None = None) -> int:
         op_env["context"] = macro_context_callables(
             proj.macros,
             origin=f"run-operation {args.macro}",
-            var_fn=_vf,
+            var_fn=op_var,
             env=op_env,
         )
         sql = expand_macros(
             f"{{{{ {args.macro}({call}) }}}}",
             proj.macros,
             origin=f"run-operation {args.macro}",
-            var_fn=_vf,
+            var_fn=op_var,
             env=op_env,
         )
-        def _tgt_attr(m):
-            if m.group(1) not in tgt:
-                raise EngineError(
-                    f"run-operation {args.macro}: unknown target "
-                    f"attribute target.{m.group(1)}"
-                )
-            return str(tgt[m.group(1)])
-
-        sql = _TARGET_ATTR_RE.sub(_tgt_attr, sql)
 
         # Leftover rendered statements run once: anything the macro
         # already executed via run_query / {% call statement %} is

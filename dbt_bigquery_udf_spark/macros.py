@@ -14,24 +14,31 @@ expanded at call sites inside model bodies, e.g.
 
     SELECT {{ cents_to_dollars('amount_cents') }} AS amount FROM {{ ref('x') }}
 
-This module implements exactly that subset — definition files under the
-project's ``macro-paths``, call-site expansion with positional/keyword
-arguments and parameter defaults, macros calling macros (bounded true
-nesting depth), and the ``{% if %}``/``{% for %}``/``{% set %}``
-control-flow subset inside macro bodies (the shape the reference's own
-macros use: reference macros/udf/get_create_function_as_sql.sql:6-11 is
-a ``{% set %}`` + ``{% for param in params %}…{% if not loop.last %}``
-join loop) — as restricted templating, NOT a full Jinja engine: no
-filters and no general expressions. Out-of-subset constructs fail
-loudly at load or expand time rather than silently mis-render.
-``ref``/``source``/``var``/``this``/``config`` call sites are never
-treated as macros — they stay in the body for the engine's renderer
-(models/core.py), which is also why expansion composes with the existing
-placeholder pipeline.
+This module is restricted templating, NOT a full Jinja engine, with one
+implementation of each job behind every way of calling a macro (model
+call sites, ``run-operation``, ``context.get`` handles, ``{% test %}``
+bindings and the ``generate_*_name`` routing):
 
-Separately, ``render_control_flow`` (bottom of this module) evaluates the
-``{% if %}``/``{% for %}`` subset in MODEL bodies at render time, where
-``var()`` values are known — see Engine.render().
+* one argument binder, :func:`_bind`, fed by two adapters: the
+  call-site text parser and the Python-value adapter. It applies
+  defaults, caught ``varargs``/``kwargs``, and the too-many-arguments,
+  unknown-keyword and missing-argument checks;
+* one evaluator for ``{% if %}``/``{% for %}``/``{% set %}``/``{% do %}``/
+  ``{% call statement %}`` and for every ``{{ expr }}`` span whose
+  leading name is bound: :func:`render_control_flow`, which walks an
+  ``ast`` whitelist of expressions (literals, names, attributes,
+  subscripts, arithmetic, ``~``, comparisons, and/or/not, calls of bound
+  callables) and one filter table, ``_FILTERS``, applied only by the
+  evaluator's pipe branch;
+* one rule for a bare ``{{ p }}`` of a bound argument: it renders the
+  argument's verbatim text (a quoted string renders its contents), while
+  conditions, loops and filters see its Python value.
+
+Out-of-subset constructs fail loudly at load or expand time rather than
+silently mis-render. ``ref``/``source``/``var``/``this``/``config`` call
+sites are never treated as macros — they stay in the body for the
+engine's renderer (models/core.py), which is also why expansion composes
+with the existing placeholder pipeline.
 """
 
 from __future__ import annotations
@@ -53,6 +60,9 @@ __all__ = [
     "MACRO_MAX_DEPTH",
     "QueryResultTable",
     "macro_context_callables",
+    "call_macro",
+    "var_lookup",
+    "split_quoted",
 ]
 
 # Names the engine's renderer owns; a user macro may not shadow them and
@@ -119,12 +129,6 @@ class MacroDef:
     def catch_kwargs(self) -> bool:
         """Same for extra keyword arguments via ``kwargs``."""
         return re.search(r"\bkwargs\b", self._jinja_span_text) is not None
-
-
-# Internal bound-args keys for caught extras; asterisks keep them from
-# ever colliding with a real parameter identifier.
-_VARARGS_KEY = "*varargs*"
-_KWARGS_KEY = "*kwargs*"
 
 
 def _parse_signature(sig: str) -> tuple[tuple[str, ...], dict[str, str]]:
@@ -242,143 +246,140 @@ def expand_test_macro(
     ``model_text`` is inserted verbatim (normally ``{{ ref('m') }}`` so
     relation resolution stays a RUN-time engine concern, exactly like
     singular tests); ``column_name`` binds unquoted (dbt renders it as
-    an identifier); remaining schema.yml config keys bind as kwargs.
-    Nested macro calls in the body expand afterward.
+    an identifier); remaining schema.yml config keys bind as keyword
+    arguments through the Python-value adapter. Nested macro calls in
+    the body expand afterward.
     """
-    bound: dict[str, tuple[str, bool]] = {
-        p: (_arg_text(t), _arg_was_string(t)) for p, t in tdef.defaults.items()
-    }
-    bound["model"] = (model_text, False)
-    if column_name is not None:
-        if "column_name" not in tdef.params:
-            raise EngineError(
-                f"{origin}: test {tdef.name!r} is used on a column but "
-                "does not declare a 'column_name' parameter"
-            )
-        bound["column_name"] = (column_name, False)
-    for k, v in kwargs.items():
-        if k not in tdef.params:
-            raise EngineError(
-                f"{origin}: test {tdef.name!r} got unexpected config "
-                f"key {k!r} (params: {list(tdef.params)})"
-            )
-        bound[k] = (str(v), isinstance(v, str))
-    missing = [p for p in tdef.params if p not in bound]
-    if missing:
+    if column_name is not None and "column_name" not in tdef.params:
         raise EngineError(
-            f"{origin}: test {tdef.name!r} missing arguments {missing}"
+            f"{origin}: test {tdef.name!r} is used on a column but "
+            "does not declare a 'column_name' parameter"
         )
-    body = _render_body(tdef, bound, var_fn, env, origin)
-    return expand_macros(body, macros, origin, var_fn, env)
+    fixed = {"model": _Arg(model_text, False)}
+    if column_name is not None:
+        fixed["column_name"] = _Arg(column_name, False)
+    for k, v in kwargs.items():
+        fixed[k] = _py_arg(v)
+    bound = _bind(tdef, [], fixed, origin)
+    return _expand_bound(tdef, bound, macros, origin, var_fn, env, 0)
+
+
+# a quoted literal; an unterminated one runs to the end of the text
+_QUOTED_RE = re.compile(r"('(?:[^'\\]|\\.)*(?:'|\Z)|\"(?:[^\"\\]|\\.)*(?:\"|\Z))", re.S)
+
+
+def split_quoted(text: str) -> list[str]:
+    """``text`` cut around its quoted string literals (either quote,
+    backslash escapes honoured, an unterminated literal running to the
+    end): even items are code, odd items are the literals with their
+    quotes, and ``"".join`` gives ``text`` back.
+    The one quote-aware splitter of the macro layer and ``--args``."""
+    return _QUOTED_RE.split(text)
+
+
+def _code_chars(text: str):
+    """(index, character) of every character of ``text`` outside quoted
+    string literals."""
+    pos = 0
+    for i, part in enumerate(split_quoted(text)):
+        if not i % 2:
+            yield from enumerate(part, pos)
+        pos += len(part)
 
 
 def _split_args(argtext: str) -> list[str]:
     """Split a call's argument text on top-level commas, respecting
     nested parens/brackets and quoted strings."""
-    args: list[str] = []
+    cuts: list[int] = []
     depth = 0
-    cur: list[str] = []
-    i = 0
-    while i < len(argtext):
-        ch = argtext[i]
-        if ch in "'\"":
-            q = ch
-            cur.append(ch)
-            i += 1
-            while i < len(argtext):
-                cur.append(argtext[i])
-                if argtext[i] == "\\":
-                    i += 1
-                    if i < len(argtext):
-                        cur.append(argtext[i])
-                elif argtext[i] == q:
-                    break
-                i += 1
-        elif ch in "([{":
+    for i, ch in _code_chars(argtext):
+        if ch in "([{":
             depth += 1
-            cur.append(ch)
         elif ch in ")]}":
             depth -= 1
-            cur.append(ch)
         elif ch == "," and depth == 0:
-            args.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        args.append("".join(cur))
-    return args
+            cuts.append(i)
+    return [argtext[a + 1 : b] for a, b in zip([-1, *cuts], [*cuts, len(argtext)])]
 
 
 _STR_RE = re.compile(r"^\s*(['\"])(.*)\1\s*$", re.S)
-
-
-def _arg_text(raw: str) -> str:
-    """Rendered text of one argument: quoted strings render their
-    contents (Jinja ``{{ p }}`` of a string inserts it unquoted);
-    everything else (numbers, SQL fragments) substitutes verbatim."""
-    m = _STR_RE.match(raw)
-    if m:
-        return m.group(2)
-    return raw.strip()
-
-
-def _arg_was_string(raw: str) -> bool:
-    return _STR_RE.match(raw) is not None
-
-
 _KWARG_RE = re.compile(r"^\s*(\w+)\s*=(?!=)", re.S)
 
 
-def _bind_args(
-    macro: MacroDef, argtext: str, origin: str
-) -> dict[str, tuple[str, bool]]:
-    """param -> (rendered text, came-from-a-quoted-string)."""
-    bound: dict[str, tuple[str, bool]] = {
-        p: (_arg_text(t), _arg_was_string(t)) for p, t in macro.defaults.items()
-    }
-    extra_pos: list = []
-    extra_kw: dict = {}
-    pos_i = 0
+@dataclass(frozen=True)
+class _Arg:
+    """One bound macro argument: ``text`` is what a bare ``{{ p }}``
+    renders, ``value`` what conditions, loops and filters see."""
+
+    text: str
+    was_str: bool
+
+    @cached_property
+    def value(self):
+        return self.text if self.was_str else _py_value(self.text)
+
+
+def _text_arg(raw: str) -> _Arg:
+    """The call-site adapter: a quoted string binds its contents as a
+    string (Jinja ``{{ p }}`` of a string inserts it unquoted);
+    anything else (numbers, lists, SQL fragments) binds verbatim."""
+    m = _STR_RE.match(raw)
+    return _Arg(m.group(2), True) if m else _Arg(raw.strip(), False)
+
+
+def _py_arg(v) -> _Arg:
+    """The Python-value adapter: a ``str`` binds as a string, any other
+    value (``None``, a number, a dict) as its ``str()`` text."""
+    return _Arg(str(v), isinstance(v, str))
+
+
+def _parse_call(argtext: str) -> tuple[list[_Arg], dict[str, _Arg]]:
+    """A call site's argument text as (positional, keyword) arguments."""
+    args: list[_Arg] = []
+    kwargs: dict[str, _Arg] = {}
     for raw in _split_args(argtext):
-        if not raw.strip():
-            continue
         km = _KWARG_RE.match(raw)
-        if km and km.group(1) in macro.params:
-            rest = raw[km.end():]
-            bound[km.group(1)] = (_arg_text(rest), _arg_was_string(rest))
-        elif km and macro.catch_kwargs:
-            rest = raw[km.end():]
-            extra_kw[km.group(1)] = (
-                _arg_text(rest)
-                if _arg_was_string(rest)
-                else _py_value(_arg_text(rest))
-            )
+        if km:
+            kwargs[km.group(1)] = _text_arg(raw[km.end():])
+        elif raw.strip():
+            args.append(_text_arg(raw))
+    return args, kwargs
+
+
+def _bind(
+    macro: MacroDef, args: list[_Arg], kwargs: dict[str, _Arg], origin: str
+) -> dict:
+    """param -> _Arg for one call of ``macro``, plus ``varargs`` /
+    ``kwargs`` (Python values) when its body catches extras — the one
+    binder behind every way of calling a macro. Like dbt, a keyword
+    that names no parameter raises unless the body catches ``kwargs``."""
+    n = len(macro.params)
+    if len(args) > n and not macro.catch_varargs:
+        raise EngineError(
+            f"{origin}: macro {macro.name!r} takes at most {n} arguments"
+        )
+    bound: dict = {p: _text_arg(t) for p, t in macro.defaults.items()}
+    bound.update(zip(macro.params, args))
+    extra_kw: dict = {}
+    for k, a in kwargs.items():
+        if k in macro.params:
+            bound[k] = a
+        elif macro.catch_kwargs:
+            extra_kw[k] = a.value
         else:
-            if pos_i >= len(macro.params):
-                if macro.catch_varargs:
-                    extra_pos.append(
-                        _arg_text(raw)
-                        if _arg_was_string(raw)
-                        else _py_value(_arg_text(raw))
-                    )
-                    continue
-                raise EngineError(
-                    f"{origin}: macro {macro.name!r} takes at most "
-                    f"{len(macro.params)} arguments"
-                )
-            bound[macro.params[pos_i]] = (_arg_text(raw), _arg_was_string(raw))
-            pos_i += 1
-    if macro.catch_varargs:
-        bound[_VARARGS_KEY] = (repr(extra_pos), False)
-    if macro.catch_kwargs:
-        bound[_KWARGS_KEY] = (repr(extra_kw), False)
+            raise EngineError(
+                f"{origin}: macro {macro.name!r} got unexpected keyword "
+                f"{k!r} (params: {list(macro.params)})"
+            )
     missing = [p for p in macro.params if p not in bound]
     if missing:
         raise EngineError(
             f"{origin}: macro {macro.name!r} missing arguments {missing}"
         )
+    if macro.catch_varargs:
+        bound["varargs"] = [a.value for a in args[n:]]
+    if macro.catch_kwargs:
+        bound["kwargs"] = extra_kw
     return bound
 
 
@@ -386,49 +387,25 @@ def _bind_args(
 # ({{ pkg.macro(...) }}, dbt's cross-package call form).
 _CALL_OPEN_RE = re.compile(r"\{\{\s*(\w+(?:\.\w+)?)\s*\(")
 _SPAN_RE = re.compile(r"\{\{(.*?)\}\}", re.S)
-_STANDALONE_RE = re.compile(
-    r"^\s*(\w+)((?:\s*\|\s*\w+(?:\((?:[^()']|'[^']*')*\))?)*)\s*$"
-)
 _IDENT_RE = re.compile(r"[A-Za-z_]\w*")
 
 
-def _sub_idents_outside_strings(expr: str, bound: dict[str, tuple[str, bool]]) -> str:
-    """Replace bound-parameter identifiers in a Jinja expression with
+def _sub_idents_outside_strings(expr: str, args: dict[str, _Arg]) -> str:
+    """Replace bound-argument identifiers in a Jinja expression with
     their argument text — re-quoted when the argument was a string, so a
     nested macro call re-binds it with the same type. Identifiers inside
     string literals are left alone."""
-    out: list[str] = []
-    i = 0
-    while i < len(expr):
-        ch = expr[i]
-        if ch in "'\"":
-            q = ch
-            j = i + 1
-            while j < len(expr):
-                if expr[j] == "\\":
-                    j += 1
-                elif expr[j] == q:
-                    break
-                j += 1
-            out.append(expr[i : j + 1])
-            i = j + 1
-            continue
-        m = _IDENT_RE.match(expr, i)
-        if m:
-            name = m.group(0)
-            if name in bound:
-                text, was_str = bound[name]
-                if was_str:
-                    out.append("'" + text.replace("'", "\\'") + "'")
-                else:
-                    out.append(text)
-            else:
-                out.append(name)
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+
+    def repl(m: re.Match) -> str:
+        a = args.get(m.group(0))
+        if a is None:
+            return m.group(0)
+        return "'" + a.text.replace("'", "\\'") + "'" if a.was_str else a.text
+
+    return "".join(
+        p if i % 2 else _IDENT_RE.sub(repl, p)
+        for i, p in enumerate(split_quoted(expr))
+    )
 
 
 def _py_value(text: str):
@@ -447,68 +424,34 @@ def _py_value(text: str):
         return t
 
 
-def _no_var_fn(name, default):
-    if default is not _Unresolved:  # class defined below, bound at call time
-        return default
-    raise EngineError(
-        f"var({name!r}) inside a macro body has no value in this "
-        "context and no default"
-    )
-
-
 def _render_body(
     macro: MacroDef,
-    bound: dict[str, tuple[str, bool]],
+    bound: dict,
     var_fn=None,
     env: dict | None = None,
     origin: str = "<model>",
 ) -> str:
-    """Substitute parameters into a macro body.
+    """Render a macro body with its bound arguments in scope.
 
-    If the body carries ``{% ... %}`` control flow (the reference's own
-    macro shape — get_create_function_as_sql.sql:6-11), it is first
-    evaluated by the same restricted evaluator model bodies use, with
-    the bound arguments in scope as Python values (so
-    ``{% for p in params %}`` / ``{% if not loop.last %}`` work).
-    Then the plain-substitution pass runs: a standalone ``{{ p }}``
-    inserts the argument text (unquoted, Jinja-style); any other
-    ``{{ expr }}`` span (e.g. a nested macro call) gets bound
-    parameters substituted as expression identifiers, preserving
-    string-ness so re-binding in the nested call round-trips."""
-    body = apply_whitespace_control(macro.body)
-    if "{%" in body:
-        cf_env = dict(env or {})
-        for p, (text, was_str) in bound.items():
-            if p == _VARARGS_KEY:
-                cf_env["varargs"] = _py_value(text)
-            elif p == _KWARGS_KEY:
-                cf_env["kwargs"] = _py_value(text)
-            else:
-                cf_env[p] = text if was_str else _py_value(text)
-        body = render_control_flow(
-            body,
-            var_fn or _no_var_fn,
-            origin=f"{origin} (macro {macro.name})",
-            extra_env=cf_env,
-        )
-
-    def repl(mm: re.Match) -> str:
-        inner = mm.group(1)
-        sm = _STANDALONE_RE.match(inner)
-        if sm:
-            if sm.group(1) in bound:
-                text, was_str = bound[sm.group(1)]
-                if sm.group(2):
-                    # Filters act on the Python VALUE, matching the
-                    # control-flow path: {{ xs | length }} of ['a','b']
-                    # is 2, not the length of the repr text.
-                    v = text if was_str else _py_value(text)
-                    return str(_apply_filters(v, sm.group(2), origin))
-                return text
-            return mm.group(0)  # ref-less placeholder (this, etc.)
-        return "{{" + _sub_idents_outside_strings(inner, bound) + "}}"
-
-    return _SPAN_RE.sub(repl, body)
+    One evaluator pass (:func:`render_control_flow`, the same one model
+    bodies use) runs the body's control flow (the reference's own macro
+    shape — get_create_function_as_sql.sql:6-11) and every ``{{ }}``
+    span led by a bound name, with the arguments next to ``env``. The
+    spans it leaves (nested macro calls, ref/var/this placeholders) get
+    bound argument names substituted as expression text, so re-binding
+    in a nested call round-trips."""
+    where = f"{origin} (macro {macro.name})"
+    body = render_control_flow(
+        macro.body,
+        var_fn or var_lookup(None, where),
+        origin=where,
+        extra_env={**(env or {}), **bound},
+    )
+    args = {p: a for p, a in bound.items() if isinstance(a, _Arg)}
+    return _SPAN_RE.sub(
+        lambda m: "{{" + _sub_idents_outside_strings(m.group(1), args) + "}}",
+        body,
+    )
 
 
 def _find_call(
@@ -529,28 +472,17 @@ def _find_call(
         name = m.group(1)
         if name in RESERVED or name not in macros:
             continue
-        # balanced-paren scan from the '(' (string-literal aware,
-        # backslash-escape aware)
-        j = m.end() - 1
-        depth = 0
-        while j < len(text):
-            ch = text[j]
-            if ch in "'\"":
-                q = ch
-                j += 1
-                while j < len(text):
-                    if text[j] == "\\":
-                        j += 1
-                    elif text[j] == q:
-                        break
-                    j += 1
-            elif ch == "(":
+        # the balanced-paren span from the '(', string literals skipped
+        opened = m.end() - 1
+        j, depth = len(text), 0
+        for i, ch in _code_chars(text[opened:]):
+            if ch == "(":
                 depth += 1
             elif ch == ")":
                 depth -= 1
                 if depth == 0:
+                    j = opened + i
                     break
-            j += 1
         argtext = text[m.end(): j]
         k = j + 1
         while k < len(text) and text[k] in " \t\r\n":
@@ -568,6 +500,21 @@ def _find_call(
             )
         return m.start(), close, name, argtext
     return None
+
+
+def _expand_bound(
+    macro: MacroDef,
+    bound: dict,
+    macros: dict[str, MacroDef],
+    origin: str,
+    var_fn,
+    env: dict | None,
+    depth: int,
+) -> str:
+    """Render one bound call of ``macro`` and expand the calls its
+    output makes, one nesting level deeper."""
+    rendered = _render_body(macro, bound, var_fn, env, origin)
+    return expand_macros(rendered, macros, origin, var_fn, env, depth + 1)
 
 
 def expand_macros(
@@ -605,11 +552,8 @@ def expand_macros(
             )
         start, end, name, argtext = found
         macro = macros[name]
-        bound = _bind_args(macro, argtext, origin)
-        rendered = _render_body(macro, bound, var_fn, env, origin)
-        rendered = expand_macros(
-            rendered, macros, origin, var_fn, env, _depth + 1
-        )
+        bound = _bind(macro, *_parse_call(argtext), origin)
+        rendered = _expand_bound(macro, bound, macros, origin, var_fn, env, _depth)
         body = body[:start] + rendered + body[end:]
         pos = start + len(rendered)
 
@@ -667,6 +611,24 @@ class MacroContext(dict):
         return default
 
 
+def call_macro(
+    macros: dict[str, MacroDef],
+    name: str,
+    args: tuple = (),
+    kwargs: dict | None = None,
+    origin: str = "<macro>",
+    var_fn=None,
+    env: dict | None = None,
+) -> str:
+    """Render macro ``name`` called from Python: ``args``/``kwargs`` bind
+    through the Python-value adapter, and the nested calls of its output
+    expand like a call site's."""
+    macro = macros[name]
+    kw = {k: _py_arg(v) for k, v in (kwargs or {}).items()}
+    bound = _bind(macro, [_py_arg(v) for v in args], kw, origin)
+    return _expand_bound(macro, bound, macros, origin, var_fn, env, 0)
+
+
 def macro_context_callables(
     macros: dict[str, MacroDef],
     origin: str = "<run-operation>",
@@ -678,57 +640,16 @@ def macro_context_callables(
     ``context.get('parse_datetime')`` must return a CALLABLE that, when
     invoked (``macro_func()``), renders that macro's body to its SQL
     text — the indirection the reference README's v2 ``create_udfs``
-    relies on (/root/reference/README.md:156-176). Arguments bind like a
-    normal call site: strings re-quote, other values substitute as
-    Python-literal text, defaults fill the rest.
+    relies on (reference README.md:156-176). Each handle is
+    :func:`call_macro`.
     """
 
-    def _handle(mdef: MacroDef):
-        def call(*args, **kwargs):
-            bound: dict[str, tuple[str, bool]] = {
-                p: (_arg_text(t), _arg_was_string(t))
-                for p, t in mdef.defaults.items()
-            }
-            extra_pos: list = []
-            extra_kw: dict = {}
-            for i, v in enumerate(args):
-                if i >= len(mdef.params):
-                    if mdef.catch_varargs:
-                        extra_pos.append(v)
-                        continue
-                    raise EngineError(
-                        f"{origin}: macro {mdef.name!r} takes at most "
-                        f"{len(mdef.params)} arguments"
-                    )
-                bound[mdef.params[i]] = (str(v), isinstance(v, str))
-            for k, v in kwargs.items():
-                if k not in mdef.params:
-                    if mdef.catch_kwargs:
-                        extra_kw[k] = v
-                        continue
-                    raise EngineError(
-                        f"{origin}: macro {mdef.name!r} got unexpected "
-                        f"keyword {k!r} (params: {list(mdef.params)})"
-                    )
-                bound[k] = (str(v), isinstance(v, str))
-            if mdef.catch_varargs:
-                bound[_VARARGS_KEY] = (repr(extra_pos), False)
-            if mdef.catch_kwargs:
-                bound[_KWARGS_KEY] = (repr(extra_kw), False)
-            missing = [p for p in mdef.params if p not in bound]
-            if missing:
-                raise EngineError(
-                    f"{origin}: macro {mdef.name!r} missing arguments "
-                    f"{missing}"
-                )
-            rendered = _render_body(mdef, bound, var_fn, env, origin)
-            return expand_macros(rendered, macros, origin, var_fn, env)
+    def _handle(name: str):
+        return lambda *args, **kwargs: call_macro(
+            macros, name, args, kwargs, origin, var_fn, env
+        )
 
-        return call
-
-    return MacroContext(
-        {name: _handle(mdef) for name, mdef in macros.items()}, origin
-    )
+    return MacroContext({name: _handle(name) for name in macros}, origin)
 
 
 # --------------------------------------------------------------------------
@@ -777,9 +698,6 @@ _TAG_RE = re.compile(
     r"\{%-?\s*(if|elif|else|endif|for|endfor|set|endset|do|call|endcall)"
     r"\b(.*?)-?%\}",
     re.S,
-)
-_LOOPVAR_SUB_RE = re.compile(
-    r"\{\{-?\s*(\w+)(?:\.(\w+))?((?:\s*\|\s*\w+(?:\((?:[^()']|'[^']*')*\))?)*)\s*-?\}\}"
 )
 
 
@@ -857,58 +775,6 @@ def _flt_map(v, fname, *args):
 
 _FILTERS["map"] = _flt_map
 
-_FILTER_CALL_RE = re.compile(r"\|\s*(\w+)(\((?:[^()']|'[^']*')*\))?")
-_QUOTED_SPAN_SPLIT_RE = re.compile(r"('(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\")")
-_JINJA_LITERAL_WORDS = {"true": "True", "false": "False", "none": "None"}
-
-
-def _pythonize_jinja_literals(text: str) -> str:
-    """Rewrite bare Jinja true/false/none to Python spelling OUTSIDE
-    quoted spans, so ast.literal_eval accepts `default('y', true)`."""
-    parts = _QUOTED_SPAN_SPLIT_RE.split(text)
-    return "".join(
-        p
-        if i % 2
-        else re.sub(
-            r"\b(true|false|none)\b",
-            lambda m: _JINJA_LITERAL_WORDS[m.group(1)],
-            p,
-        )
-        for i, p in enumerate(parts)
-    )
-
-
-def _apply_filters(value, filter_text: str, origin: str):
-    for fname, argtext in _FILTER_CALL_RE.findall(filter_text or ""):
-        fn = _FILTERS.get(fname)
-        if fn is None:
-            raise EngineError(
-                f"{origin}: unsupported Jinja filter |{fname} "
-                f"(supported: {', '.join(sorted(_FILTERS))})"
-            )
-        args = ()
-        if argtext and argtext[1:-1].strip():
-            try:
-                import ast as _ast_mod
-
-                args = _ast_mod.literal_eval(
-                    _pythonize_jinja_literals(argtext[1:-1].strip()) + ","
-                )
-            except (ValueError, SyntaxError) as exc:
-                raise EngineError(
-                    f"{origin}: unparseable arguments for Jinja filter "
-                    f"|{fname}{argtext} (literal arguments only)"
-                ) from exc
-        try:
-            value = fn(value, *args)
-        except TypeError as exc:
-            raise EngineError(
-                f"{origin}: Jinja filter |{fname} rejected its "
-                f"arguments: {exc}"
-            ) from exc
-    return value
-
-
 _ARITH_OPS = {
     _ast.Add: lambda a, b: a + b,
     _ast.Sub: lambda a, b: a - b,
@@ -927,6 +793,26 @@ class _Namespace(dict):
 
 class _Unresolved(Exception):
     pass
+
+
+def var_lookup(values: dict | None, origin: str):
+    """The ``var_fn`` for :func:`render_control_flow`: ``var('x')``
+    reads ``values``, else the call's default, else raises — dbt's
+    "Required var not found"."""
+    values = {} if values is None else values
+
+    def var_fn(name, default=_Unresolved):
+        if name in values:
+            return values[name]
+        if default is not _Unresolved:
+            return default
+        raise EngineError(
+            f"{origin}: var({name!r}) has no value and no default (dbt: "
+            "Required var not found; set it in dbt_project.yml vars: or "
+            "pass --vars)"
+        )
+
+    return var_fn
 
 
 def _rewrite_tilde_concat(expr: str) -> str:
@@ -949,20 +835,12 @@ def _rewrite_tilde_concat(expr: str) -> str:
     Jinja does; `**` binds tighter than both in both grammars.)"""
     if "~" not in expr:
         return expr
-    parts = _QUOTED_SPAN_SPLIT_RE.split(expr)
-    s = "".join(p if i % 2 else p.replace("~", "@") for i, p in enumerate(parts))
+    s = "".join(
+        p if i % 2 else p.replace("~", "@") for i, p in enumerate(split_quoted(expr))
+    )
     depth, seen_concat = 0, {0: False}
-    i, n, in_q = 0, len(s), None
-    while i < n:
-        ch = s[i]
-        if in_q:
-            if ch == "\\":
-                i += 1
-            elif ch == in_q:
-                in_q = None
-        elif ch in "'\"":
-            in_q = ch
-        elif ch in "([{":
+    for i, ch in _code_chars(s):
+        if ch in "([{":
             depth += 1
             seen_concat[depth] = False
         elif ch in ")]}":
@@ -972,16 +850,18 @@ def _rewrite_tilde_concat(expr: str) -> str:
             seen_concat[depth] = False
         elif ch == "@":
             seen_concat[depth] = True
-        elif ch == "*" and i + 1 < n and s[i + 1] == "*":
-            i += 1  # '**' (pow) binds tighter than '~' in both grammars
-        elif ch in "*/%" and seen_concat.get(depth):
+        elif (
+            ch in "*/%"
+            and seen_concat.get(depth)
+            # '**' (pow) binds tighter than '~' in both grammars
+            and "**" not in s[max(i - 1, 0) : i + 2]
+        ):
             raise EngineError(
                 f"ambiguous Jinja expression {expr!r}: `~` (concat) binds"
                 f" looser than `{ch}` in Jinja but this engine evaluates"
                 " the mix with Python precedence — parenthesize the"
                 f" arithmetic operand, e.g. `x ~ (y {ch} 2)`"
             )
-        i += 1
     return s
 
 
@@ -997,10 +877,9 @@ _KW_KWARG_RE = re.compile(r"(?<![\w.])(from|except)\s*=(?!=)")
 def _rewrite_keyword_kwargs(expr: str) -> str:
     if "from" not in expr and "except" not in expr:
         return expr
-    parts = _QUOTED_SPAN_SPLIT_RE.split(expr)
     return "".join(
         p if i % 2 else _KW_KWARG_RE.sub(lambda m: m.group(1) + "_=", p)
-        for i, p in enumerate(parts)
+        for i, p in enumerate(split_quoted(expr))
     )
 
 
@@ -1015,6 +894,13 @@ def _cf_eval(expr: str, env: dict, var_fn, origin: str):
     return _cf_node(tree.body, env, var_fn, origin)
 
 
+def _env_value(env: dict, name: str):
+    """``env[name]`` as expressions see it: a bound macro argument is
+    its Python value."""
+    v = env.get(name)
+    return v.value if isinstance(v, _Arg) else v
+
+
 def _cf_node(node: _ast.AST, env: dict, var_fn, origin: str):
     if isinstance(node, _ast.Constant):
         return node.value
@@ -1025,14 +911,16 @@ def _cf_node(node: _ast.AST, env: dict, var_fn, origin: str):
         if low == "none":
             return None
         if node.id in env:
-            return env[node.id]
+            return _env_value(env, node.id)
         raise EngineError(f"{origin}: unknown name {node.id!r} in Jinja expression")
     if isinstance(node, _ast.Attribute):
+        named = isinstance(node.value, _ast.Name)
         obj = (
-            env.get(node.value.id)
-            if isinstance(node.value, _ast.Name)
+            _env_value(env, node.value.id)
+            if named
             else _cf_node(node.value, env, var_fn, origin)
         )
+        attr = f"{node.value.id if named else ''}.{node.attr}"
         if isinstance(obj, dict) and node.attr in obj:
             return obj[node.attr]
         if isinstance(obj, QueryResultTable) and node.attr in (
@@ -1045,11 +933,11 @@ def _cf_node(node: _ast.AST, env: dict, var_fn, origin: str):
             # A typo like target.schma should list the dict's real keys,
             # not the stale loop-only message (round-3 ADVICE).
             raise EngineError(
-                f"{origin}: unknown attribute .{node.attr} "
+                f"{origin}: unknown attribute {attr} "
                 f"(available: {', '.join(sorted(map(str, obj)))})"
             )
         raise EngineError(
-            f"{origin}: unsupported attribute .{node.attr} "
+            f"{origin}: unsupported attribute {attr} "
             "(attribute access is supported on context dicts — "
             "target/config/node/loop — and statement result tables)"
         )
@@ -1087,24 +975,24 @@ def _cf_node(node: _ast.AST, env: dict, var_fn, origin: str):
                 f"{origin}: unsupported Jinja filter |{fname} "
                 f"(supported: {', '.join(sorted(_FILTERS))})"
             )
-        return fn(value, *fargs)
+        try:
+            return fn(value, *fargs)
+        except (TypeError, ValueError) as exc:
+            raise EngineError(
+                f"{origin}: Jinja filter |{fname} failed on a "
+                f"{type(value).__name__}: {exc}"
+            ) from exc
     if isinstance(node, _ast.BinOp) and isinstance(node.op, _ast.MatMult):
         # `a ~ b` rewritten by _rewrite_tilde_concat: Jinja concat —
         # both sides coerced to text (Jinja stringifies numbers and
         # booleans; our _to_text convention spells booleans true/false).
-        def _cat_text(v):
-            if isinstance(v, bool):
-                return "true" if v else "false"
-            if v is None:
-                raise EngineError(
-                    f"{origin}: cannot concatenate None with ~ "
-                    "(use | default(...) first)"
-                )
-            return str(v)
-
-        return _cat_text(_cf_node(node.left, env, var_fn, origin)) + _cat_text(
-            _cf_node(node.right, env, var_fn, origin)
-        )
+        parts = [_cf_node(n, env, var_fn, origin) for n in (node.left, node.right)]
+        if None in parts:
+            raise EngineError(
+                f"{origin}: cannot concatenate None with ~ "
+                "(use | default(...) first)"
+            )
+        return "".join(map(_to_text, parts))
     if isinstance(node, _ast.BinOp) and type(node.op) in _ARITH_OPS:
         # Jinja arithmetic (+ - * / // %): counters and accumulators —
         # the namespace() idiom's bread and butter ({% set ns.n = ns.n
@@ -1178,8 +1066,8 @@ def _cf_node(node: _ast.AST, env: dict, var_fn, origin: str):
         # [, default]) — the dbt config-access idiom the reference's own
         # macros use (get_create_function_as_sql.sql:3-5).
         recv = node.func.value
-        if isinstance(recv, _ast.Name) and isinstance(env.get(recv.id), dict):
-            obj = env[recv.id]
+        obj = _env_value(env, recv.id) if isinstance(recv, _ast.Name) else None
+        if isinstance(obj, dict):
             args = [_cf_node(a, env, var_fn, origin) for a in node.args]
             if node.func.attr == "get" and 1 <= len(args) <= 2:
                 # Arity-faithful: MacroContext.get(name) raises a clear
@@ -1305,50 +1193,29 @@ def _cf_tokens(text: str) -> list:
 _GENERAL_SPAN_RE = re.compile(r"\{\{-?\s*(.+?)\s*-?\}\}", re.S)
 
 
-def _cf_subst_loop_vars(
-    text: str, env: dict, origin: str = "<model>", var_fn=None
-) -> str:
-    """Substitute {{ x }} / {{ loop.index }} / {{ x | trim }} for
-    env-bound names only; every other placeholder (var/ref/source/this)
-    passes through. Spans the simple pattern can't parse — subscripts
-    (`{{ row[0] }}`), chained attributes, parenthesized filters — are
-    evaluated by the full expression walker IF their leading identifier
-    is env-bound (so a genuine error there is loud); spans leading with
-    an unbound name still pass through for the engine renderer."""
+def _to_text(v) -> str:
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return str(v)
 
-    def _to_text(v) -> str:
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        return str(v)
+
+def _cf_spans(text: str, env: dict, var_fn, origin: str) -> str:
+    """Evaluate every ``{{ expr }}`` span whose leading name is bound in
+    ``env`` — a bare bound macro argument renders its verbatim text;
+    spans led by an unbound name (ref/var/source/this, nested macro
+    calls) pass through for the later passes."""
 
     def repl(m: re.Match) -> str:
-        name, attr, filters = m.group(1), m.group(2), m.group(3)
-        if name not in env:
-            return m.group(0)
-        v = env[name]
-        if attr is not None:
-            if isinstance(v, dict) and attr in v:
-                v = v[attr]
-            else:
-                return m.group(0)
-        if filters:
-            v = _apply_filters(v, filters, origin)
-        return _to_text(v)
-
-    out = _LOOPVAR_SUB_RE.sub(repl, text)
-    if "{{" not in out:
-        return out
-
-    def general_repl(m: re.Match) -> str:
         expr = m.group(1)
-        lead = re.match(r"[A-Za-z_]\w*", expr)
+        lead = _IDENT_RE.match(expr)
         if not lead or lead.group(0) not in env:
             return m.group(0)
-        return _to_text(
-            _cf_eval(expr, env, var_fn or _no_var_fn, origin)
-        )
+        v = env[lead.group(0)]
+        if isinstance(v, _Arg) and lead.end() == len(expr):
+            return v.text
+        return _to_text(_cf_eval(expr, env, var_fn, origin))
 
-    return _GENERAL_SPAN_RE.sub(general_repl, out)
+    return _GENERAL_SPAN_RE.sub(repl, text)
 
 
 def _cf_render(tokens: list, i: int, env: dict, var_fn, origin: str,
@@ -1366,11 +1233,7 @@ def _cf_render(tokens: list, i: int, env: dict, var_fn, origin: str,
         lit, tag, expr = tokens[i]
         if tag is None:
             if active:
-                out.append(
-                    _cf_subst_loop_vars(lit, env, origin, var_fn)
-                    if env
-                    else lit
-                )
+                out.append(_cf_spans(lit, env, var_fn, origin) if env else lit)
             i += 1
             continue
         if tag in stop:
@@ -1570,20 +1433,19 @@ def render_control_flow(
     is_incremental: bool | None = None,
     extra_env: dict | None = None,
 ) -> str:
-    """Evaluate {% if %}/{% for %}/{% set %} blocks in a model body.
+    """Evaluate {% if %}/{% for %}/{% set %} blocks and the ``{{ }}``
+    spans led by a bound name, in a model or macro body.
 
     ``var_fn(name, default)`` resolves var() references inside
-    conditions (default is the sentinel class when absent);
-    ``is_incremental`` supplies the value of dbt's ``is_incremental()``
-    (None = calling it is an error — loaders without build context).
-    ``extra_env`` pre-seeds names visible to conditions and ``{{ x }}``
-    substitution — the ``target`` context dict and, for macro bodies,
-    the bound macro arguments. Text with no tags returns unchanged at
-    regex-scan cost.
+    conditions (default is the sentinel class when absent — see
+    :func:`var_lookup`); ``is_incremental`` supplies the value of dbt's
+    ``is_incremental()`` (None = calling it is an error — loaders
+    without build context). ``extra_env`` pre-seeds names visible to
+    conditions and ``{{ x }}`` spans — the ``target`` context dict and,
+    for macro bodies, the bound macro arguments. Spans led by any other
+    name pass through, also in text with no tags.
     """
     text = apply_whitespace_control(text)
-    if "{%" not in text:
-        return text
     env: dict = dict(extra_env or {})
     if is_incremental is not None:
         env["__is_incremental__"] = bool(is_incremental)

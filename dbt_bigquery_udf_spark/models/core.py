@@ -68,9 +68,6 @@ _THIS_RE = re.compile(r"\{\{\s*this\s*\}\}")
 _VAR_RE = re.compile(
     r"\{\{\s*var\(\s*'([^']+)'\s*(?:,\s*('[^']*'|[^)\s]+)\s*)?\)\s*\}\}"
 )
-# dbt's target context: {{ target.name }} / {{ target.schema }} / ... —
-# the standard env-routing idiom (see catalog.target_context).
-_TARGET_ATTR_RE = re.compile(r"\{\{\s*target\.(\w+)\s*\}\}")
 _JINJA_SPAN_RE = re.compile(r"\{\{.*?\}\}", re.S)
 _REF_TOKEN_RE = re.compile(
     r"\bref\(\s*['\"]([^'\"]+)['\"]\s*"
@@ -779,15 +776,6 @@ class Engine:
             "(dbt: Required var not found)"
         )
 
-    def _resolve_target_attr(self, spec: ModelSpec, attr: str) -> str:
-        tgt = target_context(self.env)
-        if attr not in tgt:
-            raise EngineError(
-                f"model {spec.name}: unknown target attribute "
-                f"target.{attr} (available: {sorted(tgt)})"
-            )
-        return str(tgt[attr])
-
     def render(self, spec: ModelSpec) -> str:
         """Compile the model body: dialect transpile + ref/source resolution.
 
@@ -811,22 +799,7 @@ class Engine:
         is_incremental = spec.kind == "incremental" and self.spark.catalog.tableExists(
             f"{self.database_for(spec)}.{spec.relation_name}"
         )
-        from ..macros import apply_whitespace_control
-
-        # `{{- ref('x') -}}` must trim AND still match the placeholder
-        # regexes below even when the body carries no {% %} tags.
-        sql = apply_whitespace_control(sql)
-        from ..macros import _Unresolved, render_control_flow
-
-        def _cf_var(name: str, default, _spec=spec):
-            if name in self.vars:
-                return self.vars[name]
-            if default is not _Unresolved:
-                return default
-            raise EngineError(
-                f"model {_spec.name}: var('{name}') has no value and "
-                "no default (dbt: Required var not found)"
-            )
+        from ..macros import render_control_flow, var_lookup
 
         cf_extra: dict = {"target": target_context(self.env)}
         if _UTILS_JINJA_RE.search(sql):
@@ -846,32 +819,19 @@ class Engine:
                     self._resolve_source,
                 )
             )
-        if "{%" in sql:
-            # Jinja control flow ({% if %}/{% for %}/{% set %}, macros.py
-            # subset): is_incremental() is just a boolean in the same
-            # evaluator — which, unlike the round-1 regex strip, makes
-            # `{% if is_incremental() %}...{% else %}...{% endif %}`
-            # pick the right branch. Runs before var()/ref() substitution
-            # so emitted text keeps its placeholders for the passes below.
-            sql = render_control_flow(
-                sql,
-                _cf_var,
-                origin=f"model {spec.name}",
-                is_incremental=is_incremental,
-                extra_env=cf_extra,
-            )
-        elif len(cf_extra) > 1:
-            # tag-free body that still calls a build-time helper in a
-            # {{ }} span: evaluate env-bound spans only — spans leading
-            # with unbound names (ref/var/this/source) pass through to
-            # the regex passes below, as always
-            from ..macros import _cf_subst_loop_vars
-
-            sql = _cf_subst_loop_vars(
-                sql, cf_extra, f"model {spec.name}", _cf_var
-            )
-        sql = _TARGET_ATTR_RE.sub(
-            lambda m: self._resolve_target_attr(spec, m.group(1)), sql
+        # Jinja control flow ({% if %}/{% for %}/{% set %}, macros.py
+        # subset) and the {{ }} spans led by a bound name ({{ target.name
+        # }}, the build-time helpers): is_incremental() is just a boolean
+        # in the same evaluator — which, unlike the round-1 regex strip,
+        # makes `{% if is_incremental() %}...{% else %}...{% endif %}`
+        # pick the right branch. Runs before var()/ref() substitution so
+        # emitted text keeps its placeholders for the passes below.
+        sql = render_control_flow(
+            sql,
+            var_lookup(self.vars, f"model {spec.name}"),
+            origin=f"model {spec.name}",
+            is_incremental=is_incremental,
+            extra_env=cf_extra,
         )
         sql = _INVOCATION_RE.sub(
             lambda m: (

@@ -10,7 +10,8 @@ In production the directory is a landing prefix (or a Kafka topic) and
 the same query runs with a continuous trigger.
 
 * :func:`scratch_dir` names a staging or sink directory, keyed on the
-  corpus fingerprint;
+  corpus fingerprint, and removes the ones of its kind whose corpus is
+  gone;
 * :func:`stage_source_dir` stages one source table as a single-file
   directory of symlinks, :func:`stage_batches` stages a list of frames
   as one file per micro-batch;
@@ -28,6 +29,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 import time
 from contextlib import contextmanager
@@ -60,8 +62,28 @@ def scratch_dir(
     one. Names are stable across runs, so per-run artifacts don't
     accumulate: pass ``fresh=True`` for a sink that must start each run
     empty (the previous run's directory is removed and rewritten in
-    place instead of leaking one uuid-named directory per run)."""
+    place instead of leaking one uuid-named directory per run).
+
+    Each name records its corpus' absolute path in a sibling
+    ``<kind>_<fingerprint>.corpus`` file. Directories of this kind whose
+    recorded corpus no longer exists are removed first, so the stages
+    and sinks of deleted corpora (temporary test corpora) do not pile
+    up."""
+    os.makedirs(STAGING_ROOT, exist_ok=True)
+    record = re.compile(re.escape(kind) + r"_[0-9a-f]{10}\.corpus")
+    for old in filter(record.fullmatch, os.listdir(STAGING_ROOT)):
+        path = os.path.join(STAGING_ROOT, old)
+        try:
+            with open(path) as f:
+                if not os.path.exists(f.read()):
+                    shutil.rmtree(path[: -len(".corpus")], ignore_errors=True)
+                    os.remove(path)
+        except OSError:
+            pass  # removed by a concurrent sweep
     d = os.path.join(STAGING_ROOT, f"{kind}_{corpus_fingerprint(sf_dir, files)}")
+    if not os.path.exists(d + ".corpus"):
+        with open(d + ".corpus", "w") as f:
+            f.write(os.path.abspath(sf_dir))
     if fresh:
         shutil.rmtree(d, ignore_errors=True)
     return d
@@ -70,14 +92,8 @@ def scratch_dir(
 def stage_source_dir(sf_dir: str, table: str) -> str:
     """File-stream sources read directories; a source table is a single
     parquet file. Stage a directory holding one symlink to
-    ``<sf_dir>/<table>.parquet`` (O(1), no data copy) and return it.
-    Sibling ``<table>_*`` stages whose symlink dangles (their corpus was
-    deleted) are removed first, so stages of temporary corpora do not
-    pile up."""
+    ``<sf_dir>/<table>.parquet`` (O(1), no data copy) and return it."""
     name = f"{table}.parquet"
-    for old in glob.glob(os.path.join(STAGING_ROOT, f"{table}_*", name)):
-        if not os.path.exists(old):
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
     stage = scratch_dir(table, sf_dir, (name,))
     link = os.path.join(stage, name)
     if not os.path.lexists(link):

@@ -49,19 +49,22 @@ import dataclasses
 import os
 import re
 from dataclasses import dataclass, field
+from typing import Iterator
 
 import yaml
 
 from .catalog import target_context
 from .macros import (
     MacroDef,
-    _Unresolved,
+    call_macro,
     expand_macros,
     expand_test_macro,
     parse_macros,
     parse_test_macros,
+    render_control_flow,
+    var_lookup,
 )
-from .models.core import _TARGET_ATTR_RE, EngineError, Exposure, ModelSpec
+from .models.core import EngineError, Exposure, ModelSpec
 from .models.quality import SchemaTest, SingularTest
 from .models.metrics import Metric
 from .models.unit_tests import UnitTest
@@ -517,6 +520,26 @@ def _load_python_model(path: str):
     return body, tuple(dict.fromkeys(_PY_REF_RE.findall(text)))
 
 
+def _project_files(base: str, paths, suffixes) -> Iterator[tuple[str, str]]:
+    """(root, path) of every file ending in ``suffixes`` under each of
+    ``paths`` (relative to ``base``), directories and names sorted — the
+    one walk every project loader shares."""
+    for p in paths:
+        root = os.path.join(base, p)
+        for dirpath, _dirs, files in sorted(os.walk(root)):
+            for f in sorted(files):
+                if f.endswith(suffixes):
+                    yield root, os.path.join(dirpath, f)
+
+
+def _macro_files(base: str, paths) -> Iterator[tuple[str, dict, dict]]:
+    """(path, macros, test macros) of every ``.sql`` file under ``paths``."""
+    for _root, full in _project_files(base, paths, ".sql"):
+        with open(full) as fh:
+            text = fh.read()
+        yield full, parse_macros(text, full), parse_test_macros(text, full)
+
+
 def load_project(
     project_dir: str,
     env: str | None = None,
@@ -559,39 +582,26 @@ def load_project(
     # env-derived context dict (dbt's target.name/schema/database).
     load_vars = {**dict(proj.get("vars", {}) or {}), **(cli_vars or {})}
     macro_env = {"target": target_context(env)}
+    load_var = var_lookup(load_vars, "project load")
 
-    def _load_var_fn(vname, default):
-        if vname in load_vars:
-            return load_vars[vname]
-        if default is not _Unresolved:
-            return default
-        raise EngineError(
-            f"var({vname!r}) has no value and no default at project "
-            "load (set it in dbt_project.yml vars: or pass --vars)"
-        )
+    def _expand(text: str, origin: str) -> str:
+        return expand_macros(text, macros, origin, load_var, macro_env)
 
     # {% docs %} blocks: dbt keeps long-form documentation in .md files
     # under model/macro paths and references it from schema.yml
     # descriptions via {{ doc('name') }} — resolved at load so the
     # persisted COMMENTs (F10) carry the real text.
     doc_blocks: dict[str, str] = {}
-    for dp in [*model_paths, *proj.get("docs-paths", []), *macro_paths]:
-        root_d = os.path.join(project_dir, dp)
-        if not os.path.isdir(root_d):
-            continue
-        for dirpath, _dirs, files in sorted(os.walk(root_d)):
-            for f in sorted(files):
-                if not f.endswith(".md"):
-                    continue
-                full = os.path.join(dirpath, f)
-                with open(full) as fh:
-                    for dm in _DOCS_BLOCK_RE.finditer(fh.read()):
-                        d_name, d_text = dm.group(1), dm.group(2).strip()
-                        if d_name in doc_blocks:
-                            raise EngineError(
-                                f"duplicate docs block {d_name!r} ({full})"
-                            )
-                        doc_blocks[d_name] = d_text
+    doc_paths = [*model_paths, *proj.get("docs-paths", []), *macro_paths]
+    for _root, full in _project_files(project_dir, doc_paths, ".md"):
+        with open(full) as fh:
+            for dm in _DOCS_BLOCK_RE.finditer(fh.read()):
+                d_name, d_text = dm.group(1), dm.group(2).strip()
+                if d_name in doc_blocks:
+                    raise EngineError(
+                        f"duplicate docs block {d_name!r} ({full})"
+                    )
+                doc_blocks[d_name] = d_text
 
     def _resolve_docs(desc: str, where: str) -> str:
         def repl(m: re.Match) -> str:
@@ -606,16 +616,7 @@ def load_project(
         desc = _DOC_REF_RE.sub(repl, desc)
         # {{ target.name }} in schema.yml descriptions — the dbt idiom
         # for env-stamped docs — resolves from the load env.
-        tgt = macro_env["target"]
-
-        def tgt_repl(m: re.Match) -> str:
-            if m.group(1) not in tgt:
-                raise EngineError(
-                    f"{where}: unknown target attribute target.{m.group(1)}"
-                )
-            return str(tgt[m.group(1)])
-
-        return _TARGET_ATTR_RE.sub(tgt_repl, desc)
+        return render_control_flow(desc, load_var, where, extra_env=macro_env)
 
     # User macros (SQL-fragment subset — see macros.py): every .sql file
     # under macro-paths contributes {% macro %} definitions; call sites
@@ -624,30 +625,20 @@ def load_project(
     # referenced by bare name from schema.yml tests: lists.
     macros: dict[str, MacroDef] = {}
     test_macros: dict[str, MacroDef] = {}
-    for mp_dir in macro_paths:
-        root_m = os.path.join(project_dir, mp_dir)
-        if not os.path.isdir(root_m):
-            continue
-        for dirpath, _dirs, files in sorted(os.walk(root_m)):
-            for f in sorted(files):
-                if not f.endswith(".sql"):
-                    continue
-                full = os.path.join(dirpath, f)
-                with open(full) as fh:
-                    ftext = fh.read()
-                for mname, mdef in parse_macros(ftext, full).items():
-                    if mname in macros:
-                        raise EngineError(
-                            f"duplicate macro {mname!r} (second "
-                            f"definition in {full})"
-                        )
-                    macros[mname] = mdef
-                for tname, tdef in parse_test_macros(ftext, full).items():
-                    if tname in test_macros:
-                        raise EngineError(
-                            f"duplicate test macro {tname!r} ({full})"
-                        )
-                    test_macros[tname] = tdef
+    for full, parsed, parsed_tests in _macro_files(project_dir, macro_paths):
+        for mname, mdef in parsed.items():
+            if mname in macros:
+                raise EngineError(
+                    f"duplicate macro {mname!r} (second "
+                    f"definition in {full})"
+                )
+            macros[mname] = mdef
+        for tname, tdef in parsed_tests.items():
+            if tname in test_macros:
+                raise EngineError(
+                    f"duplicate test macro {tname!r} ({full})"
+                )
+            test_macros[tname] = tdef
 
     # dbt packages (packages.yml): local-path packages contribute their
     # macros — callable qualified ({{ pkg.macro(...) }}) always, and
@@ -774,49 +765,39 @@ def load_project(
             with open(pkg_proj_path) as fh:
                 pkg_proj = yaml.safe_load(fh) or {}
             pkg_name = pkg_proj.get("name", os.path.basename(pkg_dir))
-            for pmp in pkg_proj.get("macro-paths", ["macros"]):
-                root_p = os.path.join(pkg_dir, pmp)
-                if not os.path.isdir(root_p):
-                    continue
-                for dirpath, _dirs, files in sorted(os.walk(root_p)):
-                    for f in sorted(files):
-                        if not f.endswith(".sql"):
-                            continue
-                        full = os.path.join(dirpath, f)
-                        with open(full) as fh:
-                            ftext = fh.read()
-                        parsed = parse_macros(ftext, full)
-                        for tname, tdef in parse_test_macros(ftext, full).items():
-                            # project wins a bare-name collision; two
-                            # PACKAGES colliding is an error (same rule
-                            # as fragment macros)
-                            if tname in pkg_test_owner and pkg_test_owner[tname] != pkg_name:
-                                raise EngineError(
-                                    f"test macro {tname!r} is defined by "
-                                    f"packages {pkg_test_owner[tname]!r} and "
-                                    f"{pkg_name!r} — rename one"
-                                )
-                            if tname not in test_macros:
-                                test_macros[tname] = tdef
-                                pkg_test_owner[tname] = pkg_name
-                        for mname, mdef in parsed.items():
-                            qual = f"{pkg_name}.{mname}"
-                            if qual in macros:
-                                raise EngineError(
-                                    f"duplicate macro {qual!r} ({full})"
-                                )
-                            macros[qual] = mdef
-                            if mname in pkg_bare_owner:
-                                if pkg_bare_owner[mname] != pkg_name:
-                                    raise EngineError(
-                                        f"macro {mname!r} is defined by "
-                                        f"packages {pkg_bare_owner[mname]!r} "
-                                        f"and {pkg_name!r} — call it "
-                                        "package-qualified"
-                                    )
-                            elif mname not in macros:
-                                macros[mname] = mdef
-                                pkg_bare_owner[mname] = pkg_name
+            pkg_macro_paths = pkg_proj.get("macro-paths", ["macros"])
+            for full, parsed, parsed_tests in _macro_files(pkg_dir, pkg_macro_paths):
+                for tname, tdef in parsed_tests.items():
+                    # project wins a bare-name collision; two
+                    # PACKAGES colliding is an error (same rule
+                    # as fragment macros)
+                    if tname in pkg_test_owner and pkg_test_owner[tname] != pkg_name:
+                        raise EngineError(
+                            f"test macro {tname!r} is defined by "
+                            f"packages {pkg_test_owner[tname]!r} and "
+                            f"{pkg_name!r} — rename one"
+                        )
+                    if tname not in test_macros:
+                        test_macros[tname] = tdef
+                        pkg_test_owner[tname] = pkg_name
+                for mname, mdef in parsed.items():
+                    qual = f"{pkg_name}.{mname}"
+                    if qual in macros:
+                        raise EngineError(
+                            f"duplicate macro {qual!r} ({full})"
+                        )
+                    macros[qual] = mdef
+                    if mname in pkg_bare_owner:
+                        if pkg_bare_owner[mname] != pkg_name:
+                            raise EngineError(
+                                f"macro {mname!r} is defined by "
+                                f"packages {pkg_bare_owner[mname]!r} "
+                                f"and {pkg_name!r} — call it "
+                                "package-qualified"
+                            )
+                    elif mname not in macros:
+                        macros[mname] = mdef
+                        pkg_bare_owner[mname] = pkg_name
 
     # dbt's generate_schema_name override — THE most common production
     # macro customization (every multi-env tree carries one). When the
@@ -827,53 +808,36 @@ def load_project(
     # the macro computes the LOGICAL dataset — target.schema binds to
     # the logical root ('udf'), because the engine applies --env
     # suffixing uniformly AFTER routing (catalog.env_database); binding
-    # the env-suffixed name would double-suffix.
-    def _route_schema(kwargs: dict, model_name: str) -> None:
-        if "generate_schema_name" not in macros:
-            return
-        custom = kwargs.get("database")
-        arg = "'" + str(custom).replace("'", "\\'") + "'" if custom else "none"
-        node_arg = "{'name': '" + model_name + "', 'resource_type': 'model'}"
-        routed = expand_macros(
-            f"{{{{ generate_schema_name({arg}, {node_arg}) }}}}",
-            macros,
-            origin=f"model {model_name} (generate_schema_name)",
-            var_fn=_load_var_fn,
-            env={**macro_env, "target": {**macro_env["target"], "schema": "udf"}},
-        ).strip()
-        if not re.fullmatch(r"\w+", routed or ""):
-            raise EngineError(
-                f"model {model_name}: generate_schema_name rendered "
-                f"{routed!r} — expected one identifier"
-            )
-        kwargs["database"] = routed
-
-    # generate_alias_name — the sibling override for the PHYSICAL
-    # relation name (dbt's default: custom alias if set, else the model
-    # name). Routed the same way as generate_schema_name.
-    def _route_alias(kwargs: dict, model_name: str) -> None:
-        if "generate_alias_name" not in macros:
-            return
-        custom = kwargs.get("alias")
-        arg = "'" + str(custom).replace("'", "\\'") + "'" if custom else "none"
-        node_arg = "{'name': '" + model_name + "', 'resource_type': 'model'}"
-        routed = expand_macros(
-            f"{{{{ generate_alias_name({arg}, {node_arg}) }}}}",
-            macros,
-            origin=f"model {model_name} (generate_alias_name)",
-            var_fn=_load_var_fn,
-            env=macro_env,
-        ).strip()
-        if not re.fullmatch(r"\w+", routed or ""):
-            raise EngineError(
-                f"model {model_name}: generate_alias_name rendered "
-                f"{routed!r} — expected one identifier"
-            )
-        # The macro's output is authoritative (dbt): an override that
-        # returns node.name DROPS a configured alias, it doesn't keep it.
-        kwargs.pop("alias", None)
-        if routed != model_name:
-            kwargs["alias"] = routed
+    # the env-suffixed name would double-suffix. generate_alias_name,
+    # the sibling override for the PHYSICAL relation name (dbt's
+    # default: custom alias if set, else the model name), routes the
+    # same way; its output is authoritative (dbt): an override that
+    # returns node.name DROPS a configured alias, it doesn't keep it.
+    def _route(kwargs: dict, model_name: str) -> None:
+        node = {"name": model_name, "resource_type": "model"}
+        tgt = macro_env["target"]
+        for key, macro, target in (
+            ("database", "generate_schema_name", {**tgt, "schema": "udf"}),
+            ("alias", "generate_alias_name", tgt),
+        ):
+            if macro not in macros:
+                continue
+            custom = kwargs.pop(key, None)
+            routed = call_macro(
+                macros,
+                macro,
+                (str(custom) if custom else None, node),
+                origin=f"model {model_name} ({macro})",
+                var_fn=load_var,
+                env={**macro_env, "target": target},
+            ).strip()
+            if not re.fullmatch(r"\w+", routed or ""):
+                raise EngineError(
+                    f"model {model_name}: {macro} rendered "
+                    f"{routed!r} — expected one identifier"
+                )
+            if key == "database" or routed != model_name:
+                kwargs[key] = routed
 
     models: list[ModelSpec] = []
     tests: list[SchemaTest] = []
@@ -883,17 +847,13 @@ def load_project(
     # Pass 1: YAML (descriptions, tests, sources) so docs attach to specs.
     yml_files: list[str] = []
     sql_files: list[tuple[str, list[str]]] = []  # (path, folder parts)
-    for mp in model_paths:
-        root = os.path.join(project_dir, mp)
-        for dirpath, _dirs, files in sorted(os.walk(root)):
-            for f in sorted(files):
-                full = os.path.join(dirpath, f)
-                if f.endswith((".yml", ".yaml")):
-                    yml_files.append(full)
-                elif f.endswith((".sql", ".py")):
-                    rel = os.path.relpath(dirpath, root)
-                    parts = [] if rel == "." else rel.split(os.sep)
-                    sql_files.append((full, parts))
+    model_files = (".yml", ".yaml", ".sql", ".py")
+    for root, full in _project_files(project_dir, model_paths, model_files):
+        if full.endswith((".yml", ".yaml")):
+            yml_files.append(full)
+        else:
+            rel = os.path.relpath(os.path.dirname(full), root)
+            sql_files.append((full, [] if rel == "." else rel.split(os.sep)))
 
     unit_tests: list[UnitTest] = []
     exposures: list[Exposure] = []
@@ -1077,8 +1037,7 @@ def load_project(
                 continue  # disabled: never exec the file (dbt skips it)
             py_body, py_refs = _load_python_model(path)
             kwargs.pop("kind", None)  # python models are always tables
-            _route_schema(kwargs, stem)
-            _route_alias(kwargs, stem)
+            _route(kwargs, stem)
             models.append(
                 ModelSpec(
                     name=stem,
@@ -1100,9 +1059,7 @@ def load_project(
         # Macro expansion precedes config extraction so a config() block
         # stays literal (macros may not generate configs — out of subset),
         # but follows dbt's model: macros render before anything executes.
-        text = expand_macros(
-            text, macros, origin=path, var_fn=_load_var_fn, env=macro_env
-        )
+        text = _expand(text, path)
         try:
             cfg_inline, body = _split_config_block(text)
         except EngineError:
@@ -1135,8 +1092,7 @@ def load_project(
         if not kwargs.pop("_enabled", True):
             continue
         model_name = v_entry if ver is not None else stem
-        _route_schema(kwargs, model_name)
-        _route_alias(kwargs, model_name)
+        _route(kwargs, model_name)
         if ver is not None:
             kwargs["version"] = v_num
             if v_doc.get("latest_version") is not None:
@@ -1163,103 +1119,84 @@ def load_project(
     # {% endsnapshot %} blocks under snapshot-paths — the SCD2 surface a
     # migrating tree brings as files (the engine's kind='snapshot' has
     # existed since round 1; this wires the dbt file format onto it).
-    for snp in proj.get("snapshot-paths", ["snapshots"]):
-        root_s = os.path.join(project_dir, snp)
-        if not os.path.isdir(root_s):
-            continue
-        for dirpath, _dirs, files in sorted(os.walk(root_s)):
-            for f in sorted(files):
-                if not f.endswith(".sql"):
-                    continue
-                s_path = os.path.join(dirpath, f)
-                with open(s_path) as fh:
-                    s_text = expand_macros(
-                        fh.read(), macros, origin=s_path,
-                        var_fn=_load_var_fn, env=macro_env,
-                    )
-                for sm in _SNAPSHOT_BLOCK_RE.finditer(s_text):
-                    s_name, s_body = sm.group(1), sm.group(2)
-                    if s_name in seen_stems:
-                        raise EngineError(
-                            f"duplicate model name {s_name!r}: "
-                            f"{seen_stems[s_name]} and {s_path}"
-                        )
-                    seen_stems[s_name] = s_path
-                    cfg, body = _split_config_block(s_body)
-                    s_kwargs: dict = {
-                        "kind": "snapshot",
-                        "unique_key": cfg.pop("unique_key", None),
-                        "snapshot_strategy": cfg.pop("strategy", "timestamp"),
-                        "updated_at": cfg.pop("updated_at", None),
-                    }
-                    if "check_cols" in cfg:
-                        cc = cfg.pop("check_cols")
-                        s_kwargs["check_cols"] = (
-                            tuple(cc) if isinstance(cc, (list, tuple)) else (cc,)
-                        )
-                    # dbt's snapshot schema config is target_schema
-                    # (target_database is BQ-project-level, dropped like
-                    # +database elsewhere)
-                    if "target_schema" in cfg:
-                        s_kwargs["database"] = cfg.pop("target_schema")
-                    cfg.pop("target_database", None)
-                    _apply_config(cfg, s_kwargs)
-                    if not s_kwargs.pop("_enabled", True):
-                        continue  # config(enabled=false): dbt skips it
-                    if s_kwargs["unique_key"] is None:
-                        raise EngineError(
-                            f"{s_path}: snapshot {s_name!r} needs unique_key"
-                        )
-                    meta_s = docs.get(s_name, {})
-                    models.append(
-                        ModelSpec(
-                            name=s_name,
-                            sql=body.strip(),
-                            description=meta_s.get("description", ""),
-                            **s_kwargs,
-                        )
-                    )
+    snapshot_paths = proj.get("snapshot-paths", ["snapshots"])
+    for _root, s_path in _project_files(project_dir, snapshot_paths, ".sql"):
+        with open(s_path) as fh:
+            s_text = _expand(fh.read(), s_path)
+        for sm in _SNAPSHOT_BLOCK_RE.finditer(s_text):
+            s_name, s_body = sm.group(1), sm.group(2)
+            if s_name in seen_stems:
+                raise EngineError(
+                    f"duplicate model name {s_name!r}: "
+                    f"{seen_stems[s_name]} and {s_path}"
+                )
+            seen_stems[s_name] = s_path
+            cfg, body = _split_config_block(s_body)
+            s_kwargs: dict = {
+                "kind": "snapshot",
+                "unique_key": cfg.pop("unique_key", None),
+                "snapshot_strategy": cfg.pop("strategy", "timestamp"),
+                "updated_at": cfg.pop("updated_at", None),
+            }
+            if "check_cols" in cfg:
+                cc = cfg.pop("check_cols")
+                s_kwargs["check_cols"] = (
+                    tuple(cc) if isinstance(cc, (list, tuple)) else (cc,)
+                )
+            # dbt's snapshot schema config is target_schema
+            # (target_database is BQ-project-level, dropped like
+            # +database elsewhere)
+            if "target_schema" in cfg:
+                s_kwargs["database"] = cfg.pop("target_schema")
+            cfg.pop("target_database", None)
+            _apply_config(cfg, s_kwargs)
+            if not s_kwargs.pop("_enabled", True):
+                continue  # config(enabled=false): dbt skips it
+            if s_kwargs["unique_key"] is None:
+                raise EngineError(
+                    f"{s_path}: snapshot {s_name!r} needs unique_key"
+                )
+            meta_s = docs.get(s_name, {})
+            models.append(
+                ModelSpec(
+                    name=s_name,
+                    sql=body.strip(),
+                    description=meta_s.get("description", ""),
+                    **s_kwargs,
+                )
+            )
 
-    for sp in seed_paths:
-        root = os.path.join(project_dir, sp)
-        if not os.path.isdir(root):
-            continue
-        for dirpath, _dirs, files in sorted(os.walk(root)):
-            for f in sorted(files):
-                if f.endswith(".csv"):
-                    stem = os.path.splitext(f)[0]
-                    meta = docs.get(stem, {})
-                    seed_kwargs: dict = {}
-                    # dbt's ``seeds:`` config tree works like ``models:``
-                    # (``seeds: <project>: <folder>: +schema/+tags/...``);
-                    # apply it before macro routing so +schema lands in
-                    # ModelSpec.database exactly as a model's would.
-                    rel_parts = [
-                        p
-                        for p in os.path.relpath(dirpath, root).split(os.sep)
-                        if p not in (".", "")
-                    ]
-                    _apply_config(
-                        _config_tree_for(
-                            proj.get("seeds", {}) or {}, name, rel_parts
-                        ),
-                        seed_kwargs,
-                    )
-                    seed_kwargs.pop("kind", None)  # seeds are always seeds
-                    # dbt routes seed schemas/aliases through the same
-                    # generate_* macros as models (snapshots do NOT:
-                    # their target_schema is documented as literal).
-                    _route_schema(seed_kwargs, stem)
-                    _route_alias(seed_kwargs, stem)
-                    models.append(
-                        ModelSpec(
-                            name=stem,
-                            kind="seed",
-                            sql=os.path.join(dirpath, f),
-                            description=meta.get("description", ""),
-                            **seed_kwargs,
-                        )
-                    )
+    for root, seed_path in _project_files(project_dir, seed_paths, ".csv"):
+        stem = os.path.splitext(os.path.basename(seed_path))[0]
+        meta = docs.get(stem, {})
+        seed_kwargs: dict = {}
+        # dbt's ``seeds:`` config tree works like ``models:``
+        # (``seeds: <project>: <folder>: +schema/+tags/...``);
+        # apply it before macro routing so +schema lands in
+        # ModelSpec.database exactly as a model's would.
+        rel_parts = [
+            p
+            for p in os.path.relpath(os.path.dirname(seed_path), root).split(os.sep)
+            if p not in (".", "")
+        ]
+        _apply_config(
+            _config_tree_for(proj.get("seeds", {}) or {}, name, rel_parts),
+            seed_kwargs,
+        )
+        seed_kwargs.pop("kind", None)  # seeds are always seeds
+        # dbt routes seed schemas/aliases through the same
+        # generate_* macros as models (snapshots do NOT:
+        # their target_schema is documented as literal).
+        _route(seed_kwargs, stem)
+        models.append(
+            ModelSpec(
+                name=stem,
+                kind="seed",
+                sql=seed_path,
+                description=meta.get("description", ""),
+                **seed_kwargs,
+            )
+        )
 
     # dbt fails compilation when two models resolve to the same physical
     # relation (aliases / generate_* overrides collapsing names would
@@ -1303,7 +1240,7 @@ def load_project(
             t_cfg,
             macros,
             origin=f"test {t_name} on {model_name}",
-            var_fn=_load_var_fn,
+            var_fn=load_var,
             env=macro_env,
         )
         suffix = f"_{col_name}" if col_name else ""
@@ -1328,50 +1265,18 @@ def load_project(
     # dbt singular tests: .sql files under test-paths whose rows ARE
     # the violations (the reference configures test-paths but ships the
     # directory empty — reference: dbt_project.yml:17, tests/.gitkeep).
-    for tp_dir in test_paths:
-        root_t = os.path.join(project_dir, tp_dir)
-        if not os.path.isdir(root_t):
-            continue
-        for dirpath, _dirs, files in sorted(os.walk(root_t)):
-            for f in sorted(files):
-                if f.endswith(".sql"):
-                    t_path = os.path.join(dirpath, f)
-                    with open(t_path) as fh:
-                        tests.append(
-                            SingularTest(
-                                name=os.path.splitext(f)[0],
-                                sql=expand_macros(
-                                    fh.read().strip(),
-                                    macros,
-                                    origin=t_path,
-                                    var_fn=_load_var_fn,
-                                    env=macro_env,
-                                ),
-                            )
-                        )
+    for _root, t_path in _project_files(project_dir, test_paths, ".sql"):
+        with open(t_path) as fh:
+            t_name = os.path.splitext(os.path.basename(t_path))[0]
+            tests.append(SingularTest(t_name, _expand(fh.read().strip(), t_path)))
 
     analyses: dict[str, str] = {}
-    for ap_dir in analysis_paths:
-        root_a = os.path.join(project_dir, ap_dir)
-        if not os.path.isdir(root_a):
-            continue
-        for dirpath, _dirs, files in sorted(os.walk(root_a)):
-            for f in sorted(files):
-                if f.endswith(".sql"):
-                    a_stem = os.path.splitext(f)[0]
-                    if a_stem in analyses:
-                        raise EngineError(
-                            f"duplicate analysis name {a_stem!r}"
-                        )
-                    a_path = os.path.join(dirpath, f)
-                    with open(a_path) as fh:
-                        analyses[a_stem] = expand_macros(
-                            fh.read().strip(),
-                            macros,
-                            origin=a_path,
-                            var_fn=_load_var_fn,
-                            env=macro_env,
-                        )
+    for _root, a_path in _project_files(project_dir, analysis_paths, ".sql"):
+        a_stem = os.path.splitext(os.path.basename(a_path))[0]
+        if a_stem in analyses:
+            raise EngineError(f"duplicate analysis name {a_stem!r}")
+        with open(a_path) as fh:
+            analyses[a_stem] = _expand(fh.read().strip(), a_path)
 
     selectors: dict[str, list[str]] = {}
     sel_path = os.path.join(project_dir, "selectors.yml")

@@ -775,18 +775,9 @@ class TestDbtUtilsIntrospective:
         )
 
     def _render(self, s, env):
-        # mirror Engine._render_sql: CF path for tagged bodies, the
-        # span-only substitution pass for tag-free ones
-        from dbt_bigquery_udf_spark.macros import (
-            _cf_subst_loop_vars,
-            render_control_flow,
-        )
-
-        if "{%" in s:
-            return render_control_flow(
-                s, lambda n, d=None: d, "t", extra_env=env
-            )
-        return _cf_subst_loop_vars(s, env, "t", lambda n, d=None: d)
+        # mirror Engine.render: one evaluator for tagged and tag-free
+        # bodies alike
+        return render_control_flow(s, lambda n, d=None: d, "t", extra_env=env)
 
     def test_star_round_trip(self):
         env = self._env({"db.t": self._FakeDF([("id", "int"), ("a", "string"), ("b", "double")])})

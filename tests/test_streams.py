@@ -147,25 +147,48 @@ def test_foreachbatch_sink_reuses_one_directory(spark, sf_small):
     assert sinks() == first
 
 
-def test_stage_source_dir_removes_stages_of_deleted_corpora(
-    staging, tmp_path, sf_small
-):
+def _corpus(root, name: str, table: str) -> str:
+    """A one-table corpus directory ``root/name`` holding ``table``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    def corpus(name):
-        d = tmp_path / name
-        d.mkdir()
-        pq.write_table(pa.table({"x": [1]}), d / "events.parquet")
-        return str(d)
+    d = root / name
+    d.mkdir()
+    pq.write_table(pa.table({"x": [1]}), d / f"{table}.parquet")
+    return str(d)
 
-    gone = corpus("gone")
+
+def test_stage_source_dir_removes_stages_of_deleted_corpora(
+    staging, tmp_path, sf_small
+):
+    gone = _corpus(tmp_path, "gone", "events")
     first = streams.stage_source_dir(gone, "events")
     live = streams.stage_source_dir(sf_small, "events")
     shutil.rmtree(gone)
-    streams.stage_source_dir(corpus("next"), "events")
+    streams.stage_source_dir(_corpus(tmp_path, "next", "events"), "events")
     assert not os.path.exists(first)
     assert os.path.exists(os.path.join(live, "events.parquet"))
+
+
+def test_scratch_dir_removes_batches_of_deleted_corpora(
+    spark, staging, tmp_path, sf_small
+):
+    """Staged-batch and sink directories hold real files, not symlinks:
+    each records its corpus, and staging the same kind again removes
+    the ones whose corpus is gone — never a live corpus' directory, nor
+    one of a kind that merely starts with this kind's name."""
+    src = "documents.parquet"
+    gone = _corpus(tmp_path, "gone", "documents")
+    first, _ = streams.stage_batches(spark, "t_arr", gone, src, _frames(spark, 1))
+    longer = streams.scratch_dir("t_arr_raw", gone, (src,))
+    os.makedirs(longer)
+    live, _ = streams.stage_batches(spark, "t_arr", sf_small, src, _frames(spark, 1))
+    shutil.rmtree(gone)
+    nxt = _corpus(tmp_path, "next", "documents")
+    streams.stage_batches(spark, "t_arr", nxt, src, _frames(spark, 1))
+    assert not os.path.exists(first)
+    assert os.path.exists(os.path.join(live, "b0.parquet"))
+    assert os.path.isdir(longer)
 
 
 def test_memory_sink_runs_leave_no_view(spark, sf_small):
