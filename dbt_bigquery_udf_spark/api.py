@@ -41,10 +41,12 @@ def bootstrap(
     """Prepare a session: engine confs, source registration, model registry.
 
     Sources are registered as temp views and, with ``catalog_sources``,
-    as ``src.*`` external tables. Both share one schema inference per
-    source, cached on the session (see :mod:`.sources.registry`): the
-    first call in a session runs one Spark job per source file, all
-    concurrently, and a repeat call runs none unless a file changed.
+    as ``src.*`` external tables. Both share one schema per source, read
+    from the parquet footer on the driver and cached on the session (see
+    :mod:`.sources.registry`), so no call runs a Spark job: the first
+    call in a session reads one footer per source file, and a repeat
+    reads none unless a file changed. The ``src.*`` DDL runs only for a
+    table that is missing or whose location or schema changed.
     """
     apply_engine_confs(spark)
     register_sources(spark, sf_dir)

@@ -2915,8 +2915,9 @@ def sim_ivf_drift_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["cid"]), [float(x) for x in r["cv"]])
         for r in spark.table(f"{db}.centroids").collect()
     ]
-    e = _kmeans_wide(_emb(spark, sf_dir).select("vec_id", "emb")).persist()
-    try:
+    with _refcounted_persist(
+        _kmeans_wide(_emb(spark, sf_dir).select("vec_id", "emb"))
+    ) as e:
         # stored assignment of the CURRENT corpus against frozen
         # centroids — identical math to the assign table's union (base
         # serve-assign + upsert-assign), recomputed here so the drift
@@ -2965,8 +2966,6 @@ def sim_ivf_drift_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("retrain"),
             )
         )
-    finally:
-        e.unpersist()
 
 
 # -- IVF retrain execution: versioned rebuild-and-swap -----------------------
@@ -3086,8 +3085,9 @@ def retrain_ivf_index(
     r1 = _rt_ensure_v1(spark, sf_dir, db)
 
     def _build_v2() -> None:
-        e = _kmeans_wide(_emb(spark, sf_dir).select("vec_id", "emb")).persist()
-        try:
+        with _refcounted_persist(
+            _kmeans_wide(_emb(spark, sf_dir).select("vec_id", "emb"))
+        ) as e:
             sa = spark.table(f"{db}.assign_v1")
             # ONE Lloyd refresh over the current corpus, grouped by the
             # stored v1 assignment — k x 64 rounded means, the
@@ -3113,8 +3113,6 @@ def retrain_ivf_index(
             _assign_enc(spark, e, cents1).select(
                 "vec_id", (F.col("enc") % 100000).cast("int").alias("cid")
             ).write.format("parquet").saveAsTable(f"{db}.assign_v2")
-        finally:
-            e.unpersist()
 
     # v2 build + pointer bump under the cross-process maintenance lease:
     # two concurrent retrainers in separate JVMs would otherwise race

@@ -55,27 +55,6 @@ def avro_available(spark: SparkSession) -> bool:
             _avro_probe[key] = "Failed to find data source" not in str(e)
     return _avro_probe[key]
 
-# CSV cannot carry nested types; JSONL/ORC/Parquet can. The round-trip
-# tests skip array/struct columns for CSV via this map.
-_CSV_SAFE_TYPES = (
-    T.StringType,
-    T.LongType,
-    T.IntegerType,
-    T.DoubleType,
-    T.FloatType,
-    T.BooleanType,
-    T.TimestampNTZType,
-    T.TimestampType,
-    T.DateType,
-)
-
-
-def csv_safe_schema(schema: T.StructType) -> T.StructType:
-    """Project a schema down to the columns CSV can faithfully carry."""
-    return T.StructType(
-        [f for f in schema.fields if isinstance(f.dataType, _CSV_SAFE_TYPES)]
-    )
-
 
 def read_any(
     spark: SparkSession,

@@ -10,21 +10,24 @@ Here a "source" is a parquet table under a scale-factor directory
 
 - as a session temp view named after the table, so it resolves
   regardless of the current database (TVF calls switch databases; see
-  catalog.py). The view is the inferred parquet frame itself: a named
-  logical plan over the file scan, so Catalyst still pushes filters and
-  column pruning into it;
+  catalog.py). The view is the parquet frame itself: a named logical
+  plan over the file scan, so Catalyst still pushes filters and column
+  pruning into it;
 - as a persistent external table ``src.<table>`` (for ``events``:
   ``src.events_raw`` plus the view ``src.events``), because persistent
   SQL functions may not reference temp views.
 
-Both registrations share ONE schema inference per source and session.
-Inference is the only step that runs Spark jobs (one single-task job
-per file, reading its parquet footer); the catalog tables are created
-with the inferred schema passed explicitly, which runs none. The
-inferences a call still needs run concurrently. Their results are
-cached on the session and keyed on each data file's (path, size,
-mtime_ns) through :func:`corpus_fingerprint`, so a repeat registration
-runs no job at all and a file regenerated in place is inferred again.
+Both registrations share ONE schema read per source and session, and
+neither runs a Spark job. The schema comes from the parquet footer,
+read on the driver and converted by Spark's own parquet schema
+converter, which is what Spark's inference job runs in its one task;
+the view reads the file with that schema given, so Spark does not infer
+it again. The catalog tables are created with the same schema, and only
+when a table is missing or its location or schema differs, so a warm
+re-registration runs no DDL. The schemas are cached on the session and
+keyed on each data file's (path, size, mtime_ns) through
+:func:`corpus_fingerprint`, so a repeat registration reads no footer
+and a file regenerated in place is read again.
 
 Scale note: at 100 TB these would be external tables over partitioned
 object-store prefixes; registration stays O(metadata). Nothing here
@@ -33,22 +36,23 @@ collects data.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import threading
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-from pyspark.util import inheritable_thread_target
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 from ..catalog import ensure_database
 
 __all__ = [
     "SOURCE_TABLES",
     "corpus_fingerprint",
+    "listed_files",
     "register_sources",
     "register_sources_catalog",
     "read_source",
@@ -70,52 +74,65 @@ SOURCE_TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Session attribute holding the inferred sources: realpath -> _Source.
+# Session attribute holding the read sources: realpath -> _Source.
 # It lives on the session object, so it dies with the session; a
 # module-level map would keep every stopped session alive through the
 # frames it holds.
 _CACHE_ATTR = "_engine_source_cache"
 # Held from the cache check to the cache store, so concurrent callers
-# share one inference per source instead of each repeating it.
+# share one schema read per source instead of each repeating it.
 _infer_lock = threading.Lock()
 
 
 @dataclass(frozen=True)
 class _Source:
     path: str  # resolved (os.path.realpath)
-    fingerprint: str  # of the file(s) at inference: corpus_fingerprint
-    raw: DataFrame | None  # the parquet frame as inferred; None on the Arrow fallback
+    fingerprint: str  # of the file(s) at the schema read: corpus_fingerprint
+    raw: DataFrame | None  # the parquet frame as read; None on the Arrow fallback
     view: DataFrame  # what the temp view and read_source serve
 
 
 def corpus_fingerprint(sf_dir: str, files: Sequence[str]) -> str:
     """Hex fingerprint of a corpus' identity: its absolute path plus
-    (relative name, size, mtime_ns) of every parquet data file of the
-    named tables. Two directories with the same leaf name but different
-    paths — or the same path regenerated with new data — fingerprint
-    differently, so an index can only ever be adopted by the corpus it
-    was built from, and a source is inferred again once its files
-    change. O(#files) stat calls, no data reads."""
+    (relative name, size, mtime_ns) of every file Spark reads of the
+    named tables (:func:`listed_files`). Two directories with the same
+    leaf name but different paths — or the same path regenerated with
+    new data — fingerprint differently, so an index can only ever be
+    adopted by the corpus it was built from, and a source's schema is
+    read again once its files change. O(#files) stat calls, no data
+    reads."""
     h = hashlib.md5(os.path.abspath(sf_dir).encode())
     for name in files:
-        p = os.path.join(sf_dir, name)
-        data: list[str] = []
-        if os.path.isdir(p):
-            for root, _, fs in os.walk(p):
-                data += [
-                    os.path.join(root, f)
-                    for f in fs
-                    if f.endswith(".parquet")
-                ]
-        elif os.path.exists(p):
-            data = [p]
-        for q in sorted(data):
+        for q in listed_files(os.path.join(sf_dir, name)):
             st = os.stat(q)
             h.update(
                 f"{os.path.relpath(q, sf_dir)}:{st.st_size}:"
                 f"{st.st_mtime_ns}".encode()
             )
     return h.hexdigest()[:10]
+
+
+def _hidden(name: str) -> bool:
+    """Whether Spark's file listing skips ``name`` (its
+    ``shouldFilterOutPathName``): ``_``/``.`` names other than partition
+    directories and the parquet summary files, and copies in flight."""
+    return not name.startswith(("_common_metadata", "_metadata")) and (
+        name[:1] == "." or (name[:1] == "_" and "=" not in name) or name.endswith("._COPYING_")
+    )
+
+
+def listed_files(path: str) -> list[str]:
+    """The files Spark lists for a local ``path``, sorted: ``path``
+    itself if it is a file, else every file under it with no name that
+    Spark's listing skips on the way (see :func:`_hidden`); none if it
+    is missing."""
+    if not os.path.isdir(path):
+        return [path] if os.path.exists(path) else []
+    out: list[str] = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out += [os.path.join(root, f) for f in names if not _hidden(f)]
+    return sorted(out)
 
 
 def _events_ts_sql(raw_dtypes: dict[str, str]) -> str:
@@ -132,12 +149,39 @@ def _events_ts_sql(raw_dtypes: dict[str, str]) -> str:
     return "CAST(ts AS TIMESTAMP_NTZ)"
 
 
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The data schema Spark's parquet inference gives ``path``, with no
+    Spark job. Spark's non-merging rule picks one file (the first
+    summary file, ``_common_metadata`` before ``_metadata``, else the
+    first data file); its footer is read on the driver and converted by
+    ``ParquetFileFormat.readSchema``, which honours the session's
+    parquet confs (nanosAsLong, inferTimestampNTZ, INT96,
+    binaryAsString) and Spark's own row metadata as the inference job
+    does. Partition columns are not in it: a read with this schema
+    given discovers and appends them, as inference does."""
+    rank = {"_common_metadata": 0, "_metadata": 1}
+    file = min(listed_files(path), key=lambda f: rank.get(os.path.basename(f), 2), default=None)
+    if file is None:  # missing or empty: Spark's own AnalysisException
+        return spark.read.parquet(path).schema
+    jvm, session = spark._jvm, spark._jsparkSession
+    conf = session.sessionState().newHadoopConf()
+    status = jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf).getFileStatus(
+        jvm.org.apache.hadoop.fs.Path(file)
+    )
+    fmt = getattr(
+        getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"),
+        "MODULE$",
+    )
+    footers = fmt.readParquetFootersInParallel(conf, jvm.PythonUtils.toSeq([status]), False)
+    return _parse_datatype_json_string(fmt.readSchema(footers, session).get().json())
+
+
 def _infer(spark: SparkSession, path: str, name: str) -> tuple[DataFrame | None, DataFrame]:
-    """Infer one source's schema (one Spark job); returns ``(raw, view)``."""
+    """Read one source's schema from its footer; returns ``(raw, view)``."""
     from pyspark.sql import functions as F
 
     try:
-        raw = spark.read.parquet(path)
+        raw = spark.read.schema(_footer_schema(spark, path)).parquet(path)
     except Exception:
         if name != "events" or not os.path.exists(path):
             raise
@@ -157,37 +201,14 @@ def _infer(spark: SparkSession, path: str, name: str) -> tuple[DataFrame | None,
     return raw, raw
 
 
-def _infer_all(
-    spark: SparkSession, paths: dict[str, str]
-) -> dict[str, tuple[DataFrame | None, DataFrame]]:
-    """Infer every named source at once, one pool thread each. The
-    threads carry the caller's job group, tags and local properties, so
-    their jobs are attributed to the caller."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-
-    def infer(n: str) -> tuple[DataFrame | None, DataFrame]:
-        return _infer(spark, paths[n], n)
-
-    if len(paths) == 1:
-        return {n: infer(n) for n in paths}
-    wrap = inheritable_thread_target(spark)
-    if wrap is not spark:  # returned as is when pinned-thread mode is off
-        infer = wrap(infer)
-    with ThreadPoolExecutor(max_workers=len(paths)) as pool:
-        return dict(zip(paths, pool.map(infer, paths)))
-
-
 def _sources(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...]
 ) -> dict[str, _Source]:
-    """The inferred sources for ``tables``, inferring only those this
-    session has not seen at their current (path, size, mtime_ns). A
-    missing file raises here (an explicit-schema CREATE over it would
-    succeed silently)."""
-    # resolved, so a source symlinked into several sf dirs is inferred once
+    """The sources for ``tables``, reading the footer of only those this
+    session has not seen at their current (path, size, mtime_ns), one
+    after another on the calling thread. A missing file raises here (an
+    explicit-schema CREATE over it would succeed silently)."""
+    # resolved, so a source symlinked into several sf dirs is read once
     paths = {n: os.path.realpath(os.path.join(sf_dir, f"{n}.parquet")) for n in tables}
     with _infer_lock:
         cache: dict[str, _Source] = vars(spark).setdefault(_CACHE_ATTR, {})
@@ -195,14 +216,16 @@ def _sources(
             n: corpus_fingerprint(os.path.dirname(p), [os.path.basename(p)])
             for n, p in paths.items()
         }
-        stale = {
-            n: p
+        stale = [
+            n
             for n, p in paths.items()
             if (hit := cache.get(p)) is None or hit.fingerprint != fps[n]
-        }
+        ]
         if stale:
-            for n, (raw, view) in _infer_all(spark, stale).items():
-                cache[paths[n]] = _Source(paths[n], fps[n], raw, view)
+            with contextlib.suppress(Exception):  # a foreign session may refuse it
+                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        for n in stale:
+            cache[paths[n]] = _Source(paths[n], fps[n], *_infer(spark, paths[n], n))
         return {n: cache[paths[n]] for n in tables}
 
 
@@ -211,9 +234,9 @@ def read_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def source_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
-    """The schema of ``name``'s parquet file as this session inferred it
+    """The schema of ``name``'s parquet file as this session read it
     (raw, before the temp view's ``ts`` conversion), so a stream over the
-    same file reads it without another footer job."""
+    same file reads it without reading the footer again."""
     src = _sources(spark, sf_dir, (name,))[name]
     return (src.view if src.raw is None else src.raw).schema
 
@@ -235,6 +258,15 @@ def register_sources(
     return out
 
 
+def _catalog_entry(spark: SparkSession, table: str):
+    """``table``'s catalog entry (the JVM ``CatalogTable``), or None."""
+    state = spark._jsparkSession.sessionState()
+    try:
+        return state.catalog().getTableMetadata(state.sqlParser().parseTableIdentifier(table))
+    except AnalysisException:
+        return None
+
+
 def register_sources_catalog(
     spark: SparkSession,
     sf_dir: str = DEFAULT_SF_DIR,
@@ -248,13 +280,17 @@ def register_sources_catalog(
     so model-facing sources are external parquet tables — zero-copy DDL
     over the files, exactly how the reference treats its source as an
     externally-managed BigQuery table
-    (reference: models/udf/source.yml:4-9). Each table is created with
-    the schema the temp view was inferred with, so this runs no Spark
-    job when :func:`register_sources` already ran in the session.
+    (reference: models/udf/source.yml:4-9). Each table's catalog entry
+    is read once and compared with the source: a table that is missing,
+    or whose location or schema differs, is dropped (if present) and
+    created with the footer schema the temp view reads with; a table
+    that matches is left alone. No Spark job runs, and a warm
+    re-registration runs no DDL.
 
     ``events`` needs a nanosecond conversion (see :func:`_events_ts_sql`),
     expressed as a persistent view over the raw external table so the
-    transformation stays declarative and pushdown-friendly.
+    transformation stays declarative and pushdown-friendly; the view is
+    replaced only when its SQL text differs.
 
     Idempotent; re-registering against a different ``sf_dir`` repoints
     every table. Scale note: at 100 TB these CREATEs point at partitioned
@@ -263,18 +299,31 @@ def register_sources_catalog(
     ensure_database(spark, database)
     for name, src in _sources(spark, sf_dir, tables).items():
         table = f"{database}.{'events_raw' if name == 'events' else name}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        if src.raw is None:
-            # Arrow fallback: no Spark-readable schema to pass; the
-            # CREATE infers it (and fails where the read failed)
-            spark.sql(f"CREATE TABLE {table} USING parquet LOCATION '{src.path}'")
-            raw_schema = spark.table(table).schema
-        else:
-            raw_schema = src.raw.schema
-            spark.catalog.createTable(table, path=src.path, source="parquet", schema=raw_schema)
+        entry = _catalog_entry(spark, table)
+        if (
+            src.raw is None  # Arrow fallback: no schema to compare
+            or entry is None
+            or entry.location().getPath() != src.path
+            or _parse_datatype_json_string(entry.schema().json()) != src.raw.schema
+        ):
+            if entry is not None:
+                spark.sql(f"DROP TABLE IF EXISTS {table}")
+            # with no schema (the Arrow fallback) the CREATE infers it,
+            # and fails where the read failed
+            spark.catalog.createTable(
+                table,
+                path=src.path,
+                source="parquet",
+                schema=None if src.raw is None else src.raw.schema,
+            )
         if name == "events":
+            raw_schema = spark.table(table).schema if src.raw is None else src.raw.schema
             ts_sql = _events_ts_sql({f.name: f.dataType.simpleString() for f in raw_schema})
             cols = ", ".join(
                 f"{ts_sql} AS ts" if f.name == "ts" else f"`{f.name}`" for f in raw_schema
             )
-            spark.sql(f"CREATE OR REPLACE VIEW {database}.events AS SELECT {cols} FROM {table}")
+            query = f"SELECT {cols} FROM {table}"
+            if (view := _catalog_entry(spark, f"{database}.events")) is None or (
+                view.viewText().getOrElse(None) != query
+            ):
+                spark.sql(f"CREATE OR REPLACE VIEW {database}.events AS {query}")

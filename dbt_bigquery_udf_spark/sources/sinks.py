@@ -31,6 +31,7 @@ import shutil
 from pyspark.sql import DataFrame
 
 from ..operators.index_store import commit_dir, local_dir, mark_complete, recover_dir
+from .registry import listed_files
 
 __all__ = [
     "write_partitioned",
@@ -170,18 +171,15 @@ def _data_file_set(spark, path: str) -> frozenset[tuple[str, int]]:
     """The location's data files as {(path under it, bytes)}, from one
     local directory walk (empty when it is missing): the size statistics
     and the change-detection snapshot compact_files compares before its
-    commit. Names starting with ``_`` or ``.`` (markers, checksums, a
-    writer's ``_temporary``) are skipped, as Spark's file listing skips
-    them. ``path`` must be local (:func:`index_store.local_dir`)."""
+    commit. The files are those Spark's listing reads
+    (:func:`registry.listed_files`), so markers, checksums and a
+    writer's ``_temporary`` are skipped. ``path`` must be local
+    (:func:`index_store.local_dir`)."""
     root = local_dir(path)
-    out = set()
-    for d, dirs, files in os.walk(root):
-        dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-        for f in files:
-            if not f.startswith(("_", ".")):
-                full = os.path.join(d, f)
-                out.add((os.path.relpath(full, root), os.path.getsize(full)))
-    return frozenset(out)
+    return frozenset(
+        (os.path.relpath(f, root), os.path.getsize(f))
+        for f in (listed_files(root) if os.path.isdir(root) else [])
+    )
 
 
 def _list_data_files(spark, path: str) -> tuple[int, int]:

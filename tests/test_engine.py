@@ -1427,6 +1427,35 @@ def test_ivf_retrain_lifecycle(spark, sf_small):
     spark.sql(f"DROP DATABASE {db} CASCADE")
 
 
+def test_retrain_keeps_a_held_kmeans_cache(spark, sf_small):
+    """The retrain's v2 build persists the same ``_kmeans_wide`` plan as
+    ``_train_centroids`` and ``emb_kmeans_train``, and Spark's
+    CacheManager keeps one entry for both: releasing it must go through
+    the refcount, so a live holder's cache survives the retrain."""
+    import shutil
+
+    from pyspark import StorageLevel
+
+    from dbt_bigquery_udf_spark.operators import index_store
+    from dbt_bigquery_udf_spark.operators import similarity as S
+
+    db = S._rt_db(sf_small) + "_held_cache"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    index_store.invalidate_db_location(db)
+    spark.sql(f"CREATE DATABASE {db}")
+    shutil.rmtree(index_store.db_dir(spark, db), ignore_errors=True)
+    spark.sql(f"DROP DATABASE {db} CASCADE")
+
+    plan = S._kmeans_wide(S._emb(spark, sf_small).select("vec_id", "emb"))
+    try:
+        with S._refcounted_persist(plan) as e:
+            assert S.retrain_ivf_index(spark, sf_small, db=db)["v2"] == "built"
+            assert e.storageLevel != StorageLevel.NONE
+        assert plan.storageLevel == StorageLevel.NONE  # the last holder released it
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
 def test_ivf_version_gc_epoch_cycle(spark, sf_small):
     """gc_ivf_versions completes the retrain cycle: v2 is promoted into
     the v1 slot, the pointer resets, and the NEXT retrain epoch

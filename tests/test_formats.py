@@ -11,14 +11,30 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from pyspark.sql import types as T
 
-from dbt_bigquery_udf_spark.sources.formats import (
-    FORMATS,
-    csv_safe_schema,
-    read_any,
-    write_any,
-)
+from dbt_bigquery_udf_spark.sources.formats import FORMATS, read_any, write_any
 from dbt_bigquery_udf_spark.sources.registry import read_source
+
+# CSV cannot carry nested types; JSONL/ORC/Parquet can.
+_CSV_SAFE_TYPES = (
+    T.StringType,
+    T.LongType,
+    T.IntegerType,
+    T.DoubleType,
+    T.FloatType,
+    T.BooleanType,
+    T.TimestampNTZType,
+    T.TimestampType,
+    T.DateType,
+)
+
+
+def csv_safe_schema(schema: T.StructType) -> T.StructType:
+    """Project a schema down to the columns CSV can faithfully carry."""
+    return T.StructType(
+        [f for f in schema.fields if isinstance(f.dataType, _CSV_SAFE_TYPES)]
+    )
 
 
 def _sorted_rows(df, cols):

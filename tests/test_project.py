@@ -1100,8 +1100,8 @@ def test_target_context_env_routing(spark, sf_small, tmp_path):
     assert "'udf_dev'" in eng_dev.render(eng_dev.models["tgt_schema"])
 
 
-def test_target_unknown_attr_fails_loudly(spark, sf_small, tmp_path):
-    from dbt_bigquery_udf_spark.models.core import EngineError
+def test_target_unknown_attr_fails_loudly(spark, tmp_path):
+    from dbt_bigquery_udf_spark.models.core import Engine, EngineError
 
     root = str(tmp_path / "tgtbad")
     _write(root, "dbt_project.yml", "name: tgtbad\n")
@@ -1109,8 +1109,10 @@ def test_target_unknown_attr_fails_loudly(spark, sf_small, tmp_path):
            "{{ config(materialized='view', dialect='spark') }}\n"
            "SELECT '{{ target.nope }}' AS s\n")
     proj = load_project(root)
-    engine = prepared_engine(spark, sf_small)
-    engine.register(*proj.models, replace=True)
+    # its own engine: a model that cannot render must not stay registered
+    # in the shared prepared_engine, whose write_state renders every model
+    engine = Engine(spark)
+    engine.register(*proj.models)
     with pytest.raises(EngineError, match="target.nope"):
         engine.render(engine.models["bad"])
 
