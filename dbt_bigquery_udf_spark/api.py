@@ -46,7 +46,7 @@ def bootstrap(
     :mod:`.sources.registry`), so no call runs a Spark job: the first
     call in a session reads one footer per source file, and a repeat
     reads none unless a file changed. The ``src.*`` DDL runs only for a
-    table that is missing or whose location or schema changed.
+    table that is missing or whose files or schema changed.
     """
     apply_engine_confs(spark)
     register_sources(spark, sf_dir)

@@ -22,12 +22,14 @@ neither runs a Spark job. The schema comes from the parquet footer,
 read on the driver and converted by Spark's own parquet schema
 converter, which is what Spark's inference job runs in its one task;
 the view reads the file with that schema given, so Spark does not infer
-it again. The catalog tables are created with the same schema, and only
-when a table is missing or its location or schema differs, so a warm
-re-registration runs no DDL. The schemas are cached on the session and
-keyed on each data file's (path, size, mtime_ns) through
-:func:`corpus_fingerprint`, so a repeat registration reads no footer
-and a file regenerated in place is read again.
+it again. The catalog tables are created with the same schema and
+record the source files' fingerprint; one is dropped and created again
+only when it is missing or its fingerprint or schema differs, so a warm
+re-registration runs no DDL and a file rewritten in place gets a new
+table. The schemas are cached on the session and keyed on each data
+file's (path, size, mtime_ns) through :func:`corpus_fingerprint`, so a
+repeat registration reads no footer and a file regenerated in place is
+read again.
 
 Scale note: at 100 TB these would be external tables over partitioned
 object-store prefixes; registration stays O(metadata). Nothing here
@@ -41,7 +43,7 @@ import hashlib
 import os
 import threading
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -149,41 +151,55 @@ def _events_ts_sql(raw_dtypes: dict[str, str]) -> str:
     return "CAST(ts AS TIMESTAMP_NTZ)"
 
 
-def _footer_schema(spark: SparkSession, path: str) -> StructType:
-    """The data schema Spark's parquet inference gives ``path``, with no
-    Spark job. Spark's non-merging rule picks one file (the first
-    summary file, ``_common_metadata`` before ``_metadata``, else the
-    first data file); its footer is read on the driver and converted by
+def _schema_readers(spark: SparkSession, paths: list[str]) -> list[Callable[[], StructType]]:
+    """For each of ``paths``, a call that returns the data schema Spark's
+    parquet inference gives it, with no Spark job. Spark's non-merging
+    rule picks one file per path (the first summary file,
+    ``_common_metadata`` before ``_metadata``, else the first data
+    file); those footers are all read here, on the driver, in one call.
+    Each returned call converts its own footer with
     ``ParquetFileFormat.readSchema``, which honours the session's
     parquet confs (nanosAsLong, inferTimestampNTZ, INT96,
     binaryAsString) and Spark's own row metadata as the inference job
-    does. Partition columns are not in it: a read with this schema
-    given discovers and appends them, as inference does."""
+    does, so a file whose types the session refuses fails alone.
+    Partition columns are not in the schema: a read with it given
+    discovers and appends them, as inference does. A missing or empty
+    path raises Spark's own AnalysisException here."""
     rank = {"_common_metadata": 0, "_metadata": 1}
-    file = min(listed_files(path), key=lambda f: rank.get(os.path.basename(f), 2), default=None)
-    if file is None:  # missing or empty: Spark's own AnalysisException
-        return spark.read.parquet(path).schema
+    files = [
+        min(listed_files(p), key=lambda f: rank.get(os.path.basename(f), 2), default=None)
+        for p in paths
+    ]
+    if missing := [p for p, f in zip(paths, files) if f is None]:
+        spark.read.parquet(*missing)
     jvm, session = spark._jvm, spark._jsparkSession
-    conf = session.sessionState().newHadoopConf()
-    status = jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf).getFileStatus(
-        jvm.org.apache.hadoop.fs.Path(file)
-    )
+    conf, fs = session.sessionState().newHadoopConf(), jvm.org.apache.hadoop.fs
+    status = fs.FileSystem.getLocal(conf).getFileStatus
     fmt = getattr(
         getattr(jvm.org.apache.spark.sql.execution.datasources.parquet, "ParquetFileFormat$"),
         "MODULE$",
     )
-    footers = fmt.readParquetFootersInParallel(conf, jvm.PythonUtils.toSeq([status]), False)
-    return _parse_datatype_json_string(fmt.readSchema(footers, session).get().json())
+    footers = fmt.readParquetFootersInParallel(
+        conf, jvm.PythonUtils.toSeq([status(fs.Path(f)) for f in files]), False
+    )
+    return [
+        lambda i=i: _parse_datatype_json_string(
+            fmt.readSchema(footers.slice(i, i + 1), session).get().json()
+        )
+        for i in range(len(files))
+    ]
 
 
-def _infer(spark: SparkSession, path: str, name: str) -> tuple[DataFrame | None, DataFrame]:
-    """Read one source's schema from its footer; returns ``(raw, view)``."""
+def _infer(
+    spark: SparkSession, path: str, name: str, schema: Callable[[], StructType]
+) -> tuple[DataFrame | None, DataFrame]:
+    """One source's frames, given its schema reader; returns ``(raw, view)``."""
     from pyspark.sql import functions as F
 
     try:
-        raw = spark.read.schema(_footer_schema(spark, path)).parquet(path)
-    except Exception:
-        if name != "events" or not os.path.exists(path):
+        raw = spark.read.schema(schema()).parquet(path)
+    except AnalysisException as e:
+        if name != "events" or e.getCondition() != "PARQUET_TYPE_ILLEGAL":
             raise
         # Foreign session that rejects nanos parquet: rewrite via Arrow
         # (small-table path only; the conf path is the scale path).
@@ -205,8 +221,8 @@ def _sources(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...]
 ) -> dict[str, _Source]:
     """The sources for ``tables``, reading the footer of only those this
-    session has not seen at their current (path, size, mtime_ns), one
-    after another on the calling thread. A missing file raises here (an
+    session has not seen at their current (path, size, mtime_ns), all
+    in one driver-side call. A missing file raises here (an
     explicit-schema CREATE over it would succeed silently)."""
     # resolved, so a source symlinked into several sf dirs is read once
     paths = {n: os.path.realpath(os.path.join(sf_dir, f"{n}.parquet")) for n in tables}
@@ -224,8 +240,8 @@ def _sources(
         if stale:
             with contextlib.suppress(Exception):  # a foreign session may refuse it
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        for n in stale:
-            cache[paths[n]] = _Source(paths[n], fps[n], *_infer(spark, paths[n], n))
+            for n, schema in zip(stale, _schema_readers(spark, [paths[n] for n in stale])):
+                cache[paths[n]] = _Source(paths[n], fps[n], *_infer(spark, paths[n], n, schema))
         return {n: cache[paths[n]] for n in tables}
 
 
@@ -251,20 +267,21 @@ def register_sources(
     Idempotent (``createOrReplaceTempView``) so driver re-entry at a
     different scale factor just repoints the views.
     """
-    out: dict[str, DataFrame] = {}
-    for name, src in _sources(spark, sf_dir, tables).items():
-        src.view.createOrReplaceTempView(name)
-        out[name] = src.view
-    return out
+    views = {name: src.view for name, src in _sources(spark, sf_dir, tables).items()}
+    for name, view in views.items():
+        view.createOrReplaceTempView(name)
+    return views
 
 
-def _catalog_entry(spark: SparkSession, table: str):
-    """``table``'s catalog entry (the JVM ``CatalogTable``), or None."""
-    state = spark._jsparkSession.sessionState()
-    try:
-        return state.catalog().getTableMetadata(state.sqlParser().parseTableIdentifier(table))
-    except AnalysisException:
-        return None
+def _made_from(entry, src: _Source) -> bool:
+    """Whether catalog ``entry`` (a JVM ``CatalogTable``) was created over
+    ``src``'s files as they are now, with the schema this session reads
+    them with. The fingerprint it records covers the files' path, size
+    and mtime, so a repointed table and a file rewritten in place both
+    read as changed."""
+    return entry.storage().properties().get("source_fingerprint").contains(src.fingerprint) and (
+        _parse_datatype_json_string(entry.schema().json()) == src.raw.schema
+    )
 
 
 def register_sources_catalog(
@@ -280,50 +297,53 @@ def register_sources_catalog(
     so model-facing sources are external parquet tables — zero-copy DDL
     over the files, exactly how the reference treats its source as an
     externally-managed BigQuery table
-    (reference: models/udf/source.yml:4-9). Each table's catalog entry
-    is read once and compared with the source: a table that is missing,
-    or whose location or schema differs, is dropped (if present) and
-    created with the footer schema the temp view reads with; a table
-    that matches is left alone. No Spark job runs, and a warm
-    re-registration runs no DDL.
+    (reference: models/udf/source.yml:4-9). Each table is created with
+    the footer schema the temp view reads with and records the source
+    files' fingerprint (storage option ``source_fingerprint``). A table
+    that is missing, or whose fingerprint or schema differs from the
+    source's, is dropped (if present) and created again; one that
+    matches is left alone. No Spark job runs, and a warm re-registration
+    runs no DDL.
 
     ``events`` needs a nanosecond conversion (see :func:`_events_ts_sql`),
     expressed as a persistent view over the raw external table so the
     transformation stays declarative and pushdown-friendly; the view is
-    replaced only when its SQL text differs.
+    replaced whenever ``events_raw`` is created, and created when missing.
 
     Idempotent; re-registering against a different ``sf_dir`` repoints
     every table. Scale note: at 100 TB these CREATEs point at partitioned
     object-store prefixes — still O(metadata).
     """
     ensure_database(spark, database)
+    state = spark._jsparkSession.sessionState()
+    catalog, parse = state.catalog(), state.sqlParser().parseTableIdentifier
     for name, src in _sources(spark, sf_dir, tables).items():
         table = f"{database}.{'events_raw' if name == 'events' else name}"
-        entry = _catalog_entry(spark, table)
-        if (
-            src.raw is None  # Arrow fallback: no schema to compare
-            or entry is None
-            or entry.location().getPath() != src.path
-            or _parse_datatype_json_string(entry.schema().json()) != src.raw.schema
-        ):
-            if entry is not None:
+        ident = parse(table)
+        exists = catalog.tableExists(ident)
+        # the Arrow fallback has no schema to compare: always created
+        current = (
+            exists and src.raw is not None and _made_from(catalog.getTableMetadata(ident), src)
+        )
+        if current:
+            # another session may have created it again since this one
+            # resolved it: resolve it afresh on next use
+            catalog.invalidateCachedTable(ident)
+        else:
+            if exists:
                 spark.sql(f"DROP TABLE IF EXISTS {table}")
-            # with no schema (the Arrow fallback) the CREATE infers it,
-            # and fails where the read failed
-            spark.catalog.createTable(
-                table,
-                path=src.path,
-                source="parquet",
-                schema=None if src.raw is None else src.raw.schema,
+            # the footer schema as DDL (column comments kept, other field
+            # metadata not); with none (the Arrow fallback) the CREATE
+            # infers it, and fails where the read failed
+            columns = "" if src.raw is None else f"({src.raw.schema.toDDL()})"
+            spark.sql(
+                f"CREATE TABLE {table} {columns} USING parquet LOCATION '{src.path}' "
+                f"OPTIONS (source_fingerprint '{src.fingerprint}')"
             )
-        if name == "events":
+        if name == "events" and not (current and catalog.tableExists(parse(f"{database}.events"))):
             raw_schema = spark.table(table).schema if src.raw is None else src.raw.schema
             ts_sql = _events_ts_sql({f.name: f.dataType.simpleString() for f in raw_schema})
             cols = ", ".join(
                 f"{ts_sql} AS ts" if f.name == "ts" else f"`{f.name}`" for f in raw_schema
             )
-            query = f"SELECT {cols} FROM {table}"
-            if (view := _catalog_entry(spark, f"{database}.events")) is None or (
-                view.viewText().getOrElse(None) != query
-            ):
-                spark.sql(f"CREATE OR REPLACE VIEW {database}.events AS {query}")
+            spark.sql(f"CREATE OR REPLACE VIEW {database}.events AS SELECT {cols} FROM {table}")

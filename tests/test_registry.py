@@ -29,7 +29,6 @@ from dbt_bigquery_udf_spark import api
 from dbt_bigquery_udf_spark.sources import registry
 from dbt_bigquery_udf_spark.sources.registry import (
     SOURCE_TABLES,
-    _footer_schema,
     read_source,
     register_sources,
     register_sources_catalog,
@@ -67,6 +66,19 @@ def corpus(sf_small, tmp_path):
 
 def _rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
+
+
+def _footer_schema(s, path: str):
+    (read,) = registry._schema_readers(s, [path])
+    return read()
+
+
+def _rewrite(path: str, table: pa.Table, **kwargs) -> None:
+    """Write ``table`` over ``path`` with a distinct mtime even on a
+    coarse-clock filesystem."""
+    st = os.stat(path)
+    pq.write_table(table, path, **kwargs)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
 
 
 def test_bootstrap_infers_each_source_once_per_session(spark, sf_small):
@@ -143,9 +155,7 @@ def test_file_regenerated_in_place_is_inferred_again(session, corpus):
     register_sources(session, corpus)
     register_sources_catalog(session, corpus, database=DB)
     t = pq.read_table(path)
-    pq.write_table(t.append_column("r_extra", pa.array(range(t.num_rows))), path)
-    st = os.stat(path)  # a distinct mtime even on a coarse-clock filesystem
-    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    _rewrite(path, t.append_column("r_extra", pa.array(range(t.num_rows))))
     with job_ids(session) as jobs:
         register_sources(session, corpus)
         register_sources_catalog(session, corpus, database=DB)
@@ -181,13 +191,36 @@ def test_missing_source_raises_at_registration(session, corpus):
 def test_events_arrow_fallback_registers_both(session, corpus, monkeypatch):
     """A session whose parquet reader refuses the nanosecond column gets
     ``events`` through Arrow; its catalog table infers the schema at
-    CREATE, and the catalog view serves the same timestamps."""
-    def refuse_events(s, path):
-        if os.path.basename(path) == "events.parquet":
-            raise RuntimeError("reader refuses TIMESTAMP(NANOS)")
-        return _footer_schema(s, path)
+    CREATE, and the catalog view serves the same timestamps. Any other
+    error propagates."""
+    schema_readers = registry._schema_readers
 
-    monkeypatch.setattr(registry, "_footer_schema", refuse_events)
+    def events_read_by(reader):
+        def readers(s, paths):
+            return [
+                reader(s, read) if os.path.basename(p) == "events.parquet" else read
+                for p, read in zip(paths, schema_readers(s, paths))
+            ]
+        return readers
+
+    def failing(s, read):
+        def read_events():
+            raise RuntimeError("not the error the fallback is for")
+        return read_events
+
+    def refusing(s, read):
+        def read_events():  # Spark's own PARQUET_TYPE_ILLEGAL
+            s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+            try:
+                return read()
+            finally:
+                s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return read_events
+
+    monkeypatch.setattr(registry, "_schema_readers", events_read_by(failing))
+    with pytest.raises(RuntimeError):
+        register_sources(session, corpus, tables=("events",))
+    monkeypatch.setattr(registry, "_schema_readers", events_read_by(refusing))
     view = register_sources(session, corpus, tables=("events",))["events"]
     register_sources_catalog(session, corpus, database=DB, tables=("events",))
     assert dict(view.dtypes)["ts"] == "timestamp_ntz"
@@ -262,7 +295,7 @@ def _spark_frame(s):
     ).withMetadata("s", {"comment": "kept in Spark's row metadata"})
 
 
-def test_footer_schema_of_a_spark_written_file_and_directory(session, tmp_path):
+def test_footer_schema_of_a_spark_written_file_and_directory(session, tmp_path, ddl):
     out = str(tmp_path / "spark_written")
     _spark_frame(session).coalesce(1).write.parquet(out)
     assert os.path.exists(os.path.join(out, "_SUCCESS"))  # skipped, like the .crc files
@@ -270,6 +303,15 @@ def test_footer_schema_of_a_spark_written_file_and_directory(session, tmp_path):
     _assert_reads_as_inferred(session, part)
     _assert_reads_as_inferred(session, out)
     assert _footer_schema(session, out)["s"].metadata == {"comment": "kept in Spark's row metadata"}
+    # as a source: the column comment round-trips through the catalog
+    # table's DDL, so a repeat registration finds the table current
+    os.rename(out, tmp_path / "region.parquet")
+    for _ in range(2):
+        register_sources_catalog(session, str(tmp_path), database=DB, tables=("region",))
+    assert ddl == [f"CREATE {DB}.region"]
+    assert session.table(f"{DB}.region").schema["s"].metadata == {
+        "comment": "kept in Spark's row metadata"
+    }
 
 
 def test_footer_schema_of_a_directory_of_parts(session, tmp_path):
@@ -299,10 +341,9 @@ def test_footer_schema_of_a_hive_partitioned_directory(session, tmp_path):
 @pytest.fixture()
 def ddl(session, monkeypatch):
     """``"DROP <name>"``/``"CREATE <name>"`` for each table or view
-    statement ``session`` issues through ``sql`` or
-    ``catalog.createTable`` (which keeps a schema's field metadata)."""
+    statement ``session`` issues."""
     seen: list[str] = []
-    sql, create = session.sql, session.catalog.createTable
+    sql = session.sql
 
     def counted_sql(query, *args, **kwargs):
         m = re.match(r"\s*(DROP|CREATE)\b.*?\b(?:TABLE|VIEW)\s+(?:IF EXISTS\s+)?(\S+)", query)
@@ -310,12 +351,7 @@ def ddl(session, monkeypatch):
             seen.append(f"{m[1]} {m[2]}")
         return sql(query, *args, **kwargs)
 
-    def counted_create(table, *args, **kwargs):
-        seen.append(f"CREATE {table}")
-        return create(table, *args, **kwargs)
-
     monkeypatch.setattr(session, "sql", counted_sql)
-    monkeypatch.setattr(session.catalog, "createTable", counted_create)
     return seen
 
 
@@ -336,9 +372,7 @@ def test_catalog_ddl_runs_only_for_changed_tables(session, corpus, sf_medium, dd
 
     path = os.path.join(corpus, "region.parquet")
     t = pq.read_table(path)
-    pq.write_table(t.append_column("r_extra", pa.array(range(t.num_rows))), path)
-    st = os.stat(path)  # a distinct mtime even on a coarse-clock filesystem
-    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    _rewrite(path, t.append_column("r_extra", pa.array(range(t.num_rows))))
     register_sources_catalog(session, corpus, database=DB)
     # re-schema'd region, and orders pointed back at the corpus
     assert ddl == [
@@ -349,3 +383,35 @@ def test_catalog_ddl_runs_only_for_changed_tables(session, corpus, sf_medium, dd
     ddl.clear()
     register_sources_catalog(session, corpus, database=DB)
     assert ddl == [f"CREATE {DB}.events"]  # only the missing view
+    ddl.clear()
+
+    # a column type changes, the names do not: the view follows the table
+    path = os.path.join(corpus, "events.parquet")
+    t = pq.read_table(path)
+    _rewrite(path, t.set_column(t.schema.get_field_index("value"), "value",
+                                t.column("value").cast(pa.float32())))
+    register_sources_catalog(session, corpus, database=DB)
+    assert ddl == [f"DROP {DB}.events_raw", f"CREATE {DB}.events_raw", f"CREATE {DB}.events"]
+    assert dict(session.table(f"{DB}.events").dtypes)["value"] == "float"
+
+
+def test_file_rewritten_in_place_with_its_schema_is_read_again(session, corpus, ddl):
+    """Same schema, more rows: the table is created again, in this
+    session or in another one sharing the catalog, and this session's
+    next query lists the new file (one row group per copy, so a stale
+    file length would drop the last ones)."""
+    path = os.path.join(corpus, "orders.parquet")
+    register_sources(session, corpus)
+    register_sources_catalog(session, corpus, database=DB)
+    t = pq.read_table(path)
+    assert session.table(f"{DB}.orders").count() == t.num_rows
+    for copies in (2, 3):
+        _rewrite(path, pa.concat_tables([t] * copies), row_group_size=t.num_rows)
+        ddl.clear()
+        if copies == 3:  # created again there, so current here
+            register_sources_catalog(session.newSession(), corpus, database=DB)
+        register_sources(session, corpus)
+        register_sources_catalog(session, corpus, database=DB)
+        assert ddl == ([f"DROP {DB}.orders", f"CREATE {DB}.orders"] if copies == 2 else [])
+        assert session.table("orders").count() == copies * t.num_rows
+        assert session.table(f"{DB}.orders").count() == copies * t.num_rows
